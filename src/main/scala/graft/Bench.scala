@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
 
 /** Benchmark main — one JSON line with steady-state per-query seconds.
@@ -44,6 +48,123 @@ object Bench {
       }.sorted
     } catch { case _: Throwable => Nil }
 
+  // Per-run diagnostics for the suite-load spike class (single gates
+  // inflating 2-7x under full-suite load with zero code change,
+  // VERDICT r12 #2): every timed region also records the JVM's GC
+  // time spent INSIDE it (JMX collector deltas — local mode, so the
+  // one JVM holds driver and executors) and the pre-run used-heap.
+  // Appended to bench_diag.json so a spike in any run carries its
+  // own trigger evidence: spike with gc_sec ≈ the inflation = GC
+  // debt from preceding gates; spike with flat gc_sec = contention
+  // elsewhere (shuffle files, first-touch).
+  private def gcMillis: Long = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+  // Trigger discriminators beyond GC (the r12 diag run showed the
+  // spike class is a CONTIGUOUS slow machine window with flat GC —
+  // ~40 consecutive pass2 gates at 1.6-1.8x): process CPU seconds
+  // (flat cpu + inflated wall = the JVM was descheduled or stalled,
+  // not doing more work), JIT compilation seconds (deopt storms),
+  // /proc/self/io storage bytes (shuffle writeback), and the
+  // kernel's PSI stall totals for cpu/io (time runnable-but-waiting
+  // — CPU contention from outside the JVM shows here and nowhere
+  // else). All monotonic counters, delta'd per region; absent files
+  // (non-Linux) degrade to 0.
+  private def cpuNanos: Long = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean =>
+        os.getProcessCpuTime
+      case _ => 0L
+    }
+  private def jitMillis: Long = {
+    val c = java.lang.management.ManagementFactory.getCompilationMXBean
+    if (c != null && c.isCompilationTimeMonitoringSupported)
+      c.getTotalCompilationTime else 0L
+  }
+  // procfs reads via Files.readString (no stream handle to leak —
+  // a Source.fromFile here would leave ~6 open FDs per timed region)
+  private def procIoBytes: (Long, Long) =
+    try {
+      val m = java.nio.file.Files
+        .readString(java.nio.file.Paths.get("/proc/self/io"))
+        .linesIterator
+        .map(_.split(":\\s*")).collect { case Array(k, v) => k -> v.toLong }
+        .toMap
+      (m.getOrElse("read_bytes", 0L), m.getOrElse("write_bytes", 0L))
+    } catch { case _: Throwable => (0L, 0L) }
+  private def psiMicros(kind: String): Long =
+    try {
+      java.nio.file.Files
+        .readString(java.nio.file.Paths.get(s"/proc/pressure/$kind"))
+        .linesIterator
+        .collectFirst { case l if l.startsWith("some") =>
+          l.split("total=")(1).trim.toLong }
+        .getOrElse(0L)
+    } catch { case _: Throwable => 0L }
+
+  /** Times gates, one region per call, and keeps one diagnostic JSON line
+    * per region (see the counters above). A gate that throws is a failed
+    * gate, not a fast one: its region's line carries `"ok":false` and the
+    * error, the gate joins [[failed]], and [[best]] leaves it out of
+    * every total. */
+  private[graft] final class GateTimer(spark: SparkSession, sfDir: String,
+      gates: Map[String, (SparkSession, String) => DataFrame],
+      gcBarrier: Boolean) {
+    val diag = ArrayBuffer.empty[String]
+    val failed = mutable.LinkedHashSet.empty[String]
+    private val readings = ArrayBuffer.empty[(String, String, Double)]
+
+    /** Builds gate `name` and counts its rows; the wall seconds, or None
+      * when the gate threw. */
+    def run(name: String, phase: String): Option[Double] = {
+      val rt = Runtime.getRuntime
+      if (gcBarrier &&
+          rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
+      val heapGb = (rt.totalMemory - rt.freeMemory) / 1e9
+      val gc0 = gcMillis; val cpu0 = cpuNanos; val jit0 = jitMillis
+      val (rd0, wr0) = procIoBytes
+      val psiCpu0 = psiMicros("cpu"); val psiIo0 = psiMicros("io")
+      val t0 = System.nanoTime()
+      val error =
+        try { gates(name)(spark, sfDir).count(); None }
+        catch { case NonFatal(e) => Some(e) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      val (rd1, wr1) = procIoBytes
+      val outcome = error.fold(""""ok":true""") { e =>
+        s""""ok":false,"error":${Json.writeValueAsString(e.toString)}"""
+      }
+      diag += (s"""{"q":"$name","phase":"$phase",$outcome,"sec":${fin(sec)},""" +
+        s""""gc_sec":${fin((gcMillis - gc0) / 1e3)},"heap_gb":${fin(heapGb)},""" +
+        s""""cpu_sec":${fin((cpuNanos - cpu0) / 1e9)},""" +
+        s""""jit_sec":${fin((jitMillis - jit0) / 1e3)},""" +
+        s""""rd_mb":${fin((rd1 - rd0) / 1e6)},"wr_mb":${fin((wr1 - wr0) / 1e6)},""" +
+        s""""psi_cpu_sec":${fin((psiMicros("cpu") - psiCpu0) / 1e6)},""" +
+        s""""psi_io_sec":${fin((psiMicros("io") - psiIo0) / 1e6)}}""")
+      error match {
+        case Some(e) =>
+          failed += name
+          System.err.println(s"[bench] $name ($phase) threw: $e")
+          None
+        case None =>
+          readings += ((name, phase, sec))
+          Some(sec)
+      }
+    }
+
+    /** Each of `names` that never threw, with its fastest reading among
+      * `phases`. */
+    def best(names: Seq[String], phases: Set[String]): Seq[(String, Double)] =
+      names.filterNot(failed).flatMap { n =>
+        readings.collect { case (`n`, p, sec) if phases(p) => sec }
+          .minOption.map(n -> _)
+      }
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  // NaN/Infinity render unquoted and would make the JSONL line
+  // unparseable; counters can't legitimately produce them, so 0 it is
+  private def fin(v: Double): Double = if (java.lang.Double.isFinite(v)) v else 0.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -73,85 +194,8 @@ object Bench {
     // a quiet heap skips the tax, a garbage-loaded one still gets
     // cleared before the next timed region. The barrier is untimed.
     val gcBarrier = !sys.env.get("SPARK_GRAFT_BENCH_GC").contains("0")
-    // Per-run diagnostics for the suite-load spike class (single gates
-    // inflating 2-7x under full-suite load with zero code change,
-    // VERDICT r12 #2): every timed region also records the JVM's GC
-    // time spent INSIDE it (JMX collector deltas — local mode, so the
-    // one JVM holds driver and executors) and the pre-run used-heap.
-    // Appended to bench_diag.json so a spike in any run carries its
-    // own trigger evidence: spike with gc_sec ≈ the inflation = GC
-    // debt from preceding gates; spike with flat gc_sec = contention
-    // elsewhere (shuffle files, first-touch).
-    import scala.jdk.CollectionConverters._
-    def gcMillis: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    // Trigger discriminators beyond GC (the r12 diag run showed the
-    // spike class is a CONTIGUOUS slow machine window with flat GC —
-    // ~40 consecutive pass2 gates at 1.6-1.8x): process CPU seconds
-    // (flat cpu + inflated wall = the JVM was descheduled or stalled,
-    // not doing more work), JIT compilation seconds (deopt storms),
-    // /proc/self/io storage bytes (shuffle writeback), and the
-    // kernel's PSI stall totals for cpu/io (time runnable-but-waiting
-    // — CPU contention from outside the JVM shows here and nowhere
-    // else). All monotonic counters, delta'd per region; absent files
-    // (non-Linux) degrade to 0.
-    def cpuNanos: Long = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean =>
-          os.getProcessCpuTime
-        case _ => 0L
-      }
-    def jitMillis: Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else 0L
-    }
-    // procfs reads via Files.readString (no stream handle to leak —
-    // a Source.fromFile here would leave ~6 open FDs per timed region)
-    def procIoBytes: (Long, Long) =
-      try {
-        val m = java.nio.file.Files
-          .readString(java.nio.file.Paths.get("/proc/self/io"))
-          .linesIterator
-          .map(_.split(":\\s*")).collect { case Array(k, v) => k -> v.toLong }
-          .toMap
-        (m.getOrElse("read_bytes", 0L), m.getOrElse("write_bytes", 0L))
-      } catch { case _: Throwable => (0L, 0L) }
-    def psiMicros(kind: String): Long =
-      try {
-        java.nio.file.Files
-          .readString(java.nio.file.Paths.get(s"/proc/pressure/$kind"))
-          .linesIterator
-          .collectFirst { case l if l.startsWith("some") =>
-            l.split("total=")(1).trim.toLong }
-          .getOrElse(0L)
-      } catch { case _: Throwable => 0L }
-    val diag = scala.collection.mutable.ArrayBuffer.empty[String]
-    // NaN/Infinity render unquoted and would make the JSONL line
-    // unparseable; counters can't legitimately produce them, so 0 it is
-    def fin(v: Double): Double = if (java.lang.Double.isFinite(v)) v else 0.0
-    def run(name: String, phase: String = "pass"): Double = {
-      val rt = Runtime.getRuntime
-      if (gcBarrier &&
-          rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
-      val heapGb = (rt.totalMemory - rt.freeMemory) / 1e9
-      val gc0 = gcMillis; val cpu0 = cpuNanos; val jit0 = jitMillis
-      val (rd0, wr0) = procIoBytes
-      val psiCpu0 = psiMicros("cpu"); val psiIo0 = psiMicros("io")
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val (rd1, wr1) = procIoBytes
-      diag += (s"""{"q":"$name","phase":"$phase","sec":${fin(sec)},""" +
-        s""""gc_sec":${fin((gcMillis - gc0) / 1e3)},"heap_gb":${fin(heapGb)},""" +
-        s""""cpu_sec":${fin((cpuNanos - cpu0) / 1e9)},""" +
-        s""""jit_sec":${fin((jitMillis - jit0) / 1e3)},""" +
-        s""""rd_mb":${fin((rd1 - rd0) / 1e6)},"wr_mb":${fin((wr1 - wr0) / 1e6)},""" +
-        s""""psi_cpu_sec":${fin((psiMicros("cpu") - psiCpu0) / 1e6)},""" +
-        s""""psi_io_sec":${fin((psiMicros("io") - psiIo0) / 1e6)}}""")
-      sec
-    }
+    val timer = new GateTimer(spark, sfDir, SparkEntry.queries, gcBarrier)
+    import timer.run
     // Warm only the ONE-TIME session costs: Hadoop FS init + parquet
     // footer reads (one count per base table) and the codegen/JIT
     // machinery (three cheap representative queries). A full untimed
@@ -159,8 +203,8 @@ object Bench {
     // for no measurement benefit — per-query codegen lands in pass 1
     // and the min() below picks the steady-state pass anyway.
     val t0 = System.nanoTime()
-    // guarded like run(): a partial sf dir (older generation missing a
-    // table) must not abort the whole bench before anything is measured
+    // guarded: a partial sf dir (older generation missing a table) must
+    // not abort the whole bench before anything is measured
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings")
       .foreach(t =>
@@ -182,7 +226,7 @@ object Bench {
     // in-suite reading — cannot poison the window estimate. Skipped on
     // dev subset runs (the artifact isn't written there anyway).
     def probeMarker(): Option[Double] =
-      if (only.isEmpty) Some(run(Marker, "marker")) else None
+      if (only.isEmpty) run(Marker, "marker") else None
     // FROZEN machine-window probe (r15 "what's wrong" #3): the q03
     // marker's OWN plan kept getting faster across rounds (max_by
     // rule, fused-tokenizer substrate), so marker-normalized ratios
@@ -204,9 +248,10 @@ object Bench {
     // two measured passes, min per query — damps the considerable
     // run-to-run noise of a 32-thread local JVM (GC, JIT recompiles)
     val mStart = probeMarker(); val fStart = probeFrozen()
-    val pass1 = names.map(n => n -> run(n, "pass1")).toMap
+    names.foreach(run(_, "pass1"))
     val mMid = probeMarker(); val fMid = probeFrozen()
-    val results = names.map(n => n -> math.min(pass1(n), run(n, "pass2")))
+    names.foreach(run(_, "pass2"))
+    val results = timer.best(names, Set("pass1", "pass2"))
     val mEnd = probeMarker(); val fEnd = probeFrozen()
     // STANDALONE ADJUDICATION (VERDICT r12 #1): any gate whose min-of-2
     // reading breaches 2x vs its first-recorded baseline is re-run
@@ -226,8 +271,8 @@ object Bench {
     val flagged =
       if (only.nonEmpty) Nil
       else forced.getOrElse(flaggedVsBaselines(results))
-    val standalone =
-      flagged.map(n => n -> (1 to 3).map(_ => run(n, "standalone")).min)
+    flagged.foreach(n => (1 to 3).foreach(_ => run(n, "standalone")))
+    val standalone = timer.best(flagged, Set("standalone"))
     // NUMERIC-descending key order in the printed map: the driver's
     // BENCH_r{N}.json keeps only the tail (~2.5 KB ≈ last ~75 entries)
     // of this line, so descending gate NUMBER lands q01–q36 (the
@@ -276,12 +321,19 @@ object Bench {
       // region, used heap GiB at region start. Committed alongside a
       // spiky bench_full.json, this is the evidence that names the
       // trigger (SURVEY §8 "suite-load spike class").
-      val diagLines = diag.mkString("", "\n", "\n")
+      val diagLines = timer.diag.mkString("", "\n", "\n")
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(out.stripSuffix(".json") + "_diag.jsonl"),
         diagLines)
       catch { case _: Throwable => () }
     }
     spark.stop()
+    // A gate that threw is out of every total above; the run as a whole
+    // fails, after the pass, so the artifacts still show what ran.
+    if (timer.failed.nonEmpty) {
+      System.err.println(s"[bench] ${timer.failed.size} gate(s) threw: " +
+        timer.failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -47,45 +47,11 @@ case class FoundNode(
     findingSeq: Long = 0L,
     tz: Option[Tz] = None)
 
-/** Snapshot output records (Snapshot/Internal.hs:44-55,107-114). */
-case class SnapshotNode(
-    nodeId: String,
-    isOnBoundary: Boolean,
-    epochMs: Option[Long],
-    nodeAttrs: Option[Map[String, String]])
-
-case class SnapshotLink(
-    sourceNode: String,
-    destNode: String,
-    isDirected: Boolean,
-    epochMs: Long,
-    linkAttrs: Map[String, String])
-
 /** The snapshot graph as a pair of DataFrames (Snapshot/Internal.hs:34).
   * nodes: node_id, is_on_boundary, epoch_ms (nullable), node_attrs (nullable)
   * links: source_node, dest_node, is_directed, epoch_ms, link_attrs
   */
-case class SnapshotGraph(nodes: DataFrame, links: DataFrame) {
-  def nodesDs: Dataset[SnapshotNode] = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    nodes.select(
-      col("node_id").as("nodeId"),
-      col("is_on_boundary").as("isOnBoundary"),
-      col("epoch_ms").as("epochMs"),
-      col("node_attrs").as("nodeAttrs")).as[SnapshotNode]
-  }
-  def linksDs: Dataset[SnapshotLink] = {
-    val spark = links.sparkSession
-    import spark.implicits._
-    links.select(
-      col("source_node").as("sourceNode"),
-      col("dest_node").as("destNode"),
-      col("is_directed").as("isDirected"),
-      col("epoch_ms").as("epochMs"),
-      col("link_attrs").as("linkAttrs")).as[SnapshotLink]
-  }
-}
+case class SnapshotGraph(nodes: DataFrame, links: DataFrame)
 
 object Findings {
   /** Canonical findings DataFrame columns:

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed min-hop BFS over a directed edge list — the engine's
   * reachability restriction (the reference's Gremlin
@@ -21,6 +24,31 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
+  /** Largest distinct edge list [[reachable]] traverses on the driver. */
+  private[graft] val LocalEdges = 1 << 20
+
+  /** Largest policy-retained findings frame `GetSnapshot` fetches to the
+    * driver and weaves as local frames (its driver-sized lane); past it
+    * the distributed snapshot path runs. */
+  private[graft] val LocalFindings = 1 << 16
+
+  /** The id type the driver-local paths match node ids in, or None when
+    * the id columns' types do not unify: equal types pass through, mixed
+    * integrals unify to BIGINT, anything else must take the distributed
+    * joins, whose coercion is the behavior of record there. The local
+    * paths match ids by boxed equality, so int/long-mixed endpoints
+    * would silently match nothing where the joins coerce. Same rule as
+    * TemporalReach. */
+  private[graft] def localIdType(types: Seq[DataType]): Option[DataType] = {
+    def integral(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (types.distinct.size == 1) Some(types.head)
+    else if (types.forall(integral)) Some(LongType)
+    else None
+  }
+
   /** Returns (node_id, hops): minimum hop distance from any start node,
     * following src→dst edges. Starts not present in `edges` still appear
     * at hops 0.
@@ -37,34 +65,20 @@ object Bfs {
     * dominates on small graphs at every cluster scale. When the DISTINCT
     * edge frame fits in one task (`limit(n+1).collect()` probe, which
     * doubles as the edge fetch) and the start set does too, the whole
-    * BFS runs driver-locally in round-synchronous order — bit-identical
-    * output: same level-synchronous expansion, same maxHops cut, and
-    * min-hop labels are unique regardless of work order. Past
-    * `localEdgeThreshold` (or with it ≤ 0, or when the id columns'
-    * types don't unify for boxed-equality matching) the distributed
+    * BFS runs driver-locally in round-synchronous order ([[localHops]])
+    * — bit-identical output: same level-synchronous expansion, same
+    * maxHops cut, and min-hop labels are unique regardless of work
+    * order. Past `localEdgeThreshold` (or with it ≤ 0, or when the id
+    * columns' types don't unify, [[localIdType]]) the distributed
     * frontier loop runs as before. */
   def reachable(edges: DataFrame, starts: DataFrame,
       maxHops: Option[Int] = None,
       checkpointDir: Option[String] = None,
-      localEdgeThreshold: Int = 1 << 20): DataFrame = {
+      localEdgeThreshold: Int = LocalEdges): DataFrame = {
     import graft.util.Checkpoints.cut
-    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-    // Canonical id type BEFORE any collect: the local path matches node
-    // ids by boxed equality, so int/long-mixed endpoints would silently
-    // match nothing where the distributed joins coerce. Same rule as
-    // TemporalReach: equal types pass through, mixed integrals unify to
-    // long, anything else skips the local path (the distributed joins'
-    // coercion remains the behavior of record there).
-    def integral(t: DataType) = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val types = Seq(edges.schema(0).dataType, edges.schema(1).dataType,
-      starts.schema(0).dataType)
-    val idT: Option[DataType] =
-      if (types.distinct.size == 1) Some(types.head)
-      else if (types.forall(integral)) Some(LongType)
-      else None
+    // Canonical id type BEFORE any collect (see [[localIdType]]).
+    val idT = localIdType(Seq(edges.schema(0).dataType,
+      edges.schema(1).dataType, starts.schema(0).dataType))
     val e0raw = edges.toDF("src", "dst")
     val e0 = idT.fold(e0raw)(t => e0raw.select(
       col("src").cast(t).as("src"), col("dst").cast(t).as("dst")))
@@ -76,9 +90,15 @@ object Bfs {
       else e0.limit(localEdgeThreshold + 1).collect()
     if (probe != null && probe.length <= localEdgeThreshold) {
       val ss = startsC.distinct().limit(localEdgeThreshold + 1).collect()
-      if (ss.length <= localEdgeThreshold)
-        return localBfs(edges.sparkSession, idT.get, probe,
+      if (ss.length <= localEdgeThreshold) {
+        val hops = localHops(probe.iterator.map(r => (r.get(0), r.get(1))),
           ss.map(_.get(0)), maxHops)
+        val rows = new java.util.ArrayList[Row](hops.size)
+        hops.forEach((v, h) => rows.add(Row(v, h)): Unit)
+        return edges.sparkSession.createDataFrame(rows, StructType(Seq(
+          StructField("node_id", idT.get),
+          StructField("hops", IntegerType, nullable = false))))
+      }
     }
     val e = e0.persist()
     var visited = cut(startsC.distinct()
@@ -107,21 +127,24 @@ object Bfs {
   }
 
   /** Driver-local level-synchronous BFS — the small-graph path of
-    * [[reachable]]. Identical semantics: distinct starts at hops 0,
-    * each level's newly reached set = out-neighbors of the frontier
-    * minus everything already labeled, maxHops cuts after that many
-    * expansion rounds. */
-  private def localBfs(spark: org.apache.spark.sql.SparkSession,
-      idT: org.apache.spark.sql.types.DataType,
-      edgeRows: Array[org.apache.spark.sql.Row],
-      starts: Array[Any], maxHops: Option[Int]): DataFrame = {
-    val adj = new java.util.HashMap[Any, Array[Any]]()
-    edgeRows.groupBy(_.get(0)).foreach { case (s, rows) =>
-      adj.put(s, rows.map(_.get(1)))
+    * [[reachable]] and of `GetSnapshot`'s driver-sized lane. Identical
+    * semantics to the distributed loop: distinct starts at hops 0, each
+    * level's newly reached set = out-neighbors of the frontier minus
+    * everything already labeled, maxHops cuts after that many expansion
+    * rounds, and an edge from a null id is never followed (a null key
+    * joins nothing). Ids match by boxed equality, so callers pass them
+    * in one [[localIdType]]. Duplicate edges are harmless. Returns each
+    * labeled node with its hop count. */
+  private[graft] def localHops(edges: Iterator[(Any, Any)],
+      starts: Iterable[Any],
+      maxHops: Option[Int]): java.util.LinkedHashMap[Any, Int] = {
+    val adj = new java.util.HashMap[Any, ArrayBuffer[Any]]()
+    edges.foreach { case (s, d) =>
+      if (s != null) adj.computeIfAbsent(s, _ => ArrayBuffer.empty[Any]) += d
     }
     val hops = new java.util.LinkedHashMap[Any, Int]()
     starts.foreach { s => if (!hops.containsKey(s)) hops.put(s, 0) }
-    var frontier: Array[Any] = starts.distinct
+    var frontier: Array[Any] = hops.keySet.asScala.toArray[Any]
     var level = 0
     while (frontier.nonEmpty && !maxHops.exists(level + 1 > _)) {
       level += 1
@@ -132,20 +155,9 @@ object Bfs {
           if (!hops.containsKey(d) && !next.containsKey(d)) next.put(d, ())
         }
       }
-      val nf = new Array[Any](next.size)
-      var i = 0
-      val it = next.keySet.iterator
-      while (it.hasNext) { val d = it.next(); hops.put(d, level); nf(i) = d; i += 1 }
-      frontier = nf
+      frontier = next.keySet.asScala.toArray[Any]
+      frontier.foreach(hops.put(_, level))
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node_id", idT),
-      org.apache.spark.sql.types.StructField("hops",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    hops.forEach { (v, h) =>
-      rows.add(org.apache.spark.sql.Row(v, h)): Unit
-    }
-    spark.createDataFrame(rows, schema)
+    hops
   }
 }

@@ -346,8 +346,7 @@ object Weave {
     val samples = linkSamples(retained).persist()
     val unifiedRaw = unifier.unifyRaw(samples, nodes)
     val unified = unifier.unify(samples, nodes).persist()
-    val g = snapshot(retained, PolicyAppend /* already retained */,
-      unifier, extraVisited)
+    val g = SnapshotGraph(nodes, snapshotLinks(retained, nodes, unifier))
     val nUnifiedRaw = unifiedRaw.count()
     val nUnified = unified.count()
     val nLinks = g.links.count()
@@ -369,22 +368,32 @@ object Weave {
     (g, stats)
   }
 
-  /** Full snapshot (Weaver.hs getSnapshot', 156-168). */
+  /** Full snapshot (Weaver.hs getSnapshot', 156-168): the nodes step
+    * ([[snapshotNodes]]) composed with the links step
+    * ([[snapshotLinks]]). */
   def snapshot(findings: DataFrame,
       policy: FoundNodePolicy = PolicyOverwrite,
       unifier: LinkUnifier = new StdUnifier(),
       extraVisited: Option[DataFrame] = None): SnapshotGraph = {
     val retained = retainFindings(findings, policy)
     val nodes = snapshotNodes(retained, extraVisited)
-    val samples = linkSamples(retained)
-    val unified = unifier.unify(samples, nodes)
+    SnapshotGraph(nodes, snapshotLinks(retained, nodes, unifier))
+  }
+
+  /** Snapshot links (Weaver.hs:170-203): explode the retained findings
+    * into link samples, unify them against the snapshot `nodes` (the
+    * [[snapshotNodes]] of the same retained frame — negation reads their
+    * timestamps), and materialize the link states. Columns: source_node,
+    * dest_node, is_directed, epoch_ms, link_attrs, tz. */
+  def snapshotLinks(retained: DataFrame, nodes: DataFrame,
+      unifier: LinkUnifier): DataFrame = {
+    val unified = unifier.unify(linkSamples(retained), nodes)
     val materialized = LinkOps.materializeLinks(unified)
-    val links = (if (materialized.columns.contains("tz"))
-        materialized.select(col("source_node"), col("dest_node"),
-          col("is_directed"), col("epoch_ms"), col("link_attrs"), col("tz"))
-      else materialized.select(col("source_node"), col("dest_node"),
-        col("is_directed"), col("epoch_ms"), col("link_attrs"))
-        .withColumn("tz", lit(null).cast(graft.model.Findings.tzType)))
-    SnapshotGraph(nodes, links)
+    if (materialized.columns.contains("tz"))
+      materialized.select(col("source_node"), col("dest_node"),
+        col("is_directed"), col("epoch_ms"), col("link_attrs"), col("tz"))
+    else materialized.select(col("source_node"), col("dest_node"),
+      col("is_directed"), col("epoch_ms"), col("link_attrs"))
+      .withColumn("tz", lit(null).cast(graft.model.Findings.tzType))
   }
 }

@@ -1,7 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import graft.model.SnapshotGraph
 import graft.operators._
 import graft.time.Interval
@@ -23,28 +25,42 @@ case class Query[N](
     unifier: LinkUnifier = new StdUnifier(),
     maxHops: Option[Int] = None)
 
-/** getSnapshot (Spider.hs:175-185) re-expressed for Spark: instead of a
-  * per-start Gremlin traversal with client-side weaving, the whole
-  * pipeline is declarative — interval filter (pushes to the scan) →
-  * policy retention → distributed BFS restriction → weave.
+/** getSnapshot (Spider.hs:175-185) re-expressed for Spark: interval
+  * filter (pushes to the scan) → policy retention → BFS restriction →
+  * weave.
   *
   * Ordering matters and matches the reference (risk §7.4-3): the interval
   * filter runs BEFORE policy retention (a node's "latest" finding is the
   * latest WITHIN the interval, ServerTest/Snapshot.hs:228-265), and
   * retention runs before link explode.
   *
-  * BFS: iterative frontier expansion over the distinct edge list
-  * (subject→target of retained findings — the traversal direction of the
-  * reference's `out("finds")` steps, Spider/Internal/Graph.hs:177-178).
-  * Each iteration is one small self-join on the edge list; the edge list
-  * is the only shuffled input and is orders of magnitude smaller than the
-  * findings table. Frontiers are localCheckpointed every few rounds so
-  * the lineage doesn't grow unboundedly (classic iterative-Spark
-  * pitfall). Nodes reached but owning no in-interval findings are still
-  * "visited" (the reference's markAsVisited for bare `vn` rows,
-  * Spider.hs:194-226) — they appear with null timestamp, NOT as boundary
-  * nodes. With maxHops set, nodes just past the horizon stay unvisited
-  * and therefore surface as boundary nodes.
+  * BFS follows subject→target of the retained findings (the traversal
+  * direction of the reference's `out("finds")` steps,
+  * Spider/Internal/Graph.hs:177-178). Nodes reached but owning no
+  * in-interval findings are still "visited" (the reference's
+  * markAsVisited for bare `vn` rows, Spider.hs:194-226) — they appear
+  * with null timestamp, NOT as boundary nodes. With maxHops set, nodes
+  * just past the horizon stay unvisited and therefore surface as
+  * boundary nodes.
+  *
+  * Two lanes, one result:
+  *  - driver-sized: when the retained frame holds at most
+  *    `Bfs.LocalFindings` findings (one bounded `limit(n+1).collect()`
+  *    fetch) and the start ids unify with the subject type
+  *    (`Bfs.localIdType`), the retained rows are fetched once, the BFS
+  *    runs on the driver (`Bfs.localHops`), and the weave
+  *    ([[graft.operators.Weave.snapshotNodes]], then
+  *    [[graft.operators.Weave.snapshotLinks]] against the materialized
+  *    nodes) runs over local frames. The returned graph is backed by
+  *    local frames: reading it (GraphML, JSON) launches no job, and
+  *    nothing stays persisted. A query at that size is bound by per-job
+  *    overhead, not data: the BFS runs no job and each weave step runs
+  *    once.
+  *  - distributed: past the bound (or with ids that do not unify) the
+  *    retained frame is persisted, `Bfs.reachable` restricts it, and the
+  *    lazy [[graft.operators.Weave.snapshot]] weaves it — the only path
+  *    for histories too big to fetch. The persisted frame lives as long
+  *    as the returned graph.
   */
 object GetSnapshot {
 
@@ -55,22 +71,101 @@ object GetSnapshot {
 
   /** Same pipeline with the start set as a DataFrame (one id column) —
     * the scale path when starts are derived from data rather than a
-    * driver-side list (e.g. "all loaded subjects"): the start set never
-    * materializes on the driver, it stays a semi-join input.
-    * `query.startsFrom` is ignored. */
+    * driver-side list (e.g. "all loaded subjects"): on the distributed
+    * lane the start set never materializes on the driver, it stays a
+    * semi-join input. `query.startsFrom` is ignored. */
   def ofStarts(spark: SparkSession, findings: DataFrame,
-      startsDf: DataFrame, query: Query[_]): SnapshotGraph = {
+      startsDf: DataFrame, query: Query[_]): SnapshotGraph =
+    ofStarts(spark, findings, startsDf, query, Bfs.LocalFindings)
+
+  /** [[ofStarts]] with the driver-sized lane's bound explicit; `0`
+    * forces the distributed lane (lane-parity specs). */
+  private[graft] def ofStarts(spark: SparkSession, findings: DataFrame,
+      startsDf: DataFrame, query: Query[_],
+      localFindings: Int): SnapshotGraph = {
     val filtered =
       if (query.interval.isWhole) findings
       else findings.filter(query.interval.predicate(col("epoch_ms")))
+    val retained = Weave.retainFindings(filtered, query.policy)
+    val starts = startsDf.toDF("node_id")
+    driverSized(spark, retained, starts, query, localFindings)
+      .getOrElse(distributed(retained, starts, query))
+  }
+
+  /** The driver-sized lane: None when the retained frame or the start
+    * set exceeds `bound`, or when the ids do not unify. Otherwise the
+    * distributed lane's BFS restriction, run over the fetched rows, and
+    * its weave, over local frames. */
+  private def driverSized(spark: SparkSession, retained: DataFrame,
+      startsDf: DataFrame, query: Query[_],
+      bound: Int): Option[SnapshotGraph] = {
+    val schema = retained.schema
+    val si = schema.fieldIndex("subject")
+    val li = schema.fieldIndex("links")
+    val link = schema(li).dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val ti = link.fieldIndex("target")
+    val types = Seq(schema(si).dataType, link(ti).dataType,
+      startsDf.schema(0).dataType)
+    val idT = if (bound <= 0) None else Bfs.localIdType(types)
+    if (idT.isEmpty) return None
+    // Starts first: a driver-side list is a local relation, so this
+    // fetch runs no job.
+    val startRows = startsDf.limit(bound + 1).collect()
+    if (startRows.length > bound) return None
+    val rows = retained.limit(bound + 1).collect()
+    if (rows.length > bound) return None
+
+    // Ids match by boxed equality: mixed integrals, unified to BIGINT by
+    // Bfs.localIdType, are compared as longs.
+    val id: Any => Any =
+      if (types.distinct.size == 1) identity
+      else { case n: Number => n.longValue; case v => v }
+    def targets(r: Row): Iterator[Any] =
+      if (r.isNullAt(li)) Iterator.empty
+      else r.getSeq[Row](li).iterator
+        .map(l => if (l == null) null else id(l.get(ti)))
+    // Known nodes: anything present as subject or target. A start that
+    // is absent contributes nothing (missing start ⇒ empty graph,
+    // SnapshotTestCase.hs:811-821).
+    val known = new java.util.HashSet[Any]()
+    rows.foreach { r => known.add(id(r.get(si))); targets(r).foreach(known.add) }
+    val starts = startRows.iterator.map(r => id(r.get(0)))
+      .filter(s => s != null && known.contains(s)).toSeq
+    val visited = Bfs.localHops(
+      rows.iterator.flatMap { r => val s = id(r.get(si)); targets(r).map(s -> _) },
+      starts, query.maxHops).keySet
+    val reachable = rows.filter(r =>
+      !r.isNullAt(si) && visited.contains(id(r.get(si))))
+    val withFindings = reachable.iterator.map(r => id(r.get(si))).toSet
+    // Visited nodes without in-interval findings still need a row.
+    val bare = visited.asScala.iterator.filterNot(withFindings)
+      .map(v => Row(v)).toList
+
+    val findings = local(spark, reachable.toList, schema)
+    val nodes = materialize(Weave.snapshotNodes(findings, Some(
+      local(spark, bare, StructType(Seq(StructField("node_id", idT.get)))))))
+    Some(SnapshotGraph(nodes,
+      materialize(Weave.snapshotLinks(findings, nodes, query.unifier))))
+  }
+
+  private def local(spark: SparkSession, rows: List[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  private def materialize(df: DataFrame): DataFrame =
+    local(df.sparkSession, df.collect().toList, df.schema)
+
+  private def distributed(retained0: DataFrame, starts0: DataFrame,
+      query: Query[_]): SnapshotGraph = {
     // persisted: the retained frame feeds FOUR consumers (node summary,
     // BFS edge list, reachable findings, bare-visited) — without the
     // persist each consumer re-runs the findings scan + retention
     // aggregation. Stays cached for the life of the returned (lazy)
     // SnapshotGraph; MEMORY_AND_DISK, so it spills rather than OOMs.
-    val retained = Weave.retainFindings(filtered, query.policy).persist()
+    val retained = retained0.persist()
 
-    val starts = startsDf.toDF("node_id").distinct()
+    val starts = starts0.distinct()
 
     // Known nodes: anything present in the graph as subject or target.
     // A start node that is absent contributes nothing (missing start ⇒

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import graft.io.GraphMl
 import graft.model._
 import graft.operators._
 import graft.query.{GetSnapshot, Query}
+import graft.sources.History
 import graft.time.{Interval, IntervalEnd}
 
 /** Link row for the BIGINT-id cases (top level so Spark finds a TypeTag). */
@@ -48,8 +52,46 @@ class QuerySpec extends SparkSpec {
   private val bySubject =
     new StdUnifier(subId = Seq(col("subject")), negation = false)
 
+  private def sortedRows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+  /** GraphML of `g` with its ids rendered as strings (the writer reads
+    * string ids). */
+  private def graphMl(g: SnapshotGraph) = {
+    def str(df: DataFrame, ids: String*) =
+      ids.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("string")))
+    GraphMl.write(SnapshotGraph(str(g.nodes, "node_id"),
+      str(g.links, "source_node", "dest_node")))
+  }
+
+  /** Runs `q` from `starts` through both GetSnapshot lanes — the
+    * driver-sized one and the distributed one (bound 0) — and checks
+    * that they agree: same schema, same sorted nodes and links,
+    * byte-identical GraphML. `localBound` is the driver-sized lane's
+    * bound; the lane must have run (its frames are local relations).
+    * Returns the driver-sized lane's graph. */
+  private def bothLanes(findings: DataFrame, starts: DataFrame,
+      q: Query[_], localBound: Int = Bfs.LocalFindings): SnapshotGraph = {
+    val local = GetSnapshot.ofStarts(spark, findings, starts, q, localBound)
+    val dist = GetSnapshot.ofStarts(spark, findings, starts, q, 0)
+    local.nodes.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+    local.links.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+    local.nodes.schema shouldBe dist.nodes.schema
+    local.links.schema shouldBe dist.links.schema
+    // cached, so the distributed lane's plans run once for both checks
+    val distFrames = Seq(dist.nodes.persist(), dist.links.persist())
+    try {
+      sortedRows(local.nodes) shouldBe sortedRows(dist.nodes)
+      sortedRows(local.links) shouldBe sortedRows(dist.links)
+      graphMl(local) shouldBe graphMl(dist)
+    } finally distFrames.foreach(_.unpersist())
+    local
+  }
+
+  private def snapshot[N: Encoder](findings: DataFrame, q: Query[N]) =
+    bothLanes(findings, spark.createDataset(q.startsFrom).toDF("node_id"), q)
+
   private def run(fns: Seq[FoundNode], q: Query[String]) = {
-    val g = GetSnapshot(spark, Findings.fromSeq(spark, fns), q)
+    val g = snapshot(Findings.fromSeq(spark, fns), q)
     val nodes = g.nodes.collect()
       .map(r => (r.getString(0), r.getBoolean(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
@@ -196,7 +238,7 @@ class QuerySpec extends SparkSpec {
         .toDF("subject", "epoch_ms", "finding_seq", "node_attrs", "links")
       // negation off: node 2's newer finding omits 1 and would (correctly)
       // negate the 1→2 link — the negation case is pinned separately below
-      val g = GetSnapshot(spark, findings, Query(Seq(1L), unifier = noNeg))
+      val g = snapshot(findings, Query(Seq(1L), unifier = noNeg))
       g.nodes.schema("node_id").dataType shouldBe
         org.apache.spark.sql.types.LongType
       val ns = g.nodes.collect()
@@ -210,7 +252,7 @@ class QuerySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       ls shouldBe Seq((1L, 2L), (2L, 3L))
       // with a 1-hop horizon, 3 stays unvisited and surfaces as boundary
-      val bounded = GetSnapshot(spark, findings,
+      val bounded = snapshot(findings,
         Query(Seq(1L), maxHops = Some(1), unifier = noNeg))
       bounded.nodes.collect()
         .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1) shouldBe
@@ -223,7 +265,7 @@ class QuerySpec extends SparkSpec {
         lfn(1L, 10, Seq(2L), seq = 1),
         lfn(2L, 20, Nil, seq = 2)) // newer empty re-observation negates
         .toDF("subject", "epoch_ms", "finding_seq", "node_attrs", "links")
-      val g = GetSnapshot(spark, findings, Query(Seq(1L, 2L)))
+      val g = snapshot(findings, Query(Seq(1L, 2L)))
       g.links.collect() shouldBe empty
       g.nodes.collect().map(_.getLong(0)).sorted shouldBe Seq(1L, 2L)
     }
@@ -233,14 +275,96 @@ class QuerySpec extends SparkSpec {
     it("matches the Seq-based path bit for bit") {
       val fns = intervalFns
       val q = Query(Seq("n1", "n2"), unifier = noNeg)
-      val viaSeq = GetSnapshot(spark, Findings.fromSeq(spark, fns), q)
-      val viaDf = GetSnapshot.ofStarts(spark, Findings.fromSeq(spark, fns),
+      val viaSeq = snapshot(Findings.fromSeq(spark, fns), q)
+      val viaDf = bothLanes(Findings.fromSeq(spark, fns),
         spark.createDataset(Seq("n1", "n2"))(stringEnc).toDF("node_id"),
         q.copy(startsFrom = Nil))
       viaDf.nodes.collect().map(_.toString).sorted.toSeq shouldBe
         viaSeq.nodes.collect().map(_.toString).sorted.toSeq
       viaDf.links.collect().map(_.toString).sorted.toSeq shouldBe
         viaSeq.links.collect().map(_.toString).sorted.toSeq
+    }
+  }
+
+  describe("GetSnapshot lanes (driver-sized vs distributed)") {
+    // The traversal, interval and policy cases above already run both
+    // lanes; these add the unifiers and policy × horizon mixes they miss.
+    val window = Interval(end("10", inclusive = false), end("35", inclusive = true))
+    def agree(q: Query[String]) =
+      snapshot(Findings.fromSeq(spark, intervalFns), q)
+
+    it("agree for ListMergeUnifier, which gives StdUnifier's graph") {
+      val q = Query(Seq("n1"), window,
+        unifier = new ListMergeUnifier(ListMergeUnifier.latestOfBoth))
+      graphMl(agree(q)) shouldBe
+        graphMl(agree(q.copy(unifier = new StdUnifier())))
+    }
+    it("agree for StdUnifier(subId = …) with negation under PolicyKeepN(3)") {
+      agree(Query(Seq("n1"), window, PolicyKeepN(3),
+        new StdUnifier(subId = Seq(col("subject")))))
+    }
+    it("agree for ListMergeUnifier(negation = false) under PolicyAppend with maxHops") {
+      agree(Query(Seq("n1"), window, PolicyAppend, new ListMergeUnifier(
+        ListMergeUnifier.latestOfBoth, negation = false), Some(1)))
+    }
+    it("agree for StdUnifier(negation = false) under PolicyKeepN(3) with maxHops") {
+      agree(Query(Seq("n1"), window, PolicyKeepN(3), noNeg, Some(1)))
+    }
+
+    it("agree for Int start ids against BIGINT subjects") {
+      import spark.implicits._
+      val findings = Seq(
+        (1L, 10L, 0L, Map("o" -> "y"),
+          Seq(LLink(2L, LinkState.ToTarget, Map.empty))),
+        (2L, 20L, 1L, Map("o" -> "y"),
+          Seq(LLink(3L, LinkState.ToTarget, Map.empty))))
+        .toDF("subject", "epoch_ms", "finding_seq", "node_attrs", "links")
+      val viaInt = snapshot(findings, Query(Seq(1), unifier = noNeg))
+      viaInt.nodes.schema("node_id").dataType shouldBe
+        org.apache.spark.sql.types.LongType
+      sortedRows(viaInt.nodes) shouldBe
+        sortedRows(snapshot(findings, Query(Seq(1L), unifier = noNeg)).nodes)
+      sortedRows(viaInt.links) should have size 2
+    }
+
+    it("agree with tz present and with tz absent") {
+      val cet = Some(Tz(60, summerOnly = false, "CET"))
+      val withTz = intervalFns.zipWithIndex.map { case (f, i) =>
+        if (i % 2 == 0) f.copy(tz = cet) else f }
+      val present = snapshot(Findings.fromSeq(spark, withTz), Query(Seq("n1")))
+      graphMl(present) should include ("CET")
+      val absent = Findings.fromSeq(spark, intervalFns).drop("tz")
+      graphMl(snapshot(absent, Query(Seq("n1")))) should not include ("CET")
+    }
+
+    it("the bound is inclusive: n retained findings take the lane at " +
+        "bound n and fall back at n - 1") {
+      val fns = Findings.fromSeq(spark, intervalFns)
+      val starts = spark.createDataset(Seq("n1"))(stringEnc).toDF("node_id")
+      val q = Query(Seq("n1"), policy = PolicyAppend)
+      val n = intervalFns.size
+      bothLanes(fns, starts, q, localBound = n)
+      GetSnapshot.ofStarts(spark, fns, starts, q, n - 1)
+        .nodes.queryExecution.optimizedPlan should not be a[LocalRelation]
+    }
+
+    it("a small history's snapshot runs a pinned number of jobs, none " +
+        "in GraphMl.write, and leaves nothing persisted") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_lane").toString
+      History.append(Findings.fromSeq(spark, intervalFns), dir)
+      val findings = History.read(spark, dir,
+        Interval(end("10", inclusive = false), IntervalEnd(None, true)))
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      var g: SnapshotGraph = null
+      val snapshotJobs = jobsDuring {
+        g = GetSnapshot(spark, findings, Query(Seq("n1", "n2")))
+      }
+      var xml = ""
+      jobsDuring { xml = GraphMl.write(g) } shouldBe 0
+      xml should include ("<node id=\"n5\">")
+      info(s"GetSnapshot ran $snapshotJobs jobs")
+      snapshotJobs should be <= 11
+      (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
     }
   }
 

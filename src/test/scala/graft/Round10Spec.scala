@@ -13,7 +13,8 @@ class Round10Spec extends SparkSpec {
 
   /** Max shuffle-read records of any single task during `body` — the
     * per-task width a skewed key inflates. Bus drained via the
-    * Round8Spec sentinel-job trick (waitUntilEmpty is private). */
+    * [[SparkSpec.jobsDuring]] sentinel-job trick (waitUntilEmpty is
+    * private). */
   private class MaxTaskReadListener extends SparkListener {
     val maxRead = new java.util.concurrent.atomic.AtomicLong(0)
     @volatile var sentinelSeen = false

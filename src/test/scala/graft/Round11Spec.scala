@@ -182,31 +182,6 @@ class Round11Spec extends SparkSpec {
   }
 
   describe("exclusivePrefixSum eagerness contract, quantified") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
-    class JobCounter extends SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      @volatile var sentinelSeen = false
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && "r11-sentinel" ==
-            j.properties.getProperty("spark.jobGroup.id")) sentinelSeen = true
-        else jobs.incrementAndGet(): Unit
-    }
-    def jobsDuring(body: => Unit): Int = {
-      val l = new JobCounter
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        spark.sparkContext.setJobGroup("r11-sentinel", "drain barrier")
-        try spark.range(1).count()
-        finally spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!l.sentinelSeen && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        l.jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
-
     it("the probe's construction-time job cost is measured and " +
         "windowThreshold=0 removes exactly it") {
       import graft.pipeline.{Mixture, PipelineOps}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Round-8 hardening: gate builders must be LAZY — constructing a
@@ -12,36 +11,6 @@ import org.apache.spark.sql.functions._
   * multi-job — so this pins exactly the threshold-scalar class.
   */
 class Round8Spec extends SparkSpec {
-
-  private class JobCounter extends SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sentinelSeen = false
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      if (j.properties != null &&
-          "round8-sentinel" == j.properties.getProperty("spark.jobGroup.id"))
-        sentinelSeen = true
-      else jobs.incrementAndGet()
-  }
-
-  private def jobsDuring(body: => Unit): Int = {
-    val l = new JobCounter
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // The listener bus is async (and its waitUntilEmpty is
-      // private[spark]): run one tagged sentinel job AFTER the body —
-      // bus ordering guarantees any builder-triggered JobStart events
-      // are delivered before the sentinel's, so once the sentinel is
-      // seen the counter holds exactly the builder's job count.
-      spark.sparkContext.setJobGroup("round8-sentinel", "drain barrier")
-      try spark.range(1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!l.sentinelSeen && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      l.jobs.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   describe("threshold-scalar gates build lazily") {
     val sf = "/root/testdata/sf0.001"
