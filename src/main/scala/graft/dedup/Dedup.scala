@@ -193,7 +193,6 @@ object Dedup {
     *
     * Fixpoint = per-component stars centered on the min id. */
   def clusterLabelsStar(pairs: DataFrame,
-      checkpointDir: Option[String] = None,
       localFallbackEdges: Long = 1000000L): DataFrame = {
     import graft.util.Checkpoints.cut
     // oriented (u big, v small), self-pairs dropped
@@ -201,10 +200,10 @@ object Dedup {
       .select(greatest(col("id1"), col("id2")).as("u"),
         least(col("id1"), col("id2")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct(), checkpointDir, eager = false)
+      .distinct(), eager = false)
     val ids = cut(e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct(),
-      checkpointDir, eager = false)
+      eager = false)
     // Convergence: ONE cheap signature aggregate per round — (count,
     // sum(hash(u)), sum(hash(v))) — instead of two full except() jobs.
     // Both frames are distinct sets, so equal counts plus next ⊆ e
@@ -251,7 +250,7 @@ object Dedup {
         .unionByName(ssMin.select(col("u").as("a"), col("m")))
         .filter(col("a") =!= col("m"))
         .select(col("a").as("u"), col("m").as("v"))
-        .distinct(), checkpointDir, eager = false)
+        .distinct(), eager = false)
       val nSig = sig(next)
       done = nSig == eSig && next.except(e).isEmpty
       eSig = nSig
@@ -696,8 +695,7 @@ object Dedup {
     * batch ids are new (the [[appendLshIndex]] precondition;
     * [[dedupIncrement]] is the same daily shape). */
   def clusterIncrementFromPairs(bbPairs: DataFrame, bcPairs: DataFrame,
-      existing: DataFrame,
-      checkpointDir: Option[String] = None): ClusterDelta = {
+      existing: DataFrame): ClusterDelta = {
     // The candidate frames are the EXPENSIVE inputs (banding self-join
     // / index scan) and feed both the edge set and batchIds, which
     // every delta frame joins — persist once, release after the three
@@ -710,7 +708,7 @@ object Dedup {
       .select(col("qid").as("id1"),
         coalesce(col("cluster"), col("did")).as("id2"))
     val edges = bb.unionByName(bc)
-    val labels = clusterLabelsStar(edges, checkpointDir)
+    val labels = clusterLabelsStar(edges)
     val batchIds = bb.select(col("id1").as("id"))
       .unionByName(bb.select(col("id2").as("id")))
       .unionByName(bcp.select(col("qid").as("id")))
@@ -747,13 +745,13 @@ object Dedup {
     * the corpus). */
   def clusterIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batch: DataFrame, existing: DataFrame,
-      k: Int = 3, idCol: String = "doc_id", textCol: String = "text",
-      checkpointDir: Option[String] = None): ClusterDelta = {
+      k: Int = 3, idCol: String = "doc_id",
+      textCol: String = "text"): ClusterDelta = {
     val banded = bandedBuckets(batch, k, idCol, textCol).persist()
     try {
       val bb = candidatePairsFromBanded(banded)
       val bc = indexCandidatesFromBanded(spark, indexDir, banded)
-      clusterIncrementFromPairs(bb, bc, existing, checkpointDir)
+      clusterIncrementFromPairs(bb, bc, existing)
     } finally banded.unpersist() // delta frames are materialized by then
   }
 
@@ -786,15 +784,14 @@ object Dedup {
     * large-star/small-star variant (same join shape) bounds rounds at
     * O(log n) — this direct form keeps label = GLOBAL min id, which the
     * oracle's transitive closure states exactly. */
-  def clusterLabels(pairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def clusterLabels(pairs: DataFrame): DataFrame = {
     import graft.util.Checkpoints.cut
     val edges = pairs.select(col("id1").as("id"), col("id2").as("nb"))
       .unionByName(pairs.select(col("id2").as("id"), col("id1").as("nb")))
       .distinct().persist()
     // lazy cut: the labelSum aggregate below materializes it in one job
     var labels = cut(edges.select(col("id")).distinct()
-      .withColumn("cluster", col("id")), checkpointDir, eager = false)
+      .withColumn("cluster", col("id")), eager = false)
     // Convergence check: one cheap TYPE-AGNOSTIC signature aggregate
     // per round (sum of row hashes — sum(cluster) would ANSI-crash on
     // STRING ids), then, only when the signature says "candidate
@@ -814,8 +811,7 @@ object Dedup {
         .select(col("id"), col("cluster"))
       val next = cut(labels.select(col("id"), col("cluster"))
         .unionByName(viaNeighbors)
-        .groupBy("id").agg(min(col("cluster")).as("cluster")),
-        checkpointDir, eager = false)
+        .groupBy("id").agg(min(col("cluster")).as("cluster")), eager = false)
       val s = labelSig(next)
       changed = s != prevSig || !next.except(labels).isEmpty
       prevSig = s
@@ -831,14 +827,11 @@ object Dedup {
     * ([[clusterLabelsStar]], O(log n) rounds) → keep each cluster's
     * min-id representative. Returns the SURVIVING rows of `docs` with
     * all their columns (docs in no candidate pair survive untouched —
-    * only non-representative cluster members are anti-joined away).
-    * `checkpointDir` flows to the CC rounds for fault-tolerant lineage
-    * cuts on preemptible clusters. */
+    * only non-representative cluster members are anti-joined away). */
   def dedupCorpus(docs: DataFrame, k: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text",
-      checkpointDir: Option[String] = None): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val pairs = minhashCandidatePairs(docs, k, idCol, textCol)
-    val dropped = clusterLabelsStar(pairs, checkpointDir)
+    val dropped = clusterLabelsStar(pairs)
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     docs.join(dropped, Seq(idCol), "left_anti")
@@ -898,9 +891,8 @@ object Dedup {
     * per-cluster sort); the survivor filter is one left-semi join on
     * the id — nothing wider than (cluster, id, score) shuffles. */
   def keepBestPerCluster(docs: DataFrame, pairs: DataFrame,
-      scoreCol: String, idCol: String = "doc_id",
-      checkpointDir: Option[String] = None): DataFrame = {
-    val labels = clusterLabelsStar(pairs, checkpointDir)
+      scoreCol: String, idCol: String = "doc_id"): DataFrame = {
+    val labels = clusterLabelsStar(pairs)
       .select(col("id").as("__lid"), col("cluster").as("__cluster"))
     val withC = docs.join(labels,
         col(idCol).cast("long") === col("__lid"), "left")

@@ -135,11 +135,10 @@ object AudioDedup {
   /** Clusters plus the one materialized hash frame (the q130 gate joins
     * them back) — the [[ImageDedup.nearDupClustersAndHashes]] contract
     * with the audio fingerprint column. */
-  def nearDupClustersAndHashes(hashes: DataFrame, maxHamming: Int = 7,
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+  def nearDupClustersAndHashes(hashes: DataFrame,
+      maxHamming: Int = 7): (DataFrame, DataFrame) = {
     val (h, clusters) = ImageDedup.nearDupClustersAndHashes(
-      hashes.select(col("media_id"), col("fhash").as("dhash")),
-      maxHamming, checkpointDir)
+      hashes.select(col("media_id"), col("fhash").as("dhash")), maxHamming)
     (h.select(col("media_id"), col("dhash").as("fhash")), clusters)
   }
 }

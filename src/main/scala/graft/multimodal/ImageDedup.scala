@@ -295,30 +295,28 @@ object ImageDedup {
     * .clusterLabelsStar]] contract). */
   def nearDupClusters(media: Dataset[MediaRow],
       decoder: GrayDecoder = ImageIoGrayDecoder,
-      maxHamming: Int = 6,
-      checkpointDir: Option[String] = None): DataFrame =
-    nearDupClustersFromHashes(imageHashes(media, decoder), maxHamming,
-      checkpointDir)
+      maxHamming: Int = 6): DataFrame =
+    nearDupClustersFromHashes(imageHashes(media, decoder), maxHamming)
 
   /** Clustering half of [[nearDupClusters]], taking an already-computed
     * (media_id, …, dhash) frame — shared by the decoder path and the
     * SQL-expressible stub path ([[stubImageHashesSql]]). The hash frame
     * is materialized once (it feeds the banding self-join twice, the
     * verify joins and the final left join). */
-  def nearDupClustersFromHashes(hashes: DataFrame, maxHamming: Int = 6,
-      checkpointDir: Option[String] = None): DataFrame =
-    nearDupClustersAndHashes(hashes, maxHamming, checkpointDir)._2
+  def nearDupClustersFromHashes(hashes: DataFrame,
+      maxHamming: Int = 6): DataFrame =
+    nearDupClustersAndHashes(hashes, maxHamming)._2
 
   /** [[nearDupClustersFromHashes]] plus the ONE materialized hash frame
     * it clusters — for callers that also consume the hashes (the q124
     * gate joins them back), so the same frame is not checkpointed twice
     * upstream and in here. */
-  def nearDupClustersAndHashes(hashes: DataFrame, maxHamming: Int = 6,
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+  def nearDupClustersAndHashes(hashes: DataFrame,
+      maxHamming: Int = 6): (DataFrame, DataFrame) = {
     val h = graft.util.Checkpoints.materialize(hashes)
     val pairs = nearDupPairs(h, maxHamming)
     val clustered = graft.dedup.Dedup.clusterLabelsStar(
-      pairs.select(col("id1"), col("id2")), checkpointDir)
+      pairs.select(col("id1"), col("id2")))
     // every decodable image appears: unmatched ones are their own cluster
     val clusters = h.select(col("media_id"))
       .join(clustered.withColumnRenamed("id", "media_id"),

@@ -125,22 +125,21 @@ object VideoDedup {
     * singletons label themselves (the [[ImageDedup.nearDupClusters]]
     * contract, third modality). */
   def nearDupClusters(media: Dataset[Media.MediaRow], stride: Int = 4,
-      minSharedPct: Int = MinSharedPct, maxOcc: Int = MaxOcc,
-      checkpointDir: Option[String] = None): DataFrame =
+      minSharedPct: Int = MinSharedPct, maxOcc: Int = MaxOcc): DataFrame =
     nearDupClustersAndCounts(frameHashes(media, stride), minSharedPct,
-      maxOcc, checkpointDir)._2
+      maxOcc)._2
 
   /** Clustering plus the per-video distinct-frame counts — for callers
     * that also consume the counts (the q131 gate joins them back), so
     * the one distinct frame projection is materialized exactly once.
     * Returns ((media_id, n_frames), (media_id, cluster)). */
   def nearDupClustersAndCounts(frames: DataFrame,
-      minSharedPct: Int = MinSharedPct, maxOcc: Int = MaxOcc,
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+      minSharedPct: Int = MinSharedPct,
+      maxOcc: Int = MaxOcc): (DataFrame, DataFrame) = {
     val vf = graft.util.Checkpoints.materialize(distinctFrames(frames))
     val (counts, pairs) = countsAndPairs(vf, minSharedPct, maxOcc)
     val clustered = graft.dedup.Dedup.clusterLabelsStar(
-      pairs.select(col("id1"), col("id2")), checkpointDir)
+      pairs.select(col("id1"), col("id2")))
     val clusters = counts.select(col("media_id"))
       .join(clustered.withColumnRenamed("id", "media_id"),
         Seq("media_id"), "left")

@@ -51,12 +51,8 @@ object Bfs {
 
   /** Returns (node_id, hops): minimum hop distance from any start node,
     * following src→dst edges. Starts not present in `edges` still appear
-    * at hops 0.
-    *
-    * `checkpointDir = Some(dir)` switches the per-round lineage cuts
-    * from executor-local blocks to reliable checkpoints (see
-    * [[graft.util.Checkpoints]]) — required for fault tolerance on
-    * preemptible clusters; the local default is right for local[n].
+    * at hops 0. Per-round lineage cuts are
+    * [[graft.util.Checkpoints.cut]]s.
     *
     * Runtime adaptation (the `TemporalReach.earliestArrival` /
     * `GraphxOps.clusterLabelsStar` discipline): each distributed round
@@ -73,7 +69,6 @@ object Bfs {
     * frontier loop runs as before. */
   def reachable(edges: DataFrame, starts: DataFrame,
       maxHops: Option[Int] = None,
-      checkpointDir: Option[String] = None,
       localEdgeThreshold: Int = LocalEdges): DataFrame = {
     import graft.util.Checkpoints.cut
     // Canonical id type BEFORE any collect (see [[localIdType]]).
@@ -102,7 +97,7 @@ object Bfs {
     }
     val e = e0.persist()
     var visited = cut(startsC.distinct()
-      .withColumn("hops", lit(0)), checkpointDir)
+      .withColumn("hops", lit(0)))
     var frontier = visited
     var level = 0
     var done = frontier.isEmpty
@@ -114,10 +109,10 @@ object Bfs {
           .join(frontier, e("src") === frontier("node_id"))
           .select(col("dst").as("node_id")).distinct()
           .join(visited, Seq("node_id"), "left_anti")
-          .withColumn("hops", lit(level)), checkpointDir)
+          .withColumn("hops", lit(level)))
         if (next.isEmpty) done = true
         else {
-          visited = cut(visited.union(next), checkpointDir)
+          visited = cut(visited.union(next))
           frontier = next
         }
       }

@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   * edges, whichever trips first — persist the symmetrized edge set
   * and cut the label frame every round (PageRank's lineage policy:
   * interior laziness multiplies the plan per round and gets
-  * re-executed); `checkpointDir` switches the cuts to reliable
-  * checkpoints.
+  * re-executed).
   */
 object Communities {
 
@@ -61,7 +60,6 @@ object Communities {
     * `cutEdgeThreshold` sizes the [[CutEdgeThreshold]] probe; ≤ 0
     * disables the probe (round-count trigger only). */
   def labelPropagation(edges: DataFrame, rounds: Int = 2,
-      checkpointDir: Option[String] = None,
       cutEdgeThreshold: Int = CutEdgeThreshold,
       tolChanges: Long = -1L): DataFrame = {
     import graft.util.Checkpoints.cut
@@ -101,7 +99,7 @@ object Communities {
           .select(col("src").as("id"), col("m.l").as("label"))
         var next = nodes.join(best, Seq("id"), "left")
           .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        if (doCut) next = cut(next, checkpointDir)
+        if (doCut) next = cut(next)
         if (tolChanges >= 0L) {
           val changed = next
             .join(labels.select(col("id"), col("label").as("prev")),

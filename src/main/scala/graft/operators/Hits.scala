@@ -57,7 +57,6 @@ object Hits {
     * (spec-pinned). Tol runs cut every iteration. */
   def hits(edges: DataFrame, iterations: Int = 2,
       scale: Long = 1000000L,
-      checkpointDir: Option[String] = None,
       tolMicro: Long = 0L): DataFrame = {
     import graft.util.Checkpoints.cut
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
@@ -107,7 +106,7 @@ object Hits {
         .selectExpr("id",
           s"coalesce(hraw, 0L) div greatest(1L, htot div ${scale}L)" +
             " AS h")
-      if (doCut) hub = cut(hub, checkpointDir)
+      if (doCut) hub = cut(hub)
       val aRaw = e.join(hub.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("araw"))
       val aTot = aRaw.agg(
@@ -118,7 +117,7 @@ object Hits {
         .selectExpr("id",
           s"coalesce(araw, 0L) div greatest(1L, atot div ${scale}L)" +
             " AS a")
-      if (doCut) nextAuth = cut(nextAuth, checkpointDir)
+      if (doCut) nextAuth = cut(nextAuth)
       if (tolMicro > 0L) {
         val d = nextAuth.select(col("id"), col("a").as("na"))
           .join(auth.select(col("id"), col("a").as("pa")), Seq("id"))

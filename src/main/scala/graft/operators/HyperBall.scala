@@ -45,8 +45,7 @@ import graft.sketch.Hll
   * and ReuseExchange dedupes the doubled subtrees inside one action),
   * longer runs cut the register frame EVERY hop (interior laziness
   * re-executes the multiplied plan — PageRank's lineage-policy
-  * scaladoc). `checkpointDir` switches the cuts to reliable
-  * checkpoints for preemptible clusters.
+  * scaladoc).
   */
 object HyperBall {
 
@@ -144,7 +143,7 @@ object HyperBall {
     * fully lazy; longer runs persist the edge list and cut every hop
     * (the final hop's cut leaves the result self-contained). */
   def ballRegisters(edges: DataFrame, hops: Int = 2,
-      m: Int = 64, checkpointDir: Option[String] = None): DataFrame = {
+      m: Int = 64): DataFrame = {
     import graft.util.Checkpoints.cut
     require(hops >= 0, s"hops must be >= 0, got $hops")
     val doCut = hops > LazyHops
@@ -157,7 +156,7 @@ object HyperBall {
         // regs feeds both the neighbor join and the union, so interior
         // laziness multiplies the plan 2x per hop — cut-engaged runs
         // cut every hop (PageRank's lineage-policy scaladoc)
-        if (doCut) regs = cut(regs, checkpointDir)
+        if (doCut) regs = cut(regs)
       }
       regs.select(col("id"),
           posexplode(col("regs")).as(Seq("bucket", "max_rho")))
@@ -201,7 +200,7 @@ object HyperBall {
     * ONE job that materializes every per-hop estimate while the edge
     * cache is live, so the returned frame is self-contained. */
   private def withPerHopEstimates(edges: DataFrame, maxHops: Int,
-      m: Int, checkpointDir: Option[String])(
+      m: Int)(
       finish: Vector[DataFrame] => DataFrame): DataFrame = {
     import graft.util.Checkpoints.cut
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
@@ -214,12 +213,12 @@ object HyperBall {
         estimateCol(col("regs"), m).as("est_0")))
       for (t <- 1 to maxHops) {
         regs = hop(e, regs, m)
-        if (doCut) regs = cut(regs, checkpointDir)
+        if (doCut) regs = cut(regs)
         perHop = perHop :+ regs.select(col("id"),
           estimateCol(col("regs"), m).as(s"est_$t"))
       }
       val out0 = finish(perHop)
-      if (doCut) cut(out0, checkpointDir) else out0
+      if (doCut) cut(out0) else out0
     } finally if (doCut) e.unpersist()
   }
 
@@ -230,8 +229,8 @@ object HyperBall {
     * construction (the effective diameter). FP output; rankings are
     * what it's for. Lineage policy = [[withPerHopEstimates]]. */
   def harmonicCentralities(edges: DataFrame, maxHops: Int = 4,
-      m: Int = 64, checkpointDir: Option[String] = None): DataFrame =
-    withPerHopEstimates(edges, maxHops, m, checkpointDir) { perHop =>
+      m: Int = 64): DataFrame =
+    withPerHopEstimates(edges, maxHops, m) { perHop =>
       val joined = perHop.reduce(_.join(_, Seq("id")))
       val h = (1 to maxHops).map(t =>
         greatest(col(s"est_$t") - col(s"est_${t - 1}"), lit(0.0)) / t)
@@ -247,8 +246,8 @@ object HyperBall {
     * 0 for nodes that reach nothing. Same engine and lineage policy
     * as [[harmonicCentralities]]. */
   def closenessCentralities(edges: DataFrame, maxHops: Int = 4,
-      m: Int = 64, checkpointDir: Option[String] = None): DataFrame =
-    withPerHopEstimates(edges, maxHops, m, checkpointDir) { perHop =>
+      m: Int = 64): DataFrame =
+    withPerHopEstimates(edges, maxHops, m) { perHop =>
       val joined = perHop.reduce(_.join(_, Seq("id")))
       val totDist = (1 to maxHops).map(t =>
         greatest(col(s"est_$t") - col(s"est_${t - 1}"), lit(0.0)) * t)
@@ -284,7 +283,6 @@ object HyperBall {
     * ≡ a fixed run with a sufficient horizon). */
   def effectiveDiameter(edges: DataFrame, maxHops: Int = 8,
       q: Double = 0.9, m: Int = 64,
-      checkpointDir: Option[String] = None,
       toStability: Boolean = false): Int = {
     import graft.util.Checkpoints.cut
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
@@ -295,7 +293,7 @@ object HyperBall {
       // Per-hop cut here (not the segment policy): an ACTION runs
       // every hop, and cross-job plans don't share shuffles — uncut,
       // hop t's total() would re-execute all t-1 previous rounds.
-      var regs = cut(seedRegs(nodes, m), checkpointDir)
+      var regs = cut(seedRegs(nodes, m))
       // (Σ estimates, Σ registers) in ONE scalar read. The integer
       // sum stays exact: ≤ n·m·max_rho ≲ 2^40 per-node, far under
       // Long range. The est/rsum projection drops `regs` from its
@@ -318,7 +316,7 @@ object HyperBall {
       var t = 0
       var stable = false
       while (t < maxHops && !(toStability && stable)) {
-        regs = cut(hop(e, regs, m), checkpointDir)
+        regs = cut(hop(e, regs, m))
         val (est, rsum) = total()
         totals += est
         stable = rsum == lastSum

@@ -83,12 +83,11 @@ object Motifs {
     * canonical edge set; the fixpoint test is the edge COUNT (peeling
     * only removes, so an unchanged count is the fixpoint). Rounds ≤
     * peel depth; per-round lineage cut (lazy — the count action
-    * materializes it; `checkpointDir` for reliable cuts). Returns the
+    * materializes it). Returns the
     * surviving canonical (u &lt; v) edge set. */
-  def kCoreEdges(pairs: DataFrame, k: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def kCoreEdges(pairs: DataFrame, k: Int): DataFrame = {
     import graft.util.Checkpoints.cut
-    var e = cut(canonicalEdges(pairs), checkpointDir, eager = false)
+    var e = cut(canonicalEdges(pairs), eager = false)
     var n = e.count()
     var done = n == 0L
     while (!done) {
@@ -99,8 +98,7 @@ object Motifs {
       val next = cut(
         e.join(keep.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
           .join(keep.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
-          .select(col("u"), col("v")),
-        checkpointDir, eager = false)
+          .select(col("u"), col("v")), eager = false)
       val m = next.count()
       done = m == n || m == 0L
       e = next
@@ -120,15 +118,14 @@ object Motifs {
     * (ordered wedge join — hash equi-joins, never all-pairs), a
     * 3-way explode to per-edge support counts, and a left-semi keep
     * join; rounds ≤ initial max support, each lineage-cut. */
-  def kTrussEdges(pairs: DataFrame, k: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def kTrussEdges(pairs: DataFrame, k: Int): DataFrame = {
     import graft.util.Checkpoints.cut
     require(k >= 2, s"k must be >= 2, got $k")
     // 2-truss = the whole graph (support >= 0 always holds); the loop
     // below would wrongly drop triangle-free edges, which simply have
     // no support row.
     if (k == 2) return canonicalEdges(pairs)
-    var e = cut(canonicalEdges(pairs), checkpointDir, eager = false)
+    var e = cut(canonicalEdges(pairs), eager = false)
     var n = e.count()
     var done = n == 0L
     while (!done) {
@@ -142,8 +139,7 @@ object Motifs {
       val next = cut(
         e.join(support.filter(col("support") >= k - 2)
             .select(col("u"), col("v")),
-          Seq("u", "v"), "left_semi"),
-        checkpointDir, eager = false)
+          Seq("u", "v"), "left_semi"), eager = false)
       val m = next.count()
       done = m == n || m == 0L
       e = next
@@ -153,18 +149,16 @@ object Motifs {
   }
 
   /** Nodes of the k-truss (endpoints of the surviving edge set). */
-  def kTrussNodes(pairs: DataFrame, k: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val e = kTrussEdges(pairs, k, checkpointDir)
+  def kTrussNodes(pairs: DataFrame, k: Int): DataFrame = {
+    val e = kTrussEdges(pairs, k)
     e.select(col("u").as("node_id"))
       .unionByName(e.select(col("v").as("node_id")))
       .distinct()
   }
 
   /** Nodes of the k-core (endpoints of the surviving edge set). */
-  def kCoreNodes(pairs: DataFrame, k: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val e = kCoreEdges(pairs, k, checkpointDir)
+  def kCoreNodes(pairs: DataFrame, k: Int): DataFrame = {
+    val e = kCoreEdges(pairs, k)
     e.select(col("u").as("node_id"))
       .unionByName(e.select(col("v").as("node_id")))
       .distinct()

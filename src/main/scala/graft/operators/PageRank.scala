@@ -49,9 +49,8 @@ import org.apache.spark.sql.functions._
   * broadcast — the round-14 1M-edge probe graph measured the old
   * cut-every-4 policy at 106 s for 10 iterations vs 8.7 s for 3
   * (should be ~3x, was ~12x); per-iteration cuts restore linear total
-  * work (one flat-plan materialization job per iteration).
-  * `checkpointDir` switches the cuts from localCheckpoint to reliable
-  * checkpoints (see [[graft.util.Checkpoints]]).
+  * work (one flat-plan materialization job per iteration). Cuts are
+  * [[graft.util.Checkpoints.cut]]s.
   */
 object PageRank {
 
@@ -100,7 +99,6 @@ object PageRank {
   def pageRank(edges: DataFrame, iterations: Int = 3,
       dampingPermille: Int = 850,
       scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None,
       tolMicro: Long = 0L): DataFrame = {
     import graft.util.Checkpoints.cut
     validate(iterations, dampingPermille, scale)
@@ -138,7 +136,7 @@ object PageRank {
           s"(${1000L - dampingPermille} * ${scale}L) div (1000 * n)" +
             s" + ($dampingPermille * (coalesce(inc, 0L) + dang div n))" +
             " div 1000 AS pr")
-      if (doCut) next = cut(next, checkpointDir)
+      if (doCut) next = cut(next)
       if (tolMicro > 0L && l1Delta(next, pr) <= tolMicro) converged = true
       pr = next
       i += 1
@@ -176,7 +174,6 @@ object PageRank {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iterations: Int = 3, dampingPermille: Int = 850,
       scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None,
       tolMicro: Long = 0L): DataFrame = {
     import graft.util.Checkpoints.cut
     validate(iterations, dampingPermille, scale)
@@ -224,7 +221,7 @@ object PageRank {
             s" div (1000 * ns) + ($dampingPermille * (dang div ns))" +
             s" div 1000)" +
             s" + ($dampingPermille * coalesce(inc, 0L)) div 1000 AS pr")
-      if (doCut) next = cut(next, checkpointDir)
+      if (doCut) next = cut(next)
       if (tolMicro > 0L && l1Delta(next, pr) <= tolMicro) converged = true
       pr = next
       i += 1
@@ -248,7 +245,6 @@ object PageRank {
   def pageRankWeighted(edges: DataFrame, iterations: Int = 3,
       dampingPermille: Int = 850,
       scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None,
       tolMicro: Long = 0L): DataFrame = {
     import graft.util.Checkpoints.cut
     validate(iterations, dampingPermille, scale)
@@ -288,7 +284,7 @@ object PageRank {
           s"(${1000L - dampingPermille} * ${scale}L) div (1000 * n)" +
             s" + ($dampingPermille * (coalesce(inc, 0L) + dang div n))" +
             " div 1000 AS pr")
-      if (doCut) next = cut(next, checkpointDir)
+      if (doCut) next = cut(next)
       if (tolMicro > 0L && l1Delta(next, pr) <= tolMicro) converged = true
       pr = next
       i += 1

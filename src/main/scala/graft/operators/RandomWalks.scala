@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * rows) against the edge table on the current node plus a map-side-
   * partial min aggregation per walk — never adjacency materialized
   * per walk, never a driver loop over nodes. Walks reaching a sink
-  * node simply stop (no row at later steps). For long walks pass a
-  * `checkpointDir`/localCheckpoint upstream if lineage depth matters;
-  * typical embedding walks (L ≤ 80) are fine.
+  * node simply stop (no row at later steps). For long walks cut the
+  * input upstream ([[graft.util.Checkpoints.cut]]) if lineage depth
+  * matters; typical embedding walks (L ≤ 80) are fine.
   */
 object RandomWalks {
 

@@ -9,8 +9,7 @@ import graft.util.Checkpoints.cut
   * (`dist ⋈ edges` + per-node `min`), so a round is two hash shuffles
   * over the frontier and the round count is the weighted-hop depth of
   * the shortest-path tree, not the node count. The iterative shape
-  * (lineage cut per round + monotone-aggregate convergence, optional
-  * reliable checkpoint dir) matches [[graft.operators.Bfs]] and
+  * (lineage cut per round + monotone-aggregate convergence) matches [[graft.operators.Bfs]] and
   * `Dedup.clusterLabelsStar`.
   *
   * Reference scope: the reference walks graphs with unweighted
@@ -31,25 +30,22 @@ object ShortestPaths {
     * (count, sum(dist)) is monotone and its fixpoint is exact — one
     * cheap scalar aggregate per round, no `except`.
     */
-  def sssp(edges: DataFrame, source: String,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def sssp(edges: DataFrame, source: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // cut the edge frame once: every round joins against it, and without
     // the cut each round would re-run the whole upstream plan (scan +
     // symmetrize + dedup) just to produce the same edges again
     val e = cut(edges.select(col("u"), col("v"), col("w").cast("long").as("w")),
-      checkpointDir, eager = false)
-    var dist = cut(Seq((source, 0L)).toDF("id", "dist"),
-      checkpointDir, eager = false)
+      eager = false)
+    var dist = cut(Seq((source, 0L)).toDF("id", "dist"), eager = false)
     var sig = (1L, 0L)
     var done = false
     while (!done) {
       val relaxed = dist.join(e, dist("id") === e("u"))
         .select(col("v").as("id"), (col("dist") + col("w")).as("dist"))
       val next = cut(dist.unionByName(relaxed)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist")),
-        checkpointDir, eager = false)
+        .groupBy(col("id")).agg(min(col("dist")).as("dist")), eager = false)
       val r = next.agg(count(lit(1)), sum(col("dist"))).collect()(0)
       val nSig = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       done = nSig == sig

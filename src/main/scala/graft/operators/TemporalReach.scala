@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * arrival IMPROVED — monotone, so it terminates without a visited-set
   * diameter bound. The join is an equi-join on the node key with the
   * time bound as a residual predicate; per-round lineage is cut like
-  * every iterative operator here (optional reliable checkpoint dir).
+  * every iterative operator here ([[graft.util.Checkpoints.cut]]).
   *
   * Arrival at a target = the edge's timestamp (state arrives when the
   * edge is observed); starts begin at `startTs`.
@@ -42,7 +42,6 @@ object TemporalReach {
   def earliestArrival(edges: DataFrame, starts: DataFrame,
       startTs: Long = Long.MinValue,
       maxHops: Option[Int] = None,
-      checkpointDir: Option[String] = None,
       localEdgeThreshold: Int = 1 << 20): DataFrame = {
     import graft.util.Checkpoints.cut
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -81,7 +80,7 @@ object TemporalReach {
     }
     val e = e0.persist()
     var best = cut(startsC.distinct()
-      .withColumn("arrival_ms", lit(startTs)), checkpointDir)
+      .withColumn("arrival_ms", lit(startTs)))
     var frontier = best
     var level = 0
     var done = frontier.isEmpty
@@ -103,13 +102,13 @@ object TemporalReach {
           .filter(col("b.node_id").isNull ||
             col("r.arrival_ms") < col("b.arrival_ms"))
           .select(col("r.node_id").as("node_id"),
-            col("r.arrival_ms").as("arrival_ms")), checkpointDir)
+            col("r.arrival_ms").as("arrival_ms")))
         if (improved.isEmpty) done = true
         else {
           best = cut(best.as("b")
             .join(improved.as("i"), col("b.node_id") === col("i.node_id"),
               "left_anti")
-            .unionByName(improved), checkpointDir)
+            .unionByName(improved))
           frontier = improved
         }
       }

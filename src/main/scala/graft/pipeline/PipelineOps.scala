@@ -102,12 +102,11 @@ object PipelineOps {
     * join is the only added shuffle. Returns df + (rep, split). */
   def leakageSafeSplit(df: DataFrame, pairs: DataFrame,
       splits: Seq[(String, Long)], idCol: String = "doc_id",
-      outCol: String = "split",
-      checkpointDir: Option[String] = None): DataFrame = {
+      outCol: String = "split"): DataFrame = {
     require(splits.nonEmpty && splits.map(_._2).sum == 1000000L,
       s"split shares must total 1000000 ppm, got $splits")
     require(splits.forall(_._2 > 0), s"shares must be positive: $splits")
-    val labels = graft.dedup.Dedup.clusterLabelsStar(pairs, checkpointDir)
+    val labels = graft.dedup.Dedup.clusterLabelsStar(pairs)
       .select(col("id").as("__lid"), col("cluster").as("__cluster"))
     val withRep = df.join(labels,
         col(idCol).cast("long") === col("__lid"), "left")

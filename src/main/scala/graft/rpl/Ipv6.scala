@@ -76,10 +76,6 @@ object Ipv6 {
   def isLinkLocal(hi: Long, lo: Long): Boolean =
     ((hi >>> 48) & 0xffc0L) == 0xfe80L
 
-  /** Replace the upper 64 bits (IPv6.hs:37-42). */
-  def setPrefix(prefixHi: Long, hi: Long, lo: Long): (Long, Long) =
-    (prefixHi, lo)
-
   /** Link-local prefix substitution (ContikiNG.hs:239-243): if `addr` is
     * link-local, graft the subject's global prefix onto its interface ID. */
   def setNonLocalPrefix(subject: String, addr: String): Option[String] =

@@ -366,7 +366,6 @@ object Similarity {
   def kmeansCentroids(embeddings: DataFrame, centroidStride: Int = 50,
       iters: Int = 3, dims: Int = 64, idCol: String = "vec_id",
       vecCol: String = "embedding",
-      checkpointDir: Option[String] = None,
       maxCentroids: Option[Int] = Some(DefaultMaxCentroids)): DataFrame = {
     val unit = spread(unitVectors(embeddings, idCol, vecCol)).persist()
     var centroids = strideCentroids(unit, centroidStride, maxCentroids)
@@ -388,8 +387,7 @@ object Similarity {
       centroids = graft.util.Checkpoints.cut(
         means.select(col("cid"),
           transform(col("mu"), x => x / sqrt(dot(col("mu"), col("mu"))))
-            .as("cu")),
-        checkpointDir)
+            .as("cu")))
     }
     unit.unpersist()
     centroids
@@ -680,12 +678,11 @@ object Similarity {
     * when a and c are not themselves a qualifying pair. */
   def semanticPrune(embeddings: DataFrame, threshold: Double = 0.97,
       centroidStride: Int = 50, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      checkpointDir: Option[String] = None, nprobe: Int = 1,
+      vecCol: String = "embedding", nprobe: Int = 1,
       maxCentroids: Option[Int] = Some(DefaultMaxCentroids)): DataFrame = {
     val pairs = semanticDupPairs(embeddings, threshold, centroidStride,
       idCol, vecCol, nprobe, maxCentroids).select(col("id1"), col("id2"))
-    val dropped = graft.dedup.Dedup.clusterLabelsStar(pairs, checkpointDir)
+    val dropped = graft.dedup.Dedup.clusterLabelsStar(pairs)
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as("__drop_id"))
     embeddings.join(dropped,
@@ -737,7 +734,6 @@ object Similarity {
   def mutualKnnTopics(embeddings: DataFrame, k: Int = 3, nprobe: Int = 2,
       centroidStride: Int = 50, idCol: String = "vec_id",
       vecCol: String = "embedding",
-      checkpointDir: Option[String] = None,
       maxCentroids: Option[Int] = Some(DefaultMaxCentroids)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val knn = ivfTopK(embeddings, k, nprobe, centroidStride, idCol, vecCol,
@@ -747,7 +743,7 @@ object Similarity {
         col("a.qid") === col("b.nid") && col("a.nid") === col("b.qid") &&
         col("a.qid") < col("a.nid"))
       .select(col("a.qid").as("id1"), col("a.nid").as("id2"))
-    graft.dedup.Dedup.clusterLabelsStar(mutual, checkpointDir)
+    graft.dedup.Dedup.clusterLabelsStar(mutual)
       .select(col("id"), col("cluster").as("topic"))
       .withColumn("topic_size",
         count(lit(1)).over(Window.partitionBy(col("topic"))))
@@ -1124,12 +1120,11 @@ object Similarity {
   def semDedup(embeddings: DataFrame, eps: Double = 0.97,
       centroidStride: Int = 50, kmeansIters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      checkpointDir: Option[String] = None,
       maxCentroids: Option[Int] = Some(DefaultMaxCentroids)): DataFrame = {
     val unit = spread(unitVectors(embeddings, idCol, vecCol)).persist()
     val centroids = kmeansCentroids(embeddings, centroidStride,
       kmeansIters, idCol = idCol, vecCol = vecCol,
-      checkpointDir = checkpointDir, maxCentroids = maxCentroids)
+      maxCentroids = maxCentroids)
     // cluster assignment: broadcast centroids, fused VectorDot argmax
     val assigned = unit.join(broadcast(centroids))
       .select(col("id"), col("u"), col("cid"),
@@ -1147,8 +1142,7 @@ object Similarity {
       .filter(col("id1") < col("id2"))
       .filter(dot(col("u1"), col("u2")) >= eps)
       .select(col("id1"), col("id2"))
-    val labels = graft.dedup.Dedup.clusterLabelsStar(dupPairs,
-      checkpointDir)
+    val labels = graft.dedup.Dedup.clusterLabelsStar(dupPairs)
     val out = assigned.select(col("id"))
       .join(labels.withColumnRenamed("cluster", "rep"), Seq("id"), "left")
       .select(col("id"),

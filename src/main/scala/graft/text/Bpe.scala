@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * counting is a map-side-combinable hash aggregation; the only
   * driver-side data per round is the single winning pair. Each round
   * cuts lineage ([[graft.util.Checkpoints.cut]]) so `numMerges` rounds
-  * don't grow task binaries; pass `checkpointDir` on preemptible
-  * clusters.
+  * don't grow task binaries.
   */
 object Bpe {
 
@@ -89,7 +88,6 @@ object Bpe {
     * vocabularies past the threshold. */
   def learnMerges(docs: DataFrame, numMerges: Int = 10,
       minCount: Long = 2L, textCol: String = "text",
-      checkpointDir: Option[String] = None,
       localThreshold: Int = 1 << 20): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -104,7 +102,7 @@ object Bpe {
         // whole table
         localLearn(probe.map(r =>
           (r.getLong(0), r.getSeq[String](1).toArray)), numMerges, minCount)
-      } else distributedLearn(words0, numMerges, minCount, checkpointDir)
+      } else distributedLearn(words0, numMerges, minCount)
     merges.toDF("rank", "left", "right", "pair_cnt")
   }
 
@@ -248,8 +246,7 @@ object Bpe {
 
   /** One-Spark-job-per-round merge loop — the past-threshold path. */
   private def distributedLearn(words0: DataFrame, numMerges: Int,
-      minCount: Long, checkpointDir: Option[String])
-      : Seq[(Long, String, String, Long)] = {
+      minCount: Long): Seq[(Long, String, String, Long)] = {
     var words = words0.persist()
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, Long)]
@@ -264,8 +261,8 @@ object Bpe {
         val (l, r, c) = (top(0).getAs[String]("left"),
           top(0).getAs[String]("right"), top(0).getAs[Long]("cnt"))
         merges += ((rank, l, r, c))
-        val next = graft.util.Checkpoints.cut(
-          mergePair(words, l, r), checkpointDir).persist()
+        val next = graft.util.Checkpoints.cut(mergePair(words, l, r))
+          .persist()
         words.unpersist()
         words = next
         rank += 1
@@ -313,9 +310,8 @@ object Bpe {
     * no tokens emit (doc_id, []) rather than disappearing. */
   def encode(docs: DataFrame, merges: Seq[(String, String)],
       idCol: String = "doc_id", textCol: String = "text",
-      checkpointDir: Option[String] = None,
       fixedVocab: Option[DataFrame] = None): DataFrame = {
-    val seg = segment(docs, merges, textCol, checkpointDir)
+    val seg = segment(docs, merges, textCol)
     val v = fixedVocab.getOrElse(vocab(seg))
     // resolve each word's subword ids IN ORDER via posexplode (a
     // symbol may repeat within a word)
@@ -349,15 +345,14 @@ object Bpe {
     * (word, cnt, syms) — the subword segmentation a tokenizer applies.
     * Merge application is vocab-sized work, like training. */
   def segment(docs: DataFrame, merges: Seq[(String, String)],
-      textCol: String = "text",
-      checkpointDir: Option[String] = None): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     var words = initSymbols(wordCounts(docs, textCol))
     var i = 0
     merges.foreach { case (l, r) =>
       words = mergePair(words, l, r)
       i += 1
       // cut every few rounds: the fold expressions nest otherwise
-      if (i % 4 == 0) words = graft.util.Checkpoints.cut(words, checkpointDir)
+      if (i % 4 == 0) words = graft.util.Checkpoints.cut(words)
     }
     words
   }

@@ -64,14 +64,13 @@ object Fuzzy {
     * dist(a,c) > maxDist — that is what makes the id canonical; keep
     * `maxDist` tight (1) when chains worry you. Singletons label
     * themselves. */
-  def entityIds(words: DataFrame, wordCol: String, maxDist: Int = 1,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def entityIds(words: DataFrame, wordCol: String,
+      maxDist: Int = 1): DataFrame = {
     val w = words.select(col(wordCol).as("w"))
       .filter(col("w").isNotNull && col("w") =!= "").distinct()
     val pairs = fuzzyPairs(words, wordCol, maxDist)
       .select(col("w1").as("id1"), col("w2").as("id2"))
-    val clustered = graft.dedup.Dedup.clusterLabelsStar(pairs,
-      checkpointDir)
+    val clustered = graft.dedup.Dedup.clusterLabelsStar(pairs)
     w.join(clustered.withColumnRenamed("id", "w"), Seq("w"), "left")
       .select(col("w").as("value"),
         coalesce(col("cluster"), col("w")).as("entity_id"))

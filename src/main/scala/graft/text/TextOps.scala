@@ -169,14 +169,6 @@ object TextOps {
     "de" -> Seq("der", "die", "und", "das", "nicht", "ist", "ein", "zu"),
     "fr" -> Seq("le", "la", "les", "et", "des", "un", "une", "est"))
 
-  def langScores(text: Column): Seq[Column] = {
-    val toks = tokens(text)
-    langMarkers.toSeq.sortBy(_._1).map { case (lang, markers) =>
-      size(filter(toks, t => t.isin(markers.map(x => x: Any): _*)))
-        .as(s"score_$lang")
-    }
-  }
-
   def predictedLang(text: Column): Column = {
     val toks = tokens(text)
     def score(markers: Seq[String]) =
@@ -268,8 +260,6 @@ object TextOps {
     // wsTrim, not trim: sentence strings surface in oracle-compared
     // outputs, and built-in trims differ cross-engine on NBSP
     filter(transform(split(text, "[.!?]+"), s => wsTrim(s)), s => s =!= "")
-
-  def sentenceCount(text: Column): Column = size(sentences(text))
 
   /** CROSS-document boilerplate-line removal (the C4 pipeline's "drop
     * any line occurring in ≥ N documents" step — navigation chrome,

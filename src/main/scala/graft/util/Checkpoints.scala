@@ -6,16 +6,18 @@ import org.apache.spark.sql.DataFrame
   * k-means): every round must truncate the logical plan or the lineage —
   * and with it task binaries and stack depth — grows without bound.
   *
-  * Two modes:
-  *  - `None` (default): `localCheckpoint(eager)` — blocks live on
+  * One rule, read from the SparkContext (the rule Spark's own
+  * `PeriodicCheckpointer` follows for GraphX Pregel and MLlib):
+  *  - a checkpoint dir is set (`spark.checkpoint.dir` at context start,
+  *    or `SparkContext.setCheckpointDir`): reliable `checkpoint(eager)`
+  *    into it — survives executor loss at the cost of a write+read of
+  *    each round's frame. The right call for long iterative jobs on
+  *    preemptible clusters. Checkpoint files are NOT auto-deleted;
+  *    whoever sets the dir owns its cleanup.
+  *  - no dir (the default): `localCheckpoint(eager)` — blocks live on
   *    executors. Fastest, but NOT fault-tolerant: losing one executor
   *    (preemption, dynamic deallocation) aborts the job because the
   *    truncated lineage cannot recompute. The right call on local[n].
-  *  - `Some(dir)`: reliable `checkpoint(eager)` into `dir` (HDFS/S3/
-  *    local path) — survives executor loss at the cost of a write+read
-  *    of each round's frame. The right call for long iterative jobs on
-  *    preemptible clusters. Checkpoint files are NOT auto-deleted;
-  *    callers own cleanup of `dir`.
   */
 object Checkpoints {
 
@@ -84,22 +86,8 @@ object Checkpoints {
       case _ => () // derived frame: not the owner of any checkpoint
     }
 
-  @volatile private var configuredDir: Option[String] = None
-
-  def cut(df: DataFrame, checkpointDir: Option[String] = None,
-      eager: Boolean = true): DataFrame =
-    checkpointDir match {
-      case None => df.localCheckpoint(eager)
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // setCheckpointDir creates a fresh random subdir per call; only
-        // re-set when the requested root actually changes.
-        if (!configuredDir.contains(dir)) synchronized {
-          if (!configuredDir.contains(dir)) {
-            sc.setCheckpointDir(dir)
-            configuredDir = Some(dir)
-          }
-        }
-        df.checkpoint(eager)
-    }
+  def cut(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** `graft.Bench` fails loudly: a gate that throws is recorded as a
-  * failure, never as a time. */
+/** `graft.Bench` and `graft.Verify` fail loudly: a gate that throws is
+  * recorded as a failure, never as a time or a silent gap. */
 class BenchSpec extends SparkSpec {
 
   private val gates = Map[String, (SparkSession, String) => DataFrame](
@@ -37,6 +37,21 @@ class BenchSpec extends SparkSpec {
         "java.lang.IllegalStateException: injected \"builder\" failure"
       field(byGate("throws_running").head, "error").asText should include (
         "injected run failure")
+    }
+  }
+
+  describe("Verify.dump") {
+    it("dumps the gates that run, still writes the oracle file, and " +
+        "names the gates that threw") {
+      val out = java.nio.file.Files.createTempDirectory("verify_dump").toString
+      val oracle = Map("fine" -> "SELECT \"id\"\tFROM t")
+      Verify.dump(spark, "unused", out, gates.toSeq.sortBy(_._1),
+        oracle) shouldBe Seq("throws_building", "throws_running")
+      spark.read.parquet(s"$out/fine").count() shouldBe 10L
+      new java.io.File(s"$out/throws_building").exists shouldBe false
+      java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$out/oracle_sql.json")) shouldBe
+        """{"fine": "SELECT \"id\"\tFROM t"}"""
     }
   }
 }

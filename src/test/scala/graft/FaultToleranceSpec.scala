@@ -9,7 +9,9 @@ import graft.util.Checkpoints
   * verdict item 4): on a preemptible cluster the failure mode is "the
   * upstream data an iteration's lineage points at is GONE" — an
   * executor died, a shuffle dir was reclaimed, an input went away. A
-  * reliable `checkpointDir` is supposed to make the loop's state
+  * reliable checkpoint dir (the SparkContext's, which every
+  * `Checkpoints.cut` follows; each case scopes one with
+  * `withCheckpointDir`) is supposed to make the loop's state
   * self-contained on durable storage so recomputation resumes from the
   * checkpoint files instead of replaying lineage. These specs PROVE
   * that by destroying the lineage's source: the input parquet files
@@ -63,10 +65,12 @@ class FaultToleranceSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     // checkpointed run: iterations > CutEvery forces interior cuts AND
     // a final cut, so the returned frame is self-contained on disk
-    val pr = PageRank.pageRank(edges, 6, checkpointDir = Some(ckpt))
-    assertNoFileScanOf(pr, dataDir)
-    deleteData(dataDir)
-    pr.collect().map(_.toString).sorted.toSeq shouldBe expected
+    withCheckpointDir(ckpt) {
+      val pr = PageRank.pageRank(edges, 6)
+      assertNoFileScanOf(pr, dataDir)
+      deleteData(dataDir)
+      pr.collect().map(_.toString).sorted.toSeq shouldBe expected
+    }
   }
 
   it("BFS with a reliable checkpointDir survives losing its input " +
@@ -78,11 +82,13 @@ class FaultToleranceSpec extends SparkSpec {
     val expected = Bfs.reachable(edges.select(col("src"), col("dst")),
         starts, localEdgeThreshold = 0)
       .collect().map(_.toString).sorted.toSeq
-    val bfs = Bfs.reachable(edges.select(col("src"), col("dst")),
-      starts, checkpointDir = Some(ckpt), localEdgeThreshold = 0)
-    assertNoFileScanOf(bfs, dataDir)
-    deleteData(dataDir)
-    bfs.collect().map(_.toString).sorted.toSeq shouldBe expected
+    withCheckpointDir(ckpt) {
+      val bfs = Bfs.reachable(edges.select(col("src"), col("dst")),
+        starts, localEdgeThreshold = 0)
+      assertNoFileScanOf(bfs, dataDir)
+      deleteData(dataDir)
+      bfs.collect().map(_.toString).sorted.toSeq shouldBe expected
+    }
   }
 
   it("SSSP with a reliable checkpointDir survives losing its input " +
@@ -93,10 +99,12 @@ class FaultToleranceSpec extends SparkSpec {
       "cast(dst as string) v", "w")
     val expected = ShortestPaths.sssp(wEdges, "1")
       .collect().map(_.toString).sorted.toSeq
-    val d = ShortestPaths.sssp(wEdges, "1", checkpointDir = Some(ckpt))
-    assertNoFileScanOf(d, dataDir)
-    deleteData(dataDir)
-    d.collect().map(_.toString).sorted.toSeq shouldBe expected
+    withCheckpointDir(ckpt) {
+      val d = ShortestPaths.sssp(wEdges, "1")
+      assertNoFileScanOf(d, dataDir)
+      deleteData(dataDir)
+      d.collect().map(_.toString).sorted.toSeq shouldBe expected
+    }
   }
 
   it("connected components with a reliable checkpointDir survive " +
@@ -107,11 +115,13 @@ class FaultToleranceSpec extends SparkSpec {
     val expected = graft.dedup.Dedup.clusterLabelsStar(pairs,
         localFallbackEdges = 0L)
       .collect().map(_.toString).sorted.toSeq
-    val cc = graft.dedup.Dedup.clusterLabelsStar(pairs,
-      checkpointDir = Some(ckpt), localFallbackEdges = 0L)
-    assertNoFileScanOf(cc, dataDir)
-    deleteData(dataDir)
-    cc.collect().map(_.toString).sorted.toSeq shouldBe expected
+    withCheckpointDir(ckpt) {
+      val cc = graft.dedup.Dedup.clusterLabelsStar(pairs,
+        localFallbackEdges = 0L)
+      assertNoFileScanOf(cc, dataDir)
+      deleteData(dataDir)
+      cc.collect().map(_.toString).sorted.toSeq shouldBe expected
+    }
   }
 
   it("Checkpoints.cut(Some(dir)) truncates lineage MID-ITERATION: " +
@@ -121,13 +131,48 @@ class FaultToleranceSpec extends SparkSpec {
     // hand-rolled 3-round recurrence over the raw cut primitive (the
     // exact machinery every operator loop uses): round 1 runs on the
     // live input and is cut; the input dies; rounds 2-3 must complete
-    var deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    deg = Checkpoints.cut(deg, Some(ckpt)) // round 1 materialized
-    deleteData(dataDir)
-    var out = deg
-    for (_ <- 2 to 3)
-      out = Checkpoints.cut(
-        out.withColumn("d", col("d") * 2), Some(ckpt))
-    out.agg(sum(col("d"))).collect()(0).getLong(0) shouldBe 40L // 10 edges * 4
+    withCheckpointDir(ckpt) {
+      var deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      deg = Checkpoints.cut(deg) // round 1 materialized
+      deleteData(dataDir)
+      var out = deg
+      for (_ <- 2 to 3)
+        out = Checkpoints.cut(out.withColumn("d", col("d") * 2))
+      out.agg(sum(col("d"))).collect()(0).getLong(0) shouldBe 40L // 10 edges * 4
+    }
+  }
+
+  it("Checkpoints.cut follows the SparkContext's checkpoint dir: local " +
+      "without one, reliable inside withCheckpointDir, restored after") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getCheckpointDir
+    before shouldBe None // no earlier suite left a dir on the shared context
+    val df = Seq(1L, 2L, 3L).toDF("x")
+    def root(cut: org.apache.spark.sql.DataFrame) =
+      cut.queryExecution.analyzed match {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        case p => fail(s"cut root is not a LogicalRDD:\n$p")
+      }
+    // no dir: executor-local blocks, no checkpoint file anywhere
+    root(Checkpoints.cut(df)).getCheckpointFile shouldBe None
+    val ckpt = tmp("graft_ft_ckpt_mode")
+    withCheckpointDir(ckpt) {
+      val file = root(Checkpoints.cut(df)).getCheckpointFile
+      file.map(f => new java.io.File(new java.net.URI(f)).getPath
+        .startsWith(ckpt)) shouldBe Some(true)
+    }
+    def partFiles(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(partFiles).sum
+      else if (f.getName.startsWith("part-")) 1L else 0L
+    partFiles(new java.io.File(ckpt)) should be > 0L
+    sc.getCheckpointDir shouldBe before
+    // a body that throws still restores the dir
+    an[IllegalStateException] should be thrownBy
+      withCheckpointDir(tmp("graft_ft_ckpt_throw")) {
+        throw new IllegalStateException("boom")
+      }
+    sc.getCheckpointDir shouldBe before
+    root(Checkpoints.cut(df)).getCheckpointFile shouldBe None
   }
 }

@@ -458,24 +458,9 @@ class FuzzSpec extends SparkSpec {
   private def runTranche(names: Seq[String]): Unit = {
     val sf = fuzzSfDir
     val out = java.nio.file.Files.createTempDirectory("fuzz_out").toString
-    // the Verify dump loop, verbatim semantics
-    names.foreach { name =>
-      SparkEntry.queries(name)(spark, sf).coalesce(1)
-        .write.mode("overwrite").parquet(s"$out/$name")
-    }
-    def q(str: String): String = "\"" + str.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val oracle = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$out/oracle_sql.json"), oracle)
+    // the Verify dump itself
+    Verify.dump(spark, sf, out, names.map(n => n -> SparkEntry.queries(n)),
+      SparkEntry.oracleSql.filter(kv => names.contains(kv._1))) shouldBe empty
 
     val pb = new ProcessBuilder("python3", s"$repo/scripts/selfcheck.py",
       sf, out).redirectErrorStream(true)

@@ -145,17 +145,18 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("id1", "id2")
     val local = Dedup.clusterLabelsStar(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val reliable = Dedup.clusterLabelsStar(pairs, Some(dir)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    reliable shouldBe local
-    Dedup.clusterLabels(pairs, Some(dir)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq shouldBe local
-    val edges = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
-    val starts = Seq("a").toDF("node_id")
-    val bfs = graft.operators.Bfs.reachable(edges, starts,
-        checkpointDir = Some(dir)).collect()
-      .map(r => (r.getString(0), r.getInt(1))).sortBy(_._1).toSeq
-    bfs shouldBe Seq(("a", 0), ("b", 1), ("c", 2))
+    withCheckpointDir(dir) {
+      val reliable = Dedup.clusterLabelsStar(pairs).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      reliable shouldBe local
+      Dedup.clusterLabels(pairs).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq shouldBe local
+      val edges = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
+      val starts = Seq("a").toDF("node_id")
+      val bfs = graft.operators.Bfs.reachable(edges, starts).collect()
+        .map(r => (r.getString(0), r.getInt(1))).sortBy(_._1).toSeq
+      bfs shouldBe Seq(("a", 0), ("b", 1), ("c", 2))
+    }
     // reliable checkpoints actually materialized on disk
     def rddFiles(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(rddFiles).sum

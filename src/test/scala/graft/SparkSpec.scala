@@ -42,6 +42,18 @@ trait SparkSpec extends AnyFunSpec with Matchers with BeforeAndAfterAll {
       jobs.get()
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  /** Runs `body` with the shared context's checkpoint dir set to `dir`
+    * (so every `Checkpoints.cut` inside is a reliable checkpoint), then
+    * puts the previous dir back — set or unset — so later suites in
+    * the same JVM keep their local cuts. */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try body
+    finally org.apache.spark.CheckpointDirAccess.restore(sc, prev)
+  }
 }
 
 object SparkSpec {
