@@ -2,6 +2,8 @@ package graft.rpl
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.input_file_name
 import graft.model.{FoundLink, FoundNode, Findings, LinkState}
 
 /** Contiki-NG RPL log source (the reference's NetSpider.RPL.ContikiNG):
@@ -276,39 +278,58 @@ object ContikiNg {
     ParseResult(dios.toSeq, daos.toSeq, warnings.toSeq)
   }
 
-  /** Distributed source: every file under `path` parsed whole (wholetext),
-    * one task per file. Returns (dioFindings, daoFindings) as canonical
-    * findings DataFrames ready for Weave/GetSnapshot. */
+  /** Distributed source: every file under `path` parsed whole
+    * (wholetext), one parse unit per file. Returns (dioFindings,
+    * daoFindings) as canonical findings DataFrames ready for
+    * Weave/GetSnapshot.
+    *
+    * Lazy: the only driver work is the scan's file listing, so the call
+    * runs no Spark job and caches nothing. The parse and the finding_seq
+    * packing run inside whichever job consumes a frame, and every
+    * consuming job parses its files again — persist a frame you consume
+    * more than once.
+    *
+    * finding_seq must be unique ACROSS files for deterministic
+    * tie-breaks: it packs the file's rank over a 30-bit per-file block
+    * counter, `(rank << 30) | block`. The rank is the file's index among
+    * the files the scan reads — the non-empty ones, the same set
+    * `input_file_name()` reports — sorted by that URI string. Bounds
+    * fail loudly instead of aliasing: finding_seq must stay < 2^43 so
+    * downstream sample_seq = finding_seq * 1e6 + pos fits in a Long,
+    * i.e. at most 2^13 files per read (checked here, before any job) and
+    * 2^30 blocks per file (checked by the parse). */
   def readLogs(spark: SparkSession, path: String, head: LogHead): (DataFrame, DataFrame) = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.input_file_name
-    val files = spark.read.option("wholetext", "true").text(path)
-      .withColumn("file", input_file_name())
-      .as[(String, String)]
-    val parsed = files.mapPartitions { it =>
-      it.map { case (t, file) => (parseText(t, head), file) }
-    }.persist()
-    // finding_seq must be unique ACROSS files for deterministic
-    // tie-breaks. The high bits are a DENSE rank of the distinct file
-    // names (collision-free, unlike a hash) over a 30-bit per-file
-    // block counter; bounds are enforced loudly instead of silently
-    // aliasing. Budget: finding_seq must stay < 2^43 so downstream
-    // sample_seq = finding_seq * 1e6 + pos fits in a Long — 13-bit file
-    // rank (8192 files per read) × 30-bit block counter (1G blocks per
-    // file). The file list is a directory listing, driver-bounded.
-    val fileRank = spark.sparkContext.broadcast(
-      parsed.map(_._2).distinct().collect().sorted.zipWithIndex.toMap)
-    def withFileSeq(f: FoundNode, file: String): FoundNode = {
-      val fi = fileRank.value(file).toLong
-      require(fi < (1L << 13),
-        s"readLogs: more than ${1 << 13} files in one read; split the glob")
-      require(f.findingSeq < (1L << 30),
-        s"readLogs: more than ${1 << 30} blocks in $file")
-      f.copy(findingSeq = (fi << 30) | f.findingSeq)
+    val scan = spark.read.option("wholetext", "true").text(path)
+    val rank = fileRanks(scan)
+    require(rank.size <= (1 << 13),
+      s"readLogs: more than ${1 << 13} files in one read; split the glob")
+    val files = scan.withColumn("file", input_file_name()).as[(String, String)]
+    def findings(pick: ParseResult => Seq[FoundNode]): DataFrame =
+      Findings.toCanonical(files.flatMap { case (text, file) =>
+        val fi = rank(file)
+        pick(parseText(text, head)).map { f =>
+          require(f.findingSeq < (1L << 30),
+            s"readLogs: more than ${1 << 30} blocks in $file")
+          f.copy(findingSeq = (fi << 30) | f.findingSeq)
+        }
+      })
+    (findings(_.dios), findings(_.daos))
+  }
+
+  /** Rank of each file a wholetext scan reads, from the driver's file
+    * index: `listFiles` is the listing the scan itself plans from, and
+    * it drops empty files, which yield no row. */
+  private def fileRanks(scan: DataFrame): Map[String, Long] = {
+    val index = scan.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Some(r: HadoopFsRelation) => r.location
+      case other => throw new IllegalStateException(
+        s"readLogs: expected a file scan, found $other")
     }
-    val dios = parsed.flatMap { case (r, file) => r.dios.map(withFileSeq(_, file)) }.toDF()
-    val daos = parsed.flatMap { case (r, file) => r.daos.map(withFileSeq(_, file)) }.toDF()
-    (Findings.toCanonical(dios.as[FoundNode]),
-      Findings.toCanonical(daos.as[FoundNode]))
+    index.listFiles(Nil, Nil).flatMap(_.files)
+      .map(_.getPath.toUri.toString).sorted
+      .zipWithIndex.map { case (f, i) => f -> i.toLong }.toMap
   }
 }

@@ -123,10 +123,12 @@ object RplCli {
               LinkOps.latestPerKey(df, Seq("subject"),
                 Seq("epoch_ms", "finding_seq"))
             else df
-          val sp = graft.Spider(spark, args(1))
-          sp.addFoundNodes(pre(dioF))
-          sp.addFoundNodes(pre(daoF))
-          println(s"""{"ingested_dio":${dioF.count()},"ingested_dao":${daoF.count()}}""")
+          persisting(dioF, daoF) {
+            val sp = graft.Spider(spark, args(1))
+            sp.addFoundNodes(pre(dioF))
+            sp.addFoundNodes(pre(daoF))
+            println(s"""{"ingested_dio":${dioF.count()},"ingested_dao":${daoF.count()}}""")
+          }
       }
       spark.stop()
     case Some("snapshot") =>
@@ -153,6 +155,16 @@ object RplCli {
       val (dioF0, daoF0) = ContikiNg.readLogs(spark, opts.path, opts.head)
       cis(spark, dioF0, daoF0, opts)
       spark.stop()
+  }
+
+  /** Runs `body` with `frames` persisted, so a body that reads a frame
+    * several times parses or filters it once, and releases them after.
+    * [[ContikiNg.readLogs]] frames are lazy; the cache belongs here, with
+    * the caller that reuses them. */
+  private def persisting[T](frames: DataFrame*)(body: => T): T = {
+    frames.foreach(_.persist())
+    try body
+    finally frames.foreach(_.unpersist())
   }
 
   /** The reference's derived start order (CLI.hs:134-136): DAO subjects
@@ -191,53 +203,55 @@ object RplCli {
     }
     val dioF = preFilter(dioF0)
     val daoF = preFilter(daoF0)
-    val interval = intervalOf(opts)
-    // One combined start set for BOTH layer queries (CLI.hs:129-137:
-    // starts = sortDAONodes dao_nodes ++ dio_nodes). Kept as a DataFrame
-    // semi-join input — never collected to the driver (the loaded node
-    // set is unbounded at scale); BFS is set-based so the reference's
-    // start ORDER (pinned by [[sortedStarts]]) does not change results.
-    val startsDf =
-      if (opts.startsFrom.nonEmpty) {
-        import spark.implicits._
-        opts.startsFrom.toDF("node_id")
-      } else daoF.select(col("subject"))
-        .union(dioF.select(col("subject"))).distinct()
-        .toDF("node_id")
-    val dioG = GetSnapshot.ofStarts(spark, dioF, startsDf,
-      Query[String](Nil, interval, unifier = Rpl.DioUnifier))
-    val daoG = GetSnapshot.ofStarts(spark, daoF, startsDf,
-      Query[String](Nil, interval, unifier = Rpl.daoUnifier))
-    val combined = Rpl.combineGraphs(dioG, daoG)
+    persisting(dioF, daoF) {
+      val interval = intervalOf(opts)
+      // One combined start set for BOTH layer queries (CLI.hs:129-137:
+      // starts = sortDAONodes dao_nodes ++ dio_nodes). Kept as a DataFrame
+      // semi-join input — never collected to the driver (the loaded node
+      // set is unbounded at scale); BFS is set-based so the reference's
+      // start ORDER (pinned by [[sortedStarts]]) does not change results.
+      val startsDf =
+        if (opts.startsFrom.nonEmpty) {
+          import spark.implicits._
+          opts.startsFrom.toDF("node_id")
+        } else daoF.select(col("subject"))
+          .union(dioF.select(col("subject"))).distinct()
+          .toDF("node_id")
+      val dioG = GetSnapshot.ofStarts(spark, dioF, startsDf,
+        Query[String](Nil, interval, unifier = Rpl.DioUnifier))
+      val daoG = GetSnapshot.ofStarts(spark, daoF, startsDf,
+        Query[String](Nil, interval, unifier = Rpl.daoUnifier))
+      val combined = Rpl.combineGraphs(dioG, daoG)
 
-    opts.mode match {
-      case "summary" =>
-        val s = Rpl.dodagSummary(daoG).collect()(0)
-        println(s"""{"node_num":${s.getAs[Long]("node_num")},"edge_num":${s.getAs[Long]("edge_num")},"depth":${s.getAs[Long]("depth")},"root":"${s.getAs[String]("root")}","graph_ts":${s.getAs[Long]("graph_ts")},"combined_nodes":${combined.nodes.count()},"combined_links":${combined.links.count()}}""")
-      case "nodes" =>
-        combined.nodes.orderBy("node_id").select(to_json(struct(col("*"))))
-          .collect().foreach(r => println(r.getString(0)))
-      case "links" =>
-        combined.links.orderBy("source_node", "dest_node")
-          .select(to_json(struct(col("*"))))
-          .collect().foreach(r => println(r.getString(0)))
-      case "graphml" =>
-        println(graft.io.GraphMl.write(combined))
-      case "unifylog" =>
-        // the reference Weaver's per-decision debug lines
-        // (Weaver.hs:186-189), one per unordered pair per layer —
-        // forensics for "why did these samples become that link"
-        Seq("dio" -> (dioF, Rpl.DioUnifier: graft.operators.LinkUnifier),
-            "dao" -> (daoF, Rpl.daoUnifier: graft.operators.LinkUnifier))
-          .foreach { case (layer, (f, u)) =>
-            graft.operators.Weave
-              .unificationLog(f.filter(interval.predicate(col("epoch_ms"))),
-                unifier = u)
-              .orderBy(col("pair_lo"), col("pair_hi"))
-              .select(col("log_line")).collect()
-              .foreach(r => println(s"[$layer] ${r.getString(0)}"))
-          }
-      case other => System.err.println(s"unknown mode: $other"); sys.exit(2)
+      opts.mode match {
+        case "summary" =>
+          val s = Rpl.dodagSummary(daoG).collect()(0)
+          println(s"""{"node_num":${s.getAs[Long]("node_num")},"edge_num":${s.getAs[Long]("edge_num")},"depth":${s.getAs[Long]("depth")},"root":"${s.getAs[String]("root")}","graph_ts":${s.getAs[Long]("graph_ts")},"combined_nodes":${combined.nodes.count()},"combined_links":${combined.links.count()}}""")
+        case "nodes" =>
+          combined.nodes.orderBy("node_id").select(to_json(struct(col("*"))))
+            .collect().foreach(r => println(r.getString(0)))
+        case "links" =>
+          combined.links.orderBy("source_node", "dest_node")
+            .select(to_json(struct(col("*"))))
+            .collect().foreach(r => println(r.getString(0)))
+        case "graphml" =>
+          println(graft.io.GraphMl.write(combined))
+        case "unifylog" =>
+          // the reference Weaver's per-decision debug lines
+          // (Weaver.hs:186-189), one per unordered pair per layer —
+          // forensics for "why did these samples become that link"
+          Seq("dio" -> (dioF, Rpl.DioUnifier: graft.operators.LinkUnifier),
+              "dao" -> (daoF, Rpl.daoUnifier: graft.operators.LinkUnifier))
+            .foreach { case (layer, (f, u)) =>
+              graft.operators.Weave
+                .unificationLog(f.filter(interval.predicate(col("epoch_ms"))),
+                  unifier = u)
+                .orderBy(col("pair_lo"), col("pair_hi"))
+                .select(col("log_line")).collect()
+                .foreach(r => println(s"[$layer] ${r.getString(0)}"))
+            }
+        case other => System.err.println(s"unknown mode: $other"); sys.exit(2)
+      }
     }
   }
 }

@@ -230,9 +230,11 @@ object History {
       interval: Interval, policy: FoundNodePolicy): DataFrame =
     Weave.retainFindings(read(spark, tableDir, interval), policy)
 
-  /** Small-file compaction for the append-only history table. Blind
-    * streaming/CLI appends land one parquet file per batch per day;
-    * after N appends an interval read opens N files per partition —
+  /** Small-file compaction for the append-only history table. Every
+    * streaming/CLI append writes one parquet file per write task per day
+    * that task holds rows for — several files per batch per day, since
+    * a batch's rows are spread over its scan's tasks; after N appends an
+    * interval read opens at least N files per partition —
     * the classic small-file tax (driver listing + per-file open cost
     * dominate the actual scan at 100 TB). Rewrites each day partition
     * into `filesPerDay` files via a staging directory + atomic-ish

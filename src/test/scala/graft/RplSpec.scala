@@ -178,4 +178,134 @@ class RplSpec extends SparkSpec {
         Seq("dio://[fd00::201:1:1:1]")
     }
   }
+
+  describe("ContikiNg.readLogs on generated syslog (no fixtures)") {
+    import org.apache.commons.io.FileUtils
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.input_file_name
+    import graft.model.Findings
+    import graft.sources.History
+
+    val head = ContikiNg.SyslogHead(2019)
+
+    /** Three DIO blocks and one DAO route table, on addresses unique to
+      * file `k`: 3 DIO and 3 DAO findings, block indices 0-3. */
+    def syslog(k: Int): String = {
+      def addr(i: Int) = f"fd00::212:4b00:${0x100 * (k + 1) + i}%x"
+      def linkLocal(i: Int) = f"fe80::212:4b00:${0x100 * (k + 1) + i}%x"
+      val h = f"Jan  1 00:$k%02d:00 mote$k contiki: [INFO: RPL       ] "
+      val dio = (1 to 3).map { i =>
+        val rank = 128 + 256 * i
+        s"${h}nbr: own state, addr ${addr(i)}, DAG state: Joined, " +
+          s"MOP 2 OCP 1 rank $rank max-rank 65535, dioint 14\n" +
+          f"${h}nbr: ${linkLocal(i - 1)}  ${rank - 256}%5d, " +
+          f"${130 + i}%5d => $rank%5d -- 2 r a p\n" +
+          s"${h}nbr: end of list\n"
+      }
+      val dao = (1 to 3).map(i => s"${h}links: ${addr(i)}  to " +
+        s"${addr(i - 1)} (lifetime: ${1200 + i} seconds)\n")
+      dio.mkString + s"${h}links: 3 routing links in total (DODAG root)\n" +
+        s"${h}links: ${addr(0)}  (DODAG root)\n" + dao.mkString +
+        s"${h}links: end of list\n"
+    }
+
+    /** Names that URI-encode differently (a space, a literal `%20`, a
+      * non-ASCII letter), an empty file that sorts between non-empty ones
+      * (so ranking it would shift every later rank), and a subdirectory.
+      * The non-ASCII name is left out when the JVM's file-name charset
+      * cannot represent it (a POSIX/C locale). */
+    def logDir(): java.nio.file.Path = {
+      val dir = Files.createTempDirectory("graft_readlogs")
+      val names = Seq("a b.log", "b-empty.log", "c%20.log", "dé.log")
+        .filter(java.nio.charset.Charset.forName(
+          System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_))
+      names.zipWithIndex.foreach { case (n, k) =>
+        Files.writeString(dir.resolve(n), if (n.contains("empty")) "" else syslog(k))
+      }
+      Files.createDirectories(dir.resolve("sub"))
+      Files.writeString(dir.resolve("sub/e.log"), syslog(9))
+      dir
+    }
+
+    /** The rows readLogs must produce: each file's parseText findings,
+      * finding_seq = (rank << 30) | block, where rank is the file's index
+      * among the files that yield a row (non-empty), in sorted
+      * `input_file_name()` order. */
+    def expected(path: String): (Seq[FoundNode], Seq[FoundNode]) = {
+      val uris = spark.read.option("wholetext", "true").text(path)
+        .select(input_file_name()).collect().map(_.getString(0)).sorted
+      val parsed = uris.toSeq.zipWithIndex.map { case (u, rank) =>
+        val r = ContikiNg.parseText(
+          Files.readString(Paths.get(new java.net.URI(u).getPath)), head)
+        r.warnings shouldBe empty
+        def packed(fs: Seq[FoundNode]) =
+          fs.map(f => f.copy(findingSeq = (rank.toLong << 30) | f.findingSeq))
+        (packed(r.dios), packed(r.daos))
+      }
+      (parsed.flatMap(_._1), parsed.flatMap(_._2))
+    }
+
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+      df.collect().toSeq.sortBy(r => (r.getAs[Long]("finding_seq"),
+        r.getAs[String]("subject")))
+
+    it("matches per-file parseText with finding_seq ranked over the " +
+        "non-empty files in URI order, for a dir, a glob and a relative path") {
+      val dir = logDir()
+      try {
+        val relative = Paths.get("").toAbsolutePath.relativize(dir).toString
+        relative should not startWith "/"
+        for (path <- Seq(dir.toString, s"$dir/*", relative)) {
+          val (wantDio, wantDao) = expected(path)
+          // dense ranks: the empty file, sorted between two others, has none
+          val ranks = (wantDio ++ wantDao).map(_.findingSeq >> 30).distinct.sorted
+          ranks shouldBe ranks.indices.map(_.toLong)
+          ranks.size should be >= 2
+          val (dio, dao) = ContikiNg.readLogs(spark, path, head)
+          rows(dio) shouldBe rows(Findings.fromSeq(spark, wantDio))
+          rows(dao) shouldBe rows(Findings.fromSeq(spark, wantDao))
+          dio.count() shouldBe 3 * ranks.size
+        }
+        // the glob reaches the subdirectory's file, the dir read does not
+        expected(s"$dir/*")._1.map(_.findingSeq >> 30).distinct.size shouldBe
+          expected(dir.toString)._1.map(_.findingSeq >> 30).distinct.size + 1
+      } finally FileUtils.deleteDirectory(dir.toFile)
+    }
+
+    it("runs no job and caches nothing; the append is one job") {
+      val dir = logDir()
+      val table = Files.createTempDirectory("graft_readlogs_hist").toString + "/t"
+      try {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        var frames: (org.apache.spark.sql.DataFrame,
+          org.apache.spark.sql.DataFrame) = null
+        jobsDuring { frames = ContikiNg.readLogs(spark, dir.toString, head) } shouldBe 0
+        spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+        val (dio, dao) = frames
+        jobsDuring {
+          History.appendBatch(dio.unionByName(dao), table, 1L)
+        } shouldBe 1
+        spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+        val (wantDio, wantDao) = expected(dir.toString)
+        History.read(spark, table).count() shouldBe wantDio.size + wantDao.size
+      } finally {
+        FileUtils.deleteDirectory(dir.toFile)
+        FileUtils.deleteDirectory(Paths.get(table).getParent.toFile)
+      }
+    }
+
+    it("refuses more than 2^13 files before any job runs") {
+      val dir = Files.createTempDirectory("graft_readlogs_many")
+      try {
+        (0 to (1 << 13)).foreach(i => Files.writeString(dir.resolve(s"f$i.log"), "x"))
+        var err: Throwable = null
+        jobsDuring {
+          err = intercept[IllegalArgumentException] {
+            ContikiNg.readLogs(spark, dir.toString, head)
+          }
+        } shouldBe 0
+        err.getMessage should include("split the glob")
+      } finally FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }
