@@ -2203,9 +2203,10 @@ object SparkEntry {
     // is order-independent and hash-checkable; the oracle unrolls the
     // same three iterations verbatim. Dangling mass (n50-n59 never
     // appear as subjects) redistributes uniformly, exercising the
-    // correction path. Per iteration: ONE shuffle (the contribution
-    // agg on dst, map-side partial sums absorb power-law in-degree) +
-    // two 1x1 broadcast scalar combines.
+    // correction path. Per iteration: one join of the edges against
+    // the rank frame, whose rows carry each node's out-degree, the
+    // contribution agg on dst (map-side partial sums absorb power-law
+    // in-degree) and one 1x1 broadcast scalar (dangling mass, n).
     "q172_pagerank" -> ((s, d) =>
       graft.operators.PageRank.pageRank(
         EventGraph.linkSamples(s, d)
@@ -2236,9 +2237,10 @@ object SparkEntry {
     // TRUSTRANK (operators/PageRank.personalizedPageRank): seeded
     // teleport — trust propagates from a hand-vetted seed whitelist
     // (n0-n4 here), the Gyongyi 2004 web-spam demotion construction.
-    // Same exact micro-integer recurrence and shuffle shape as q172;
-    // non-seed nodes are ranked purely by seeded mass reaching them,
-    // and dangling mass returns to the seeds. Seeds broadcast.
+    // Same exact micro-integer recurrence and loop as q172; non-seed
+    // nodes are ranked purely by seeded mass reaching them, and
+    // dangling mass returns to the seeds. The seeds join the node
+    // frame once; |S| is summed from its seed flags.
     "q174_trustrank" -> ((s, d) => {
       import s.implicits._
       graft.operators.PageRank.personalizedPageRank(
@@ -2292,8 +2294,9 @@ object SparkEntry {
     // WEIGHTED PAGERANK (operators/PageRank.pageRankWeighted): rank
     // mass leaves proportionally to edge weight — here the OBSERVATION
     // MULTIPLICITY of each (src,dst) pair, the natural web-link-graph
-    // form (q172 dedups it away). Same exact integer discipline;
-    // per-edge pr*w product guarded in-plan.
+    // form (q172 dedups it away). The same loop as q172 with these
+    // weights in place of its w = 1; the per-edge pr*w product is
+    // guarded in-plan.
     "q178_weighted_pagerank" -> ((s, d) =>
       graft.operators.PageRank.pageRankWeighted(
         EventGraph.linkSamples(s, d)
@@ -2333,9 +2336,10 @@ object SparkEntry {
       // materialized once: the PPR recurrence stays lazy below
       // CutEvery iterations (the measured-fast default for cheap edge
       // inputs), but THIS edge frame is derived work (HTML synthesis +
-      // link explode + URL host parse) consumed by seeds, nodes, deg
-      // and every iteration — replaying it 5x costs more than one
-      // localCheckpoint (A/B standalone warm: 2.8-3.5 s -> 1.8-2.1 s)
+      // link explode + URL host parse) consumed by the seeds, the node
+      // frame and every iteration — replaying it per consumer costs more
+      // than one localCheckpoint (A/B standalone warm, with the earlier
+      // per-step degree join: 2.8-3.5 s -> 1.8-2.1 s)
       val links = graft.util.Checkpoints.materialize(
         withHost.select(col("host").as("src"),
             explode(graft.text.Html.links(html)).as("url"))

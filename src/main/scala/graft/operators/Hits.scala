@@ -118,13 +118,8 @@ object Hits {
           s"coalesce(araw, 0L) div greatest(1L, atot div ${scale}L)" +
             " AS a")
       if (doCut) nextAuth = cut(nextAuth)
-      if (tolMicro > 0L) {
-        val d = nextAuth.select(col("id"), col("a").as("na"))
-          .join(auth.select(col("id"), col("a").as("pa")), Seq("id"))
-          .agg(coalesce(sum(abs(col("na") - col("pa"))), lit(0L)).as("d"))
-          .collect()(0).getLong(0) // 1x1 convergence read
-        if (d <= tolMicro) converged = true
-      }
+      if (tolMicro > 0L && PageRank.l1Delta(nextAuth, auth, "a") <= tolMicro)
+        converged = true
       auth = nextAuth
       i += 1
     }

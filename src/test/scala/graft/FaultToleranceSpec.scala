@@ -73,6 +73,25 @@ class FaultToleranceSpec extends SparkSpec {
     }
   }
 
+  it("PageRank's reliable cuts are durable: a 10-iteration run survives " +
+      "losing its input AND every block the run left persisted") {
+    val (edges, dataDir) = edgesOnDisk()
+    val ckpt = tmp("graft_ft_ckpt_durable")
+    val expected = PageRank.pageRank(edges, 10)
+      .collect().map(_.toString).sorted.toSeq
+    withCheckpointDir(ckpt) {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val pr = PageRank.pageRank(edges, 10)
+      deleteData(dataDir)
+      // a local cut's only copy is its persisted blocks; dropping them
+      // leaves nothing to read unless the cut went to durable storage
+      sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+        .values.foreach(_.unpersist(blocking = true))
+      pr.collect().map(_.toString).sorted.toSeq shouldBe expected
+    }
+  }
+
   it("BFS with a reliable checkpointDir survives losing its input " +
       "files (forced distributed path)") {
     import spark.implicits._

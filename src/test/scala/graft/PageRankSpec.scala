@@ -1,6 +1,9 @@
 package graft
 
-import graft.operators.PageRank
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.rand
+
+import graft.operators.{Hits, PageRank}
 
 /** PageRank's integer recurrence, pinned against a driver-local
   * simulation of the same arithmetic — any drift between the plan and
@@ -145,7 +148,7 @@ class PageRankSpec extends SparkSpec {
       ("a", "sink")) // dangling
 
     it("matches the driver-local simulation of the seeded recurrence") {
-      for (iters <- Seq(0, 1, 3)) {
+      for (iters <- Seq(0, 1, 3, 10)) { // 10 > CutEvery: cut path
         runSeeded(graph, Seq("a"), iters) shouldBe
           simulateSeeded(graph, Set("a"), iters)
       }
@@ -256,7 +259,7 @@ class PageRankSpec extends SparkSpec {
 
     it("matches the driver-local simulation of the weighted recurrence") {
       import spark.implicits._
-      for (iters <- Seq(1, 3)) {
+      for (iters <- Seq(1, 3, 10)) { // 10 > CutEvery: cut path
         val got = PageRank.pageRankWeighted(
             graph.toDF("src", "dst", "w"), iterations = iters)
           .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -286,6 +289,28 @@ class PageRankSpec extends SparkSpec {
       got shouldBe simulateWeighted(graph, 1)
     }
 
+    it("fails loudly when a summed edge weight times scale exceeds Long " +
+        "range, and accepts the largest weight that fits") {
+      import spark.implicits._
+      val bound = Long.MaxValue / 1000000000000L
+      def ranks(e: Seq[(String, String, Long)], iters: Int) =
+        PageRank.pageRankWeighted(e.toDF("src", "dst", "w"),
+          iterations = iters).collect()
+      def messages(t: Throwable): List[String] =
+        if (t == null) Nil
+        else String.valueOf(t.getMessage) :: messages(t.getCause)
+      for (iters <- Seq(1, 10)) { // uncut and cut paths
+        val big = Seq(("a", "b", bound + 1), ("b", "a", 1L))
+        messages(intercept[Exception](ranks(big, iters)))
+          .exists(_.contains("rescale weights")) shouldBe true
+        // duplicate rows sum their weights before the guard
+        val dup = Seq(("a", "b", bound / 2 + 1), ("a", "b", bound / 2 + 1))
+        messages(intercept[Exception](ranks(dup, iters)))
+          .exists(_.contains("rescale weights")) shouldBe true
+        ranks(Seq(("a", "b", bound), ("b", "a", 1L)), iters) should have size 2
+      }
+    }
+
     it("shifts rank toward the heavily-weighted target") {
       import spark.implicits._
       val skew = Seq(("a", "b", 99L), ("a", "c", 1L))
@@ -293,6 +318,79 @@ class PageRankSpec extends SparkSpec {
         iterations = 2).collect()
         .map(r => (r.getString(0), r.getLong(1))).toMap
       pr("b") should be > pr("c")
+    }
+  }
+
+  /** A seeded random multigraph (duplicates and self-loops included),
+    * its weighted twin and a seed set, for the cross-variant cases. */
+  private def randomGraph(): (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(41)
+    val edges = (1 to 120).map(_ =>
+      (s"n${rnd.nextInt(30)}", s"n${rnd.nextInt(30)}",
+        1L + rnd.nextInt(9).toLong))
+    (edges.map(e => (e._1, e._2)).toDF("src", "dst"),
+      edges.toDF("src", "dst", "w"),
+      Seq("n0", "n7", "n19").toDF("id"))
+  }
+
+  /** Every exact ranker on `plain`/`weighted`, as sorted row strings. */
+  private def allRanks(plain: DataFrame, weighted: DataFrame,
+      seeds: DataFrame): Seq[Seq[String]] = {
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    Seq(rows(PageRank.pageRank(plain)),
+      rows(PageRank.pageRank(plain, iterations = 6)), // cut path
+      rows(PageRank.personalizedPageRank(plain, seeds)),
+      rows(PageRank.pageRankWeighted(weighted)),
+      rows(Hits.hits(plain)))
+  }
+
+  describe("the exact rankers") {
+
+    it("return identical rows under any shuffle partitioning, with AQE " +
+        "on or off, and with the edge rows in any partition order") {
+      val (plain, weighted, seeds) = randomGraph()
+      val expected = allRanks(plain, weighted, seeds)
+      val keys = Seq("spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      try {
+        for (parts <- Seq(1, 7); aqe <- Seq(true, false);
+            reshuffle <- Seq(false, true)) {
+          spark.conf.set(keys(0), parts.toLong)
+          spark.conf.set(keys(1), aqe)
+          def shuffled(df: DataFrame) =
+            if (reshuffle) df.repartition(5, rand(parts * 2 + 1)) else df
+          withClue(s"partitions=$parts aqe=$aqe reshuffled=$reshuffle: ") {
+            allRanks(shuffled(plain), shuffled(weighted), seeds) shouldBe
+              expected
+          }
+        }
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+    it("run no more Spark jobs per collect than the three separate " +
+        "per-variant loops they replaced") {
+      val (plain, weighted, seeds) = randomGraph()
+      // jobs per collect measured on the per-variant loops (each with its
+      // own degree join and dangling anti-join), on this graph and this
+      // session: 3 iterations run uncut, 10 cut every iteration
+      val budget = Seq[(String, Int => DataFrame, Int, Int)](
+        ("pageRank", PageRank.pageRank(plain, _), 22, 165),
+        ("personalizedPageRank",
+          PageRank.personalizedPageRank(plain, seeds, _), 34, 156),
+        ("pageRankWeighted", PageRank.pageRankWeighted(weighted, _), 25, 171))
+      val over = budget.flatMap { case (name, rank, uncut, cut) =>
+        Seq(3 -> uncut, 10 -> cut).flatMap { case (iters, max) =>
+          val jobs = jobsDuring(rank(iters).collect(): Unit)
+          info(s"$name, $iters iterations: $jobs jobs (budget $max)")
+          if (jobs > max) Some(s"$name@$iters: $jobs > $max") else None
+        }
+      }
+      over shouldBe empty
     }
   }
 }
