@@ -13,7 +13,10 @@ import graft.model.SnapshotGraph
   * measured summary size. No collect, no driver loops — at 100 TB
   * the findings table is the only big input, and it is touched exactly
   * twice (node summary, link samples), both with map-side partial
-  * aggregation.
+  * aggregation. That holds for these lazy plans, the distributed lane.
+  * The driver-sized `GetSnapshot` lane weaves the rows it has fetched
+  * with [[DriverWeave]] instead: driver loops in place of these
+  * aggregations and joins, checked against these plans row for row.
   *
   * Pipeline (Weaver.hs getSnapshot', 156-168):
   *   retain (policy) → [node summary + boundary] + [explode link samples →
@@ -40,7 +43,18 @@ final case class PolicyKeepN(n: Int) extends FoundNodePolicy {
   * Input `samples` columns: subject, target, link_state, epoch_ms,
   * link_attrs, sample_seq. `nodes` is the snapshot-node summary used by
   * negation. Output must keep the same sample columns (minus any
-  * strategy-internal ones). */
+  * strategy-internal ones).
+  *
+  * A unifier has two forms. [[unify]] is the lazy plan the distributed
+  * lane runs. `unifyOnDriver` is the form the driver-sized
+  * `GetSnapshot` lane runs over its fetched rows; its default runs
+  * [[unify]] over the local frames and collects (Spark jobs, the same
+  * rows), so a custom unifier such as `Rpl.DioUnifier` needs nothing
+  * more. [[StdUnifier]] and [[ListMergeUnifier]] group and negate in
+  * driver loops instead and run no job, as long as every grouping key
+  * has a type whose JVM equality is Spark's grouping equality
+  * ([[DriverWeave.groupsOnDriver]]); other keys, such as a floating
+  * `subId`, take the default form. */
 trait LinkUnifier {
   def unify(samples: DataFrame, nodes: DataFrame): DataFrame
   /** The unified samples BEFORE any negation pruning — used by
@@ -50,6 +64,26 @@ trait LinkUnifier {
     * same frame as [[unify]]. */
   def unifyRaw(samples: DataFrame, nodes: DataFrame): DataFrame =
     unify(samples, nodes)
+  /** [[unify]] over the driver-sized lane's local `samples` frame and
+    * driver-woven `nodes`, as rows on the driver. */
+  private[graft] def unifyOnDriver(samples: DataFrame,
+      nodes: DriverWeave.Nodes): DriverWeave.Table =
+    DriverWeave.Table(unify(samples, nodes.frame))
+}
+
+private[operators] object LinkUnifier {
+  /** `samples` plus the swap-insensitive pair key (pair_lo, pair_hi) and
+    * one `__sub<i>` column per `subId` column; returns the frame and the
+    * key names. */
+  def keyed(samples: DataFrame, subId: Seq[Column]): (DataFrame, Seq[String]) = {
+    val withKeys = samples
+      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
+      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
+    val subNames = subId.indices.map(i => s"__sub$i")
+    (subNames.zip(subId).foldLeft(withKeys) {
+      case (df, (n, c)) => df.withColumn(n, c)
+    }, Seq("pair_lo", "pair_hi") ++ subNames)
+  }
 }
 
 /** The standard unifier (`unifyStd`, Unify.hs:169-193):
@@ -78,20 +112,29 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
   override def unifyRaw(samples: DataFrame, nodes: DataFrame): DataFrame =
     copyWithNegation(false).unify(samples, nodes)
   override def unify(samples: DataFrame, nodes: DataFrame): DataFrame = {
-    val withKeys = samples
-      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
-      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
-    val subNames = subId.indices.map(i => s"__sub$i")
-    val keyed = subNames.zip(subId).foldLeft(withKeys) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }
+    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
     val merged = postMerge(LinkOps.latestPerKey(
-      keyed, Seq("pair_lo", "pair_hi") ++ subNames,
-      Seq("epoch_ms", "sample_seq")))
+      keyed, keys, Seq("epoch_ms", "sample_seq")))
     val out =
       if (!negation) merged
       else Weave.negateAgainstEnds(merged, nodes)
-    out.drop((Seq("pair_lo", "pair_hi") ++ subNames): _*)
+    out.drop(keys: _*)
+  }
+  /** The keys fold over the local samples; the latest sample per key is
+    * a driver loop, then `postMerge` runs over the local frame of the
+    * winners (a projection folds there with no job) and negation is a
+    * driver loop again. A subclass keeps the default form, which runs
+    * its own [[unify]]. */
+  override private[graft] def unifyOnDriver(samples: DataFrame,
+      nodes: DriverWeave.Nodes): DriverWeave.Table = {
+    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
+    if (getClass != classOf[StdUnifier] ||
+        !DriverWeave.groupsOnDriver(keyed.schema, keys))
+      return super.unifyOnDriver(samples, nodes)
+    val winners = DriverWeave.latestPerKey(DriverWeave.Table(keyed), keys,
+      Seq("epoch_ms", "sample_seq"))
+    nodes.negate(postMerge(winners.frame(samples.sparkSession)), negation)
+      .without(keys)
   }
 }
 
@@ -133,43 +176,61 @@ class ListMergeUnifier(
     copyWithNegation(false).unify(samples, nodes)
 
   override def unify(samples: DataFrame, nodes: DataFrame): DataFrame = {
-    val dataCols = samples.columns.toSeq
-    val withKeys = samples
-      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
-      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
-    val subNames = subId.indices.map(i => s"__sub$i")
-    val keyed = subNames.zip(subId).foldLeft(withKeys) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }
-    val payload = struct(dataCols.map(col).toIndexedSeq: _*)
-    // collect_list skips nulls, so `when` without otherwise collects
-    // exactly the side's samples
-    def sideList(cond: Column): Column =
-      collect_list(when(cond,
-        struct(col("epoch_ms").as("o1"), col("sample_seq").as("o2"),
-          payload.as("s"))))
-    def sortedSamples(c: Column): Column = {
+    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
+    val (lo, hi) = sides(samples)
+    def sorted(c: Column): Column = {
       val cmp = (l: Column, r: Column) =>
         when(l("o1") < r("o1"), -1).when(l("o1") > r("o1"), 1)
           .when(l("o2") < r("o2"), -1).when(l("o2") > r("o2"), 1)
           .otherwise(0)
       transform(array_sort(c, cmp), x => x("s"))
     }
-    val grouped = keyed
-      .groupBy((Seq("pair_lo", "pair_hi") ++ subNames).map(col).toIndexedSeq: _*)
-      .agg(sideList(col("subject") === col("pair_lo")).as("__lo"),
-        sideList(col("subject") === col("pair_hi")).as("__hi"))
-      .withColumn("__m",
-        merge(sortedSamples(col("__lo")), sortedSamples(col("__hi"))))
-      .filter(col("__m").isNotNull)
-    val expanded = grouped.select(
-      col("pair_lo") +: col("pair_hi") +: subNames.map(col) :+
-        col("__m.*"): _*)
-    val out =
-      if (!negation) expanded
-      else Weave.negateAgainstEnds(expanded, nodes)
-    out.drop((Seq("pair_lo", "pair_hi") ++ subNames): _*)
+    val out = mergeSides(keyed.groupBy(keys.map(col).toIndexedSeq: _*)
+      .agg(collect_list(lo).as("__lo"), collect_list(hi).as("__hi")),
+      keys, sorted)
+    (if (!negation) out else Weave.negateAgainstEnds(out, nodes))
+      .drop(keys: _*)
   }
+
+  /** The keys and side elements fold over the local samples; a driver
+    * loop builds each group's side lists, already sorted, and one
+    * folded projection applies `merge`; negation is a driver loop. A
+    * subclass keeps the default form, which runs its own [[unify]]. */
+  override private[graft] def unifyOnDriver(samples: DataFrame,
+      nodes: DriverWeave.Nodes): DriverWeave.Table = {
+    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
+    if (getClass != classOf[ListMergeUnifier] ||
+        !DriverWeave.groupsOnDriver(keyed.schema, keys))
+      return super.unifyOnDriver(samples, nodes)
+    val (lo, hi) = sides(samples)
+    val lists = DriverWeave.sideLists(DriverWeave.Table(
+      keyed.select(keys.map(col) :+ lo.as("__lo") :+ hi.as("__hi"): _*)),
+      keys.size)
+    nodes.negate(mergeSides(lists.frame(samples.sparkSession), keys,
+      identity), negation).without(keys)
+  }
+
+  /** A sample's element of the lo and the hi side list: the sample
+    * struct with its (epoch_ms, sample_seq) order key, null off that
+    * side — `collect_list` skips nulls, so each list holds exactly its
+    * side's samples. */
+  private def sides(samples: DataFrame): (Column, Column) = {
+    val payload = struct(samples.columns.map(col).toIndexedSeq: _*)
+    def side(key: String) = when(col("subject") === col(key),
+      struct(col("epoch_ms").as("o1"), col("sample_seq").as("o2"),
+        payload.as("s")))
+    (side("pair_lo"), side("pair_hi"))
+  }
+
+  /** `merge` over each group's side lists, once `sorted` turns them
+    * into samples ascending by (epoch_ms, sample_seq); drops groups it
+    * merges to null. */
+  private def mergeSides(grouped: DataFrame, keys: Seq[String],
+      sorted: Column => Column): DataFrame =
+    grouped
+      .withColumn("__m", merge(sorted(col("__lo")), sorted(col("__hi"))))
+      .filter(col("__m").isNotNull)
+      .select(keys.map(col) :+ col("__m.*"): _*)
 }
 
 object ListMergeUnifier {
@@ -342,30 +403,34 @@ object Weave {
       unifier: LinkUnifier = new StdUnifier(),
       extraVisited: Option[DataFrame] = None): (SnapshotGraph, WeaveStats) = {
     val retained = retainFindings(findings, policy).persist()
-    val nodes = snapshotNodes(retained, extraVisited)
-    val samples = linkSamples(retained).persist()
-    val unifiedRaw = unifier.unifyRaw(samples, nodes)
-    val unified = unifier.unify(samples, nodes).persist()
-    val g = SnapshotGraph(nodes, snapshotLinks(retained, nodes, unifier))
-    val nUnifiedRaw = unifiedRaw.count()
-    val nUnified = unified.count()
-    val nLinks = g.links.count()
-    val stats = WeaveStats(
-      nFindings = findings.count(),
-      nRetained = retained.count(),
-      nSamples = samples.count(),
-      nUnifiedPairs = nUnified,
-      nNegated = nUnifiedRaw - nUnified,
-      nUnusedDropped =
-        nUnified - nLinks,
-      nLinks = nLinks,
-      nNodes = g.nodes.count())
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    stats.logLines.foreach(log.info(_))
-    retained.unpersist()
-    samples.unpersist()
-    unified.unpersist()
-    (g, stats)
+    // released on every exit: a unifier or a count that throws would
+    // otherwise leave all three cached
+    val held = scala.collection.mutable.ArrayBuffer(retained)
+    try {
+      val nodes = snapshotNodes(retained, extraVisited)
+      val samples = linkSamples(retained).persist()
+      held += samples
+      val unifiedRaw = unifier.unifyRaw(samples, nodes)
+      val unified = unifier.unify(samples, nodes).persist()
+      held += unified
+      val g = SnapshotGraph(nodes, snapshotLinks(retained, nodes, unifier))
+      val nUnifiedRaw = unifiedRaw.count()
+      val nUnified = unified.count()
+      val nLinks = g.links.count()
+      val stats = WeaveStats(
+        nFindings = findings.count(),
+        nRetained = retained.count(),
+        nSamples = samples.count(),
+        nUnifiedPairs = nUnified,
+        nNegated = nUnifiedRaw - nUnified,
+        nUnusedDropped =
+          nUnified - nLinks,
+        nLinks = nLinks,
+        nNodes = g.nodes.count())
+      val log = org.slf4j.LoggerFactory.getLogger(getClass)
+      stats.logLines.foreach(log.info(_))
+      (g, stats)
+    } finally held.foreach(_.unpersist())
   }
 
   /** Full snapshot (Weaver.hs getSnapshot', 156-168): the nodes step
@@ -386,8 +451,12 @@ object Weave {
     * timestamps), and materialize the link states. Columns: source_node,
     * dest_node, is_directed, epoch_ms, link_attrs, tz. */
   def snapshotLinks(retained: DataFrame, nodes: DataFrame,
-      unifier: LinkUnifier): DataFrame = {
-    val unified = unifier.unify(linkSamples(retained), nodes)
+      unifier: LinkUnifier): DataFrame =
+    linkColumns(unifier.unify(linkSamples(retained), nodes))
+
+  /** The link rows of unified samples: LinkState materialization and
+    * the snapshot's link columns. */
+  private[operators] def linkColumns(unified: DataFrame): DataFrame = {
     val materialized = LinkOps.materializeLinks(unified)
     if (materialized.columns.contains("tz"))
       materialized.select(col("source_node"), col("dest_node"),

@@ -3,7 +3,7 @@ package graft.query
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import graft.model.SnapshotGraph
 import graft.operators._
 import graft.time.Interval
@@ -48,19 +48,23 @@ case class Query[N](
   *    `Bfs.LocalFindings` findings (one bounded `limit(n+1).collect()`
   *    fetch) and the start ids unify with the subject type
   *    (`Bfs.localIdType`), the retained rows are fetched once, the BFS
-  *    runs on the driver (`Bfs.localHops`), and the weave
-  *    ([[graft.operators.Weave.snapshotNodes]], then
-  *    [[graft.operators.Weave.snapshotLinks]] against the materialized
-  *    nodes) runs over local frames. The returned graph is backed by
-  *    local frames: reading it (GraphML, JSON) launches no job, and
-  *    nothing stays persisted. A query at that size is bound by per-job
-  *    overhead, not data: the BFS runs no job and each weave step runs
-  *    once.
+  *    runs on the driver (`Bfs.localHops`), and
+  *    [[graft.operators.DriverWeave]] weaves the fetched rows in plain
+  *    Scala, folding its projections over local frames: no job for
+  *    [[graft.operators.StdUnifier]] and
+  *    [[graft.operators.ListMergeUnifier]]. A custom unifier, or a
+  *    built-in one keyed on a type the driver does not group on (a
+  *    floating or binary `subId`), runs its own `unify` over the local
+  *    frames and collects. The returned graph is backed by local frames:
+  *    reading it (GraphML, JSON) launches no job, and nothing stays
+  *    persisted. A query at that size is bound by per-job overhead, not
+  *    data: the fetch is its only job.
   *  - distributed: past the bound (or with ids that do not unify) the
   *    retained frame is persisted, `Bfs.reachable` restricts it, and the
   *    lazy [[graft.operators.Weave.snapshot]] weaves it — the only path
-  *    for histories too big to fetch. The persisted frame lives as long
-  *    as the returned graph.
+  *    for histories too big to fetch, and the reference the driver weave
+  *    must match row for row. The persisted frame lives as long as the
+  *    returned graph.
   */
 object GetSnapshot {
 
@@ -95,7 +99,7 @@ object GetSnapshot {
   /** The driver-sized lane: None when the retained frame or the start
     * set exceeds `bound`, or when the ids do not unify. Otherwise the
     * distributed lane's BFS restriction, run over the fetched rows, and
-    * its weave, over local frames. */
+    * the driver weave of the reachable ones. */
   private def driverSized(spark: SparkSession, retained: DataFrame,
       startsDf: DataFrame, query: Query[_],
       bound: Int): Option[SnapshotGraph] = {
@@ -139,22 +143,10 @@ object GetSnapshot {
       !r.isNullAt(si) && visited.contains(id(r.get(si))))
     val withFindings = reachable.iterator.map(r => id(r.get(si))).toSet
     // Visited nodes without in-interval findings still need a row.
-    val bare = visited.asScala.iterator.filterNot(withFindings)
-      .map(v => Row(v)).toList
-
-    val findings = local(spark, reachable.toList, schema)
-    val nodes = materialize(Weave.snapshotNodes(findings, Some(
-      local(spark, bare, StructType(Seq(StructField("node_id", idT.get)))))))
-    Some(SnapshotGraph(nodes,
-      materialize(Weave.snapshotLinks(findings, nodes, query.unifier))))
+    val bare = visited.asScala.iterator.filterNot(withFindings).toSeq
+    Some(DriverWeave.snapshot(spark, reachable.toSeq, schema, bare, idT.get,
+      id, query.unifier))
   }
-
-  private def local(spark: SparkSession, rows: List[Row],
-      schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
-
-  private def materialize(df: DataFrame): DataFrame =
-    local(df.sparkSession, df.collect().toList, df.schema)
 
   private def distributed(retained0: DataFrame, starts0: DataFrame,
       query: Query[_]): SnapshotGraph = {

@@ -143,6 +143,58 @@ class FaultToleranceSpec extends SparkSpec {
     }
   }
 
+  /** `run`'s rows after its input under `dataDir` is deleted and every
+    * RDD the run left persisted is unpersisted: a local cut's only copy
+    * is its persisted blocks, so only cuts on durable storage leave
+    * anything to read. */
+  private def rowsAfterLosingAll(dataDir: String)(
+      run: => org.apache.spark.sql.DataFrame): Seq[String] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = run
+    deleteData(dataDir)
+    sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      .values.foreach(_.unpersist(blocking = true))
+    df.collect().map(_.toString).sorted.toSeq
+  }
+
+  it("BFS's reliable cuts are durable: the distributed rounds survive " +
+      "losing their input AND every block the run left persisted") {
+    import spark.implicits._
+    val (edges, dataDir) = edgesOnDisk()
+    def bfs() = Bfs.reachable(edges.select(col("src"), col("dst")),
+      Seq(1L).toDF("node_id"), localEdgeThreshold = 0)
+    val expected = bfs().collect().map(_.toString).sorted.toSeq
+    withCheckpointDir(tmp("graft_ft_ckpt_bfs_durable")) {
+      rowsAfterLosingAll(dataDir)(bfs()) shouldBe expected
+    }
+  }
+
+  it("SSSP's reliable cuts are durable: the rounds survive losing their " +
+      "input AND every block the run left persisted") {
+    val (edges, dataDir) = edgesOnDisk()
+    val wEdges = edges.selectExpr("cast(src as string) u",
+      "cast(dst as string) v", "w")
+    val expected = ShortestPaths.sssp(wEdges, "1")
+      .collect().map(_.toString).sorted.toSeq
+    withCheckpointDir(tmp("graft_ft_ckpt_sssp_durable")) {
+      rowsAfterLosingAll(dataDir)(ShortestPaths.sssp(wEdges, "1")) shouldBe
+        expected
+    }
+  }
+
+  it("connected components' reliable cuts are durable: the star rounds " +
+      "survive losing their input AND every block the run left persisted") {
+    val (edges, dataDir) = edgesOnDisk()
+    val pairs = edges.select(col("src").as("id1"), col("dst").as("id2"))
+    def cc() = graft.dedup.Dedup.clusterLabelsStar(pairs,
+      localFallbackEdges = 0L)
+    val expected = cc().collect().map(_.toString).sorted.toSeq
+    withCheckpointDir(tmp("graft_ft_ckpt_cc_durable")) {
+      rowsAfterLosingAll(dataDir)(cc()) shouldBe expected
+    }
+  }
+
   it("Checkpoints.cut(Some(dir)) truncates lineage MID-ITERATION: " +
       "rounds after the cut never replay the deleted source") {
     val (edges, dataDir) = edgesOnDisk()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, functions}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.io.GraphMl
@@ -363,8 +363,114 @@ class QuerySpec extends SparkSpec {
       jobsDuring { xml = GraphMl.write(g) } shouldBe 0
       xml should include ("<node id=\"n5\">")
       info(s"GetSnapshot ran $snapshotJobs jobs")
-      snapshotJobs should be <= 11
+      snapshotJobs should be <= 2 // the retained fetch; the weave runs none
       (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    }
+  }
+
+  describe("Driver weave parity on generated histories") {
+    val neighborTypes = Seq("preferred_parent", "parent_candidate", "other")
+    /** A seeded history over subjects "0".."11": epoch_ms drawn from 8
+      * values (equal timestamps, told apart by finding_seq), self-loops,
+      * all four link states, targets "12".."14" that own no finding
+      * (bare visited nodes), empty links, null links on every 7th
+      * finding and a tz on every 3rd. */
+    def history(seed: Int): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val cet = Tz(60, summerOnly = false, "CET")
+      val fns = (0 until 60).map { i =>
+        val subject = rnd.nextInt(12).toString
+        def link(target: String) = FoundLink(target,
+          LinkState.all(rnd.nextInt(4)), Map("w" -> rnd.nextInt(3).toString,
+            "neighbor_type" -> neighborTypes(rnd.nextInt(3))))
+        val links = Seq.fill(rnd.nextInt(4))(link(rnd.nextInt(15).toString)) ++
+          (if (i % 9 == 0) Seq(link(subject)) else Nil)
+        FoundNode(subject, 10L * rnd.nextInt(8), Map("i" -> i.toString),
+          links, i, if (i % 3 == 0) Some(cet) else None)
+      }
+      Findings.fromSeq(spark, fns).withColumn("links",
+        when(col("finding_seq") % 7 === 3, lit(null)).otherwise(col("links")))
+    }
+    /** `history` with BIGINT ids and no tz column. */
+    def bigintHistory(seed: Int): DataFrame = history(seed).select(
+      col("subject").cast("bigint").as("subject"), col("epoch_ms"),
+      col("finding_seq"), col("node_attrs"),
+      transform(col("links"), l => struct(
+        l("target").cast("bigint").as("target"),
+        l("link_state").as("link_state"),
+        l("link_attrs").as("link_attrs"))).as("links"))
+
+    val latestOrNull = (lo: Column, hi: Column) =>
+      when(functions.size(lo) > 0 && functions.size(hi) > 0,
+        ListMergeUnifier.latestOfBoth(lo, hi))
+    val unifiers: Seq[(String, LinkUnifier)] = Seq(
+      "StdUnifier()" -> new StdUnifier(),
+      // one link per direction: a subId under which no two links share
+      // (source, dest), so GraphML's (source, dest) order is total
+      "StdUnifier(subId)" -> new StdUnifier(subId = Seq(
+        when(col("link_state") === LinkState.ToSubject, col("target"))
+          .otherwise(col("subject")))),
+      "StdUnifier(postMerge)" -> new StdUnifier(postMerge = _.withColumn(
+        "link_attrs", map_concat(
+          coalesce(col("link_attrs"), typedLit(Map.empty[String, String])),
+          map(lit("seq"), col("sample_seq").cast("string"))))),
+      "StdUnifier(negation = false)" -> noNeg,
+      "ListMergeUnifier(latestOfBoth)" ->
+        new ListMergeUnifier(ListMergeUnifier.latestOfBoth),
+      "ListMergeUnifier(a merge that returns null)" ->
+        new ListMergeUnifier(latestOrNull),
+      "ListMergeUnifier(negation = false)" ->
+        new ListMergeUnifier(ListMergeUnifier.latestOfBoth, negation = false),
+      "Rpl.DioUnifier (the default driver form)" -> graft.rpl.Rpl.DioUnifier)
+
+    for ((name, unifier) <- unifiers)
+      it(s"agree for $name under every policy, with and without maxHops") {
+        val nLinks =
+          for (policy <- Seq(PolicyOverwrite, PolicyAppend, PolicyKeepN(3));
+               hops <- Seq(None, Some(1)))
+            yield snapshot(history(1), Query(Seq("0", "3"), policy = policy,
+              unifier = unifier, maxHops = hops)).links.count()
+        nLinks.sum should be > 0L
+        // Int starts against BIGINT subjects, tz absent
+        snapshot(bigintHistory(2), Query(Seq(0, 3), policy = PolicyKeepN(3),
+          unifier = unifier))(Encoders.scalaInt)
+      }
+
+    it("a floating subId takes the default form and groups -0.0 with " +
+        "0.0, and NaN with NaN, as Spark does") {
+      // each end observes the pair once, under its own spelling of w
+      def pair(a: String, wa: String, b: String, wb: String, at: Long,
+          seq: Long) = Seq(
+        FoundNode(a, at, Map.empty, Seq(
+          FoundLink(b, LinkState.ToTarget, Map("w" -> wa))), seq),
+        FoundNode(b, at + 10, Map.empty, Seq(
+          FoundLink(a, LinkState.ToSubject, Map("w" -> wb))), seq + 1))
+      val fns = pair("a", "-0.0", "b", "0.0", 10, 0) ++
+        pair("c", "NaN", "d", "NaN", 30, 2)
+      val u = new StdUnifier(
+        subId = Seq(col("link_attrs")("w").cast("double")), negation = false)
+      val g = snapshot(Findings.fromSeq(spark, fns),
+        Query(Seq("a", "c"), unifier = u))
+      g.links.collect().map(r => (r.getString(0), r.getString(1), r.getLong(3)))
+        .sorted.toSeq shouldBe Seq(("a", "b", 20L), ("c", "d", 40L))
+    }
+
+    it("the weave runs no job for either built-in unifier") {
+      // a local findings frame under PolicyAppend: the fetch, the BFS and
+      // the weave all run on the driver. A seed no case above uses: the
+      // distributed lane leaves its retained frame cached, and a cached
+      // plan would turn the fetch into a scan of the cache.
+      for (u <- Seq(new StdUnifier(), unifiers(1)._2, unifiers(2)._2,
+          new ListMergeUnifier(ListMergeUnifier.latestOfBoth), noNeg)) {
+        var g: SnapshotGraph = null
+        jobsDuring {
+          g = GetSnapshot(spark, history(7),
+            Query(Seq("0", "3"), policy = PolicyAppend, unifier = u))
+          g.nodes.collect()
+          g.links.collect()
+        } shouldBe 0
+        g.links.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+      }
     }
   }
 

@@ -432,6 +432,25 @@ class WeaveSpec extends SparkSpec {
       g.links.collect() shouldBe empty
     }
 
+    it("snapshotWithStats releases its caches when the unifier throws") {
+      val fns = Seq(
+        fn("n1", "2018-12-01T10:00", Seq(fl("n2", LinkState.ToTarget)), seq = 1),
+        fn("n2", "2018-12-01T20:00", Nil, seq = 2))
+      // the plan fails when the unified frame materializes, after the
+      // retained frame and the samples are cached
+      val throwing = new LinkUnifier {
+        def unify(samples: org.apache.spark.sql.DataFrame,
+            nodes: org.apache.spark.sql.DataFrame) =
+          samples.filter(expr("assert_true(epoch_ms < 0, 'unifier failed') IS NULL"))
+      }
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val before = persisted
+      val e = the[Exception] thrownBy
+        Weave.snapshotWithStats(Findings.fromSeq(spark, fns), unifier = throwing)
+      e.toString + Option(e.getCause).fold("")(_.toString) should include ("unifier failed")
+      (persisted -- before) shouldBe empty
+    }
+
     it("negation is an unhinted equi-join (AQE picks the strategy)") {
       val g = Weave.snapshot(Findings.fromSeq(spark, Seq(
         fn("n1", "2018-12-01T10:00", Seq(fl("n2", LinkState.ToTarget))),
