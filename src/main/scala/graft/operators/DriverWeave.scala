@@ -1,6 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -12,17 +11,18 @@ import graft.model.{LinkState, SnapshotGraph}
   * schemas of the lazy [[Weave]] plans the distributed lane runs.
   *
   * The aggregations and joins of those plans (latest finding per node,
-  * boundary anti-join, latest sample per key, list collection,
+  * boundary anti-join, [[StdUnifier]]'s latest sample per key,
   * negation), the sample explode and the link materialization are
   * driver loops over at most `Bfs.LocalFindings` findings. User
-  * `Column`s (`subId`, `postMerge`, a list `merge`) and the pair key
-  * are Spark projections over a local frame: Spark's
+  * `Column`s (`subId`, `postMerge`) and the pair key are Spark
+  * projections over a local frame: Spark's
   * `ConvertToLocalRelation` folds a projection or filter over a
   * `LocalRelation` on the driver, so they run no job and keep Spark's
   * semantics — the pair key's `least`/`greatest` compare strings by
   * UTF-8 bytes, not by Java's UTF-16 `compareTo`. Output schemas come
   * from analysing the lazy plans over empty local frames, which runs
-  * no job either.
+  * no job either. Node ids are grouped by JVM equality, so the lane
+  * hands over only ids of a type [[groupsOnDriver]] accepts.
   */
 private[graft] object DriverWeave {
 
@@ -150,34 +150,28 @@ private[graft] object DriverWeave {
       r => r.get(i)
     } else _ => null
 
-  /** Node-summary and link-sample schemas per findings schema and id
-    * type. Analysing the lazy plans costs tens of milliseconds a query,
-    * and their schemas depend on the input schema alone. */
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    (StructType, DataType), (StructType, StructType)]()
-
+  /** Node-summary and link-sample schemas of a findings `schema` and
+    * an id type, from analysing the lazy plans over empty local frames. */
   private def schemasOf(spark: SparkSession, schema: StructType,
-      idType: DataType): (StructType, StructType) =
-    schemas.computeIfAbsent((schema, idType), _ => {
-      val findings = local(spark, Nil, schema)
-      (Weave.snapshotNodes(findings, Some(local(spark, Nil,
-          StructType(Seq(StructField("node_id", idType)))))).schema,
-        Weave.linkSamples(findings).schema)
-    })
+      idType: DataType): (StructType, StructType) = {
+    val findings = local(spark, Nil, schema)
+    (Weave.snapshotNodes(findings, Some(local(spark, Nil,
+        StructType(Seq(StructField("node_id", idType)))))).schema,
+      Weave.linkSamples(findings).schema)
+  }
 
-  /** Whether every `keys` column of `schema` has a type whose JVM
-    * equality is Spark's grouping equality, so a driver loop may group
-    * on it. Floating keys may not (Spark groups NaN with NaN and -0.0
-    * with 0.0), nor binary ones (arrays compare by reference), nor
-    * strings under a collation other than UTF-8 binary. */
-  def groupsOnDriver(schema: StructType, keys: Seq[String]): Boolean =
-    keys.forall(k => schema(k).dataType match {
-      case s: StringType => s.collationId == StringType.collationId
-      case ByteType | ShortType | IntegerType | LongType | BooleanType |
-          DateType | TimestampType | TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    })
+  /** Whether `t`'s JVM equality is Spark's grouping equality, so a
+    * driver loop may group on its values. Floating types may not (Spark
+    * groups NaN with NaN and -0.0 with 0.0), nor binary ones (arrays
+    * compare by reference), nor strings under a collation other than
+    * UTF-8 binary. */
+  def groupsOnDriver(t: DataType): Boolean = t match {
+    case s: StringType => s.collationId == StringType.collationId
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+        DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case _ => false
+  }
 
   /** [[LinkOps.latestPerKey]] over `t`: per `keys`, the row with the
     * greatest `ord` values. Its columns are nullable, as the fields of
@@ -207,38 +201,6 @@ private[graft] object DriverWeave {
       val cur = won.get(k)
       if (cur == null || later(r, cur)) won.put(k, r)
     }
-  }
-
-  /** `ListMergeUnifier`'s side lists: `t` holds `nKeys` key columns and
-    * the `__lo` and `__hi` side elements (o1, o2, s), null off that
-    * side. Per key, each side's non-null elements ordered by (o1, o2)
-    * with the comparator of the distributed `array_sort` (a null
-    * compares equal), reduced to their samples `s`. */
-  def sideLists(t: Table, nKeys: Int): Table = {
-    val groups = new java.util.LinkedHashMap[Seq[Any],
-      (ArrayBuffer[Row], ArrayBuffer[Row])]()
-    t.rows.foreach { r =>
-      val (lo, hi) = groups.computeIfAbsent(r.toSeq.take(nKeys),
-        _ => (ArrayBuffer.empty, ArrayBuffer.empty))
-      if (!r.isNullAt(nKeys)) lo += r.getStruct(nKeys)
-      if (!r.isNullAt(nKeys + 1)) hi += r.getStruct(nKeys + 1)
-    }
-    def cmp(x: Any, y: Any): Int =
-      if (x == null || y == null) 0
-      else x.asInstanceOf[Comparable[Any]].compareTo(y)
-    val order: Ordering[Row] = (a, b) => {
-      val c = cmp(a.get(0), b.get(0))
-      if (c != 0) c else cmp(a.get(1), b.get(1))
-    }
-    def samples(side: ArrayBuffer[Row]) = side.sorted(order).map(_.get(2)).toSeq
-    val sample = t.schema(nKeys).dataType.asInstanceOf[StructType]("s").dataType
-    val list = ArrayType(sample, containsNull = false)
-    Table(groups.asScala.iterator.map { case (k, (lo, hi)) =>
-        Row.fromSeq(k :+ samples(lo) :+ samples(hi))
-      }.toSeq,
-      StructType(t.schema.take(nKeys) ++ Seq(
-        StructField("__lo", list, nullable = false),
-        StructField("__hi", list, nullable = false))))
   }
 
   def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =

@@ -49,12 +49,12 @@ final case class PolicyKeepN(n: Int) extends FoundNodePolicy {
   * lane runs. `unifyOnDriver` is the form the driver-sized
   * `GetSnapshot` lane runs over its fetched rows; its default runs
   * [[unify]] over the local frames and collects (Spark jobs, the same
-  * rows), so a custom unifier such as `Rpl.DioUnifier` needs nothing
-  * more. [[StdUnifier]] and [[ListMergeUnifier]] group and negate in
-  * driver loops instead and run no job, as long as every grouping key
-  * has a type whose JVM equality is Spark's grouping equality
-  * ([[DriverWeave.groupsOnDriver]]); other keys, such as a floating
-  * `subId`, take the default form. */
+  * rows), so a custom unifier such as `Rpl.DioUnifier` or
+  * [[ListMergeUnifier]] needs nothing more. [[StdUnifier]] groups and
+  * negates in driver loops instead and runs no job, as long as every
+  * grouping key has a type whose JVM equality is Spark's grouping
+  * equality ([[DriverWeave.groupsOnDriver]]); other keys, such as a
+  * floating `subId`, take the default form. */
 trait LinkUnifier {
   def unify(samples: DataFrame, nodes: DataFrame): DataFrame
   /** The unified samples BEFORE any negation pruning — used by
@@ -69,21 +69,6 @@ trait LinkUnifier {
   private[graft] def unifyOnDriver(samples: DataFrame,
       nodes: DriverWeave.Nodes): DriverWeave.Table =
     DriverWeave.Table(unify(samples, nodes.frame))
-}
-
-private[operators] object LinkUnifier {
-  /** `samples` plus the swap-insensitive pair key (pair_lo, pair_hi) and
-    * one `__sub<i>` column per `subId` column; returns the frame and the
-    * key names. */
-  def keyed(samples: DataFrame, subId: Seq[Column]): (DataFrame, Seq[String]) = {
-    val withKeys = samples
-      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
-      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
-    val subNames = subId.indices.map(i => s"__sub$i")
-    (subNames.zip(subId).foldLeft(withKeys) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }, Seq("pair_lo", "pair_hi") ++ subNames)
-  }
 }
 
 /** The standard unifier (`unifyStd`, Unify.hs:169-193):
@@ -112,7 +97,7 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
   override def unifyRaw(samples: DataFrame, nodes: DataFrame): DataFrame =
     copyWithNegation(false).unify(samples, nodes)
   override def unify(samples: DataFrame, nodes: DataFrame): DataFrame = {
-    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
+    val (keyed, keys) = this.keyed(samples)
     val merged = postMerge(LinkOps.latestPerKey(
       keyed, keys, Seq("epoch_ms", "sample_seq")))
     val out =
@@ -127,14 +112,26 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
     * its own [[unify]]. */
   override private[graft] def unifyOnDriver(samples: DataFrame,
       nodes: DriverWeave.Nodes): DriverWeave.Table = {
-    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
+    val (keyed, keys) = this.keyed(samples)
     if (getClass != classOf[StdUnifier] ||
-        !DriverWeave.groupsOnDriver(keyed.schema, keys))
+        !keys.forall(k => DriverWeave.groupsOnDriver(keyed.schema(k).dataType)))
       return super.unifyOnDriver(samples, nodes)
     val winners = DriverWeave.latestPerKey(DriverWeave.Table(keyed), keys,
       Seq("epoch_ms", "sample_seq"))
     nodes.negate(postMerge(winners.frame(samples.sparkSession)), negation)
       .without(keys)
+  }
+  /** `samples` plus the swap-insensitive pair key (pair_lo, pair_hi) and
+    * one `__sub<i>` column per `subId` column; returns the frame and the
+    * key names. */
+  private def keyed(samples: DataFrame): (DataFrame, Seq[String]) = {
+    val withKeys = samples
+      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
+      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
+    val subNames = subId.indices.map(i => s"__sub$i")
+    (subNames.zip(subId).foldLeft(withKeys) {
+      case (df, (n, c)) => df.withColumn(n, c)
+    }, Seq("pair_lo", "pair_hi") ++ subNames)
   }
 }
 
@@ -176,61 +173,43 @@ class ListMergeUnifier(
     copyWithNegation(false).unify(samples, nodes)
 
   override def unify(samples: DataFrame, nodes: DataFrame): DataFrame = {
-    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
-    val (lo, hi) = sides(samples)
-    def sorted(c: Column): Column = {
+    val dataCols = samples.columns.toSeq
+    val withKeys = samples
+      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
+      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
+    val subNames = subId.indices.map(i => s"__sub$i")
+    val keyed = subNames.zip(subId).foldLeft(withKeys) {
+      case (df, (n, c)) => df.withColumn(n, c)
+    }
+    val payload = struct(dataCols.map(col).toIndexedSeq: _*)
+    // collect_list skips nulls, so `when` without otherwise collects
+    // exactly the side's samples
+    def sideList(cond: Column): Column =
+      collect_list(when(cond,
+        struct(col("epoch_ms").as("o1"), col("sample_seq").as("o2"),
+          payload.as("s"))))
+    def sortedSamples(c: Column): Column = {
       val cmp = (l: Column, r: Column) =>
         when(l("o1") < r("o1"), -1).when(l("o1") > r("o1"), 1)
           .when(l("o2") < r("o2"), -1).when(l("o2") > r("o2"), 1)
           .otherwise(0)
       transform(array_sort(c, cmp), x => x("s"))
     }
-    val out = mergeSides(keyed.groupBy(keys.map(col).toIndexedSeq: _*)
-      .agg(collect_list(lo).as("__lo"), collect_list(hi).as("__hi")),
-      keys, sorted)
-    (if (!negation) out else Weave.negateAgainstEnds(out, nodes))
-      .drop(keys: _*)
-  }
-
-  /** The keys and side elements fold over the local samples; a driver
-    * loop builds each group's side lists, already sorted, and one
-    * folded projection applies `merge`; negation is a driver loop. A
-    * subclass keeps the default form, which runs its own [[unify]]. */
-  override private[graft] def unifyOnDriver(samples: DataFrame,
-      nodes: DriverWeave.Nodes): DriverWeave.Table = {
-    val (keyed, keys) = LinkUnifier.keyed(samples, subId)
-    if (getClass != classOf[ListMergeUnifier] ||
-        !DriverWeave.groupsOnDriver(keyed.schema, keys))
-      return super.unifyOnDriver(samples, nodes)
-    val (lo, hi) = sides(samples)
-    val lists = DriverWeave.sideLists(DriverWeave.Table(
-      keyed.select(keys.map(col) :+ lo.as("__lo") :+ hi.as("__hi"): _*)),
-      keys.size)
-    nodes.negate(mergeSides(lists.frame(samples.sparkSession), keys,
-      identity), negation).without(keys)
-  }
-
-  /** A sample's element of the lo and the hi side list: the sample
-    * struct with its (epoch_ms, sample_seq) order key, null off that
-    * side — `collect_list` skips nulls, so each list holds exactly its
-    * side's samples. */
-  private def sides(samples: DataFrame): (Column, Column) = {
-    val payload = struct(samples.columns.map(col).toIndexedSeq: _*)
-    def side(key: String) = when(col("subject") === col(key),
-      struct(col("epoch_ms").as("o1"), col("sample_seq").as("o2"),
-        payload.as("s")))
-    (side("pair_lo"), side("pair_hi"))
-  }
-
-  /** `merge` over each group's side lists, once `sorted` turns them
-    * into samples ascending by (epoch_ms, sample_seq); drops groups it
-    * merges to null. */
-  private def mergeSides(grouped: DataFrame, keys: Seq[String],
-      sorted: Column => Column): DataFrame =
-    grouped
-      .withColumn("__m", merge(sorted(col("__lo")), sorted(col("__hi"))))
+    val grouped = keyed
+      .groupBy((Seq("pair_lo", "pair_hi") ++ subNames).map(col).toIndexedSeq: _*)
+      .agg(sideList(col("subject") === col("pair_lo")).as("__lo"),
+        sideList(col("subject") === col("pair_hi")).as("__hi"))
+      .withColumn("__m",
+        merge(sortedSamples(col("__lo")), sortedSamples(col("__hi"))))
       .filter(col("__m").isNotNull)
-      .select(keys.map(col) :+ col("__m.*"): _*)
+    val expanded = grouped.select(
+      col("pair_lo") +: col("pair_hi") +: subNames.map(col) :+
+        col("__m.*"): _*)
+    val out =
+      if (!negation) expanded
+      else Weave.negateAgainstEnds(expanded, nodes)
+    out.drop((Seq("pair_lo", "pair_hi") ++ subNames): _*)
+  }
 }
 
 object ListMergeUnifier {

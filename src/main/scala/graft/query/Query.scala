@@ -47,19 +47,21 @@ case class Query[N](
   *  - driver-sized: when the retained frame holds at most
   *    `Bfs.LocalFindings` findings (one bounded `limit(n+1).collect()`
   *    fetch) and the start ids unify with the subject type
-  *    (`Bfs.localIdType`), the retained rows are fetched once, the BFS
-  *    runs on the driver (`Bfs.localHops`), and
+  *    (`Bfs.localIdType`) into a type whose JVM equality is Spark's
+  *    (not floating or binary), the retained rows are fetched once, the
+  *    BFS runs on the driver (`Bfs.localHops`), and
   *    [[graft.operators.DriverWeave]] weaves the fetched rows in plain
   *    Scala, folding its projections over local frames: no job for
-  *    [[graft.operators.StdUnifier]] and
-  *    [[graft.operators.ListMergeUnifier]]. A custom unifier, or a
-  *    built-in one keyed on a type the driver does not group on (a
+  *    [[graft.operators.StdUnifier]]. Any other unifier
+  *    ([[graft.operators.ListMergeUnifier]], a custom one), or a
+  *    `StdUnifier` keyed on a type the driver does not group on (a
   *    floating or binary `subId`), runs its own `unify` over the local
   *    frames and collects. The returned graph is backed by local frames:
   *    reading it (GraphML, JSON) launches no job, and nothing stays
   *    persisted. A query at that size is bound by per-job overhead, not
-  *    data: the fetch is its only job.
-  *  - distributed: past the bound (or with ids that do not unify) the
+  *    data: with `StdUnifier` the fetch is its only job.
+  *  - distributed: past the bound (or with ids that do not unify or are
+  *    floating or binary) the
   *    retained frame is persisted, `Bfs.reachable` restricts it, and the
   *    lazy [[graft.operators.Weave.snapshot]] weaves it — the only path
   *    for histories too big to fetch, and the reference the driver weave
@@ -97,7 +99,8 @@ object GetSnapshot {
   }
 
   /** The driver-sized lane: None when the retained frame or the start
-    * set exceeds `bound`, or when the ids do not unify. Otherwise the
+    * set exceeds `bound`, or when the ids do not unify into a type the
+    * driver groups on (not floating or binary). Otherwise the
     * distributed lane's BFS restriction, run over the fetched rows, and
     * the driver weave of the reachable ones. */
   private def driverSized(spark: SparkSession, retained: DataFrame,
@@ -112,7 +115,8 @@ object GetSnapshot {
     val types = Seq(schema(si).dataType, link(ti).dataType,
       startsDf.schema(0).dataType)
     val idT = if (bound <= 0) None else Bfs.localIdType(types)
-    if (idT.isEmpty) return None
+    // the BFS sets and the driver weave group ids by JVM equality
+    if (!idT.exists(DriverWeave.groupsOnDriver)) return None
     // Starts first: a driver-side list is a local relation, so this
     // fetch runs no job.
     val startRows = startsDf.limit(bound + 1).collect()
