@@ -165,6 +165,16 @@ object Bench {
   // unparseable; counters can't legitimately produce them, so 0 it is
   private def fin(v: Double): Double = if (java.lang.Double.isFinite(v)) v else 0.0
 
+  /** The bench's JSON result line. `body` is the `queries` map and the
+    * fields after it; the machine's labels, `cpus` (the `local[n]`
+    * width) and the context's `defaultParallelism`, come last, inside
+    * the line's tail that truncated copies keep. */
+  private[graft] def totalLine(spark: SparkSession, cpus: Int, total: Double,
+      body: String, warmup: Double, sfDir: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$body,""" +
+      s""""warmup_sec":$warmup,"sf":"$sfDir","cpus":$cpus,""" +
+      s""""defaultParallelism":${spark.sparkContext.defaultParallelism}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -300,9 +310,8 @@ object Bench {
       (if (frozen.nonEmpty)
         s""","frozen_markers":${jmap(frozen)}""" else "") +
       s""","standalone":${jmap(standalone)}"""
-    val total = results.map(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$extras,"warmup_sec":$warmup,"sf":"$sfDir"}"""
+    val line = totalLine(spark, cpus.toInt, results.map(_._2).sum,
+      qs + extras, warmup, sfDir)
     println(line)
     // The driver's BENCH_r{N}.json artifact keeps only the tail of the
     // printed line, which truncates the per-query map to the last ~62

@@ -192,8 +192,7 @@ object Dedup {
     *    (and itself) to that minimum.
     *
     * Fixpoint = per-component stars centered on the min id. */
-  def clusterLabelsStar(pairs: DataFrame,
-      localFallbackEdges: Long = 1000000L): DataFrame = {
+  def clusterLabelsStar(pairs: DataFrame): DataFrame = {
     import graft.util.Checkpoints.cut
     // oriented (u big, v small), self-pairs dropped
     var e = cut(pairs
@@ -221,16 +220,19 @@ object Dedup {
     var eSig = sig(e)
     // ADAPTIVE small-tail fallback (the same runtime-adaptivity idea as
     // AQE): the deduped edge set is usually orders of magnitude smaller
-    // than the input pair stream — when it fits one task
-    // (≤ localFallbackEdges, ~150 MB of map state at the default), a
-    // single-pass union-find beats O(log n) shuffle rounds outright.
-    // The count is already paid (it IS the convergence signature), the
-    // edges are already materialized distributed (lineage cut), and the
-    // bound keeps the decision safe at 100 TB: a billion-edge dup graph
-    // takes the star rounds, a million-edge tail doesn't pay 6 shuffle
-    // rounds of job overhead.
-    if (eSig._1 > 0L && eSig._1 <= localFallbackEdges)
-      return localUnionFind(e)
+    // than the input pair stream — when it fits the driver lane
+    // (graft.util.DriverLane: ~150 MB of map state at its bound) and
+    // its ids are of a type the lane groups on, a single-pass
+    // union-find beats O(log n) shuffle rounds outright. The count is
+    // already paid (it IS the convergence signature), the edges are
+    // already materialized distributed (lineage cut), and the bound
+    // keeps the decision safe at 100 TB: a billion-edge dup graph takes
+    // the star rounds, a million-edge tail doesn't pay 6 shuffle rounds
+    // of job overhead.
+    val idT = graft.util.DriverLane.idType(e.schema("u").dataType)
+    if (idT.isDefined && eSig._1 > 0L &&
+        eSig._1 <= graft.util.DriverLane.rows)
+      return localUnionFind(e, idT.get)
     var done = eSig._1 == 0L
     while (!done) {
       val sym = e.unionByName(
@@ -268,21 +270,11 @@ object Dedup {
     * contract: (id, cluster = min id in component) for every endpoint.
     * Min is taken under SPARK's value ordering (strings compare as
     * UTF-8 bytes, like UTF8String), so the fallback is bit-identical to
-    * the distributed rounds even on supplementary-plane ids. */
-  private def localUnionFind(e: DataFrame): DataFrame = {
-    val dt = e.schema("u").dataType
-    val ord: Ordering[Any] = dt match {
-      case org.apache.spark.sql.types.StringType => new Ordering[Any] {
-        override def compare(a: Any, b: Any): Int =
-          java.util.Arrays.compareUnsigned(
-            a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      case _ => new Ordering[Any] {
-        override def compare(a: Any, b: Any): Int =
-          a.asInstanceOf[Comparable[Any]].compareTo(b)
-      }
-    }
+    * the distributed rounds even on supplementary-plane ids. Ids are of
+    * `idT`, a `DriverLane.idType`. */
+  private def localUnionFind(e: DataFrame,
+      idT: org.apache.spark.sql.types.DataType): DataFrame = {
+    val ord = graft.util.DriverLane.order(idT)
     val labeled = e.rdd.coalesce(1).mapPartitions { it =>
       val parent = new java.util.HashMap[Any, Any]()
       def find(x: Any): Any = {
@@ -313,8 +305,8 @@ object Dedup {
     }
     e.sparkSession.createDataFrame(labeled,
       org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", dt),
-        org.apache.spark.sql.types.StructField("cluster", dt))))
+        org.apache.spark.sql.types.StructField("id", idT),
+        org.apache.spark.sql.types.StructField("cluster", idT))))
   }
 
   /** Train/test CONTAMINATION check: for each test document, how many

@@ -19,7 +19,8 @@ import graft.model.SnapshotGraph
   * the reserved attributes `ts_ms` and `boundary`.
   */
 object Gexf {
-  import GraphMl.{esc, attrsOf, valueType, combineTypes, utf8Order}
+  import GraphMl.{esc, attrsOf, valueType, combineTypes}
+  import graft.util.DriverLane.strings
 
   private def gexfType(t: String): String = t match {
     case "long" => "long"
@@ -112,11 +113,11 @@ object Gexf {
 
     val sb = new StringBuilder
     sb ++= header(nTypes, lTypes)
-    nodes.sortBy(_.getString(0))(utf8Order)
+    nodes.sortBy(_.getString(0))(strings)
       .foreach(r => sb ++= nodeElement(r, nIds))
     sb ++= midSection
     links.sortBy(r => (r.getString(0), r.getString(1)))(
-        Ordering.Tuple2(utf8Order, utf8Order))
+        Ordering.Tuple2(strings, strings))
       .zipWithIndex
       .foreach { case (r, i) => sb ++= edgeElement(r, i.toLong, lIds) }
     sb ++= footer

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.Row
 import graft.model.SnapshotGraph
+import graft.util.DriverLane.strings
 
 /** GraphML sink (the reference's NetSpider.GraphML.Writer,
   * net-spider/src/NetSpider/GraphML/Writer.hs:199-366): key-table
@@ -213,28 +214,34 @@ object GraphMl {
       linkKeys.map(k => k ->
         combineTypes(links.flatMap(attrsOf(_, 4).get(k)).map(valueType))))
 
+    // Spark's string order, the one its range sort applies in
+    // writeDistributed, keeps `write` byte-identical to
+    // `assembleDistributed`
     val sb = new StringBuilder
     sb ++= header(kt)
-    nodes.sortBy(_.getString(0))(utf8Order)
+    nodes.sortBy(_.getString(0))(strings)
       .foreach(r => sb ++= nodeElement(r, kt, 4))
-    links.sortBy(r => (r.getString(0), r.getString(1)))(
-        Ordering.Tuple2(utf8Order, utf8Order))
-      .foreach(r => sb ++= edgeElement(r, kt, 4 + 1))
+    inLinkOrder(links.sortBy(r => (r.getString(0), r.getString(1)))(
+        Ordering.Tuple2(strings, strings)).iterator, kt)
+      .foreach(sb ++= _)
     sb ++= footer
     sb.toString
   }
 
-  /** UTF-8 binary (code-point) string order — the ordering Spark's
-    * range sort applies in [[writeDistributed]] (UTF8String compares
-    * bytes). Java's natural String order compares UTF-16 code units,
-    * which diverges for supplementary-plane characters (e.g. emoji
-    * U+1F600 vs U+FFFD) — sorting the driver path with THIS ordering
-    * keeps `write` byte-identical to `assembleDistributed`. */
-  private[io] val utf8Order: Ordering[String] = new Ordering[String] {
-    override def compare(a: String, b: String): Int =
-      java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** The `<edge>` elements of `links`, which come sorted by (source,
+    * dest): each element rendered once, and each run of parallel links
+    * (equal source and dest) sorted by its rendered text, so the order
+    * is total and does not depend on how the links were collected. */
+  private def inLinkOrder(links: Iterator[Row], kt: KeyTable): Iterator[String] = {
+    val it = links.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+      val (s, d) = (it.head.getString(0), it.head.getString(1))
+      val run = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext && it.head.getString(0) == s &&
+          it.head.getString(1) == d)
+        run += edgeElement(it.next(), kt, 5)
+      run.sorted(strings)
+    }
   }
 
   /** Distributed GraphML: the SAME document as [[write]], emitted as
@@ -283,7 +290,7 @@ object GraphMl {
       .write.mode("overwrite").text(s"$outDir/01_nodes")
     links.repartitionByRange(col("source_node"), col("dest_node"))
       .sortWithinPartitions("source_node", "dest_node")
-      .mapPartitions(_.map(r => edgeElement(r, kt, 5).stripLineEnd))
+      .mapPartitions(inLinkOrder(_, kt).map(_.stripLineEnd))
       .write.mode("overwrite").text(s"$outDir/02_edges")
     spark.createDataset(Seq(footer)).coalesce(1)
       .map(_.stripLineEnd)

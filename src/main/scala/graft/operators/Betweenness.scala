@@ -72,18 +72,17 @@ object Betweenness {
   }
 
   /** Exact betweenness — driver-local lane only: refuses graphs whose
-    * distinct symmetric edge list exceeds `localFallbackEdges` (exact
-    * at scale is |V| BFS sweeps; use [[sampled]]). Returns (id,
-    * betweenness DOUBLE). */
+    * distinct symmetric edge list exceeds the [[graft.util.DriverLane]]
+    * bound (exact at scale is |V| BFS sweeps; use [[sampled]]). Returns
+    * (id, betweenness DOUBLE). */
   def exact(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst",
-      localFallbackEdges: Int = 1 << 20): DataFrame = {
+      dstCol: String = "dst"): DataFrame = {
     val sym = symmetrized(edges, srcCol, dstCol)
-    val probe = sym.limit(localFallbackEdges + 1).collect()
-    require(probe.length <= localFallbackEdges,
+    val probe = graft.util.DriverLane.fetch(sym)
+    require(probe.isDefined,
       s"exact betweenness is all-sources Brandes — graph exceeds the " +
-        s"$localFallbackEdges-edge local bound; use sampled()")
-    val cb = localBrandes(probe.map(r => (r.get(0), r.get(1))))
+        s"${graft.util.DriverLane.rows}-edge local bound; use sampled()")
+    val cb = localBrandes(probe.get.map(r => (r.get(0), r.get(1))))
     val spark = edges.sparkSession
     val idField = sym.schema.fields(0).copy(name = "id")
     spark.createDataFrame(

@@ -24,31 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Bfs {
 
-  /** Largest distinct edge list [[reachable]] traverses on the driver. */
-  private[graft] val LocalEdges = 1 << 20
-
-  /** Largest policy-retained findings frame `GetSnapshot` fetches to the
-    * driver and weaves as local frames (its driver-sized lane); past it
-    * the distributed snapshot path runs. */
-  private[graft] val LocalFindings = 1 << 16
-
-  /** The id type the driver-local paths match node ids in, or None when
-    * the id columns' types do not unify: equal types pass through, mixed
-    * integrals unify to BIGINT, anything else must take the distributed
-    * joins, whose coercion is the behavior of record there. The local
-    * paths match ids by boxed equality, so int/long-mixed endpoints
-    * would silently match nothing where the joins coerce. Same rule as
-    * TemporalReach. */
-  private[graft] def localIdType(types: Seq[DataType]): Option[DataType] = {
-    def integral(t: DataType) = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (types.distinct.size == 1) Some(types.head)
-    else if (types.forall(integral)) Some(LongType)
-    else None
-  }
-
   /** Returns (node_id, hops): minimum hop distance from any start node,
     * following src→dst edges. Starts not present in `edges` still appear
     * at hops 0. Per-round lineage cuts are
@@ -64,37 +39,34 @@ object Bfs {
     * BFS runs driver-locally in round-synchronous order ([[localHops]])
     * — bit-identical output: same level-synchronous expansion, same
     * maxHops cut, and min-hop labels are unique regardless of work
-    * order. Past `localEdgeThreshold` (or with it ≤ 0, or when the id
-    * columns' types don't unify, [[localIdType]]) the distributed
-    * frontier loop runs as before. */
+    * order. Past the [[graft.util.DriverLane]] bound, or when the id
+    * columns' types have no driver-lane id type
+    * ([[graft.util.DriverLane.idType]]), the distributed frontier loop
+    * runs. */
   def reachable(edges: DataFrame, starts: DataFrame,
-      maxHops: Option[Int] = None,
-      localEdgeThreshold: Int = LocalEdges): DataFrame = {
+      maxHops: Option[Int] = None): DataFrame = {
     import graft.util.Checkpoints.cut
-    // Canonical id type BEFORE any collect (see [[localIdType]]).
-    val idT = localIdType(Seq(edges.schema(0).dataType,
-      edges.schema(1).dataType, starts.schema(0).dataType))
+    import graft.util.DriverLane
+    // Canonical id type BEFORE any collect (see DriverLane.idType).
+    val idT = DriverLane.idType(edges.schema(0).dataType,
+      edges.schema(1).dataType, starts.schema(0).dataType)
     val e0raw = edges.toDF("src", "dst")
     val e0 = idT.fold(e0raw)(t => e0raw.select(
       col("src").cast(t).as("src"), col("dst").cast(t).as("dst")))
       .distinct()
     val startsC = idT.fold(starts.toDF("node_id"))(t =>
       starts.toDF("node_id").select(col("node_id").cast(t).as("node_id")))
-    val probe =
-      if (localEdgeThreshold <= 0 || idT.isEmpty) null
-      else e0.limit(localEdgeThreshold + 1).collect()
-    if (probe != null && probe.length <= localEdgeThreshold) {
-      val ss = startsC.distinct().limit(localEdgeThreshold + 1).collect()
-      if (ss.length <= localEdgeThreshold) {
-        val hops = localHops(probe.iterator.map(r => (r.get(0), r.get(1))),
-          ss.map(_.get(0)), maxHops)
-        val rows = new java.util.ArrayList[Row](hops.size)
-        hops.forEach((v, h) => rows.add(Row(v, h)): Unit)
-        return edges.sparkSession.createDataFrame(rows, StructType(Seq(
-          StructField("node_id", idT.get),
-          StructField("hops", IntegerType, nullable = false))))
-      }
+    val onDriver = for (t <- idT; es <- DriverLane.fetch(e0);
+        ss <- DriverLane.fetch(startsC.distinct())) yield {
+      val hops = localHops(es.iterator.map(r => (r.get(0), r.get(1))),
+        ss.map(_.get(0)), maxHops)
+      val rows = new java.util.ArrayList[Row](hops.size)
+      hops.forEach((v, h) => rows.add(Row(v, h)): Unit)
+      edges.sparkSession.createDataFrame(rows, StructType(Seq(
+        StructField("node_id", t),
+        StructField("hops", IntegerType, nullable = false))))
     }
+    if (onDriver.isDefined) return onDriver.get
     val e = e0.persist()
     var visited = cut(startsC.distinct()
       .withColumn("hops", lit(0)))
@@ -128,7 +100,7 @@ object Bfs {
     * everything already labeled, maxHops cuts after that many expansion
     * rounds, and an edge from a null id is never followed (a null key
     * joins nothing). Ids match by boxed equality, so callers pass them
-    * in one [[localIdType]]. Duplicate edges are harmless. Returns each
+    * in one `DriverLane.idType`. Duplicate edges are harmless. Returns each
     * labeled node with its hop count. */
   private[graft] def localHops(edges: Iterator[(Any, Any)],
       starts: Iterable[Any],

@@ -18,31 +18,27 @@ import org.apache.spark.sql.functions._
   * per-node sort window. Rounds are a fixed parameter by default
   * (LPA's quality plateaus in a handful of sweeps); `tolChanges`
   * switches to convergence-based termination on the label-change
-  * count. Runs past [[LazyRounds]] — or over [[CutEdgeThreshold]]
-  * edges, whichever trips first — persist the symmetrized edge set
-  * and cut the label frame every round (PageRank's lineage policy:
-  * interior laziness multiplies the plan per round and gets
-  * re-executed).
+  * count. Runs past [[LazyRounds]] — or past the
+  * [[graft.util.DriverLane]] bound in edges, whichever trips first —
+  * persist the symmetrized edge set and cut the label frame every
+  * round (PageRank's lineage policy: interior laziness multiplies the
+  * plan per round and gets re-executed).
   */
 object Communities {
 
   /** Longest run that stays fully lazy and uncut — the gate fast path
-    * (q140 sweeps twice). Applies only UNDER the edge-count bound:
-    * past [[CutEdgeThreshold]] even a 1-round run persists + cuts. */
+    * (q140 sweeps twice). Applies only within the driver lane's edge
+    * count: past the [[graft.util.DriverLane]] bound even a 1-round run
+    * persists the symmetrized edge set and cuts the label frame from
+    * round 1. The round-count-only trigger was inverted at scale: a
+    * fully-lazy 2-round sweep on the 10.5 M-edge probe graph re-executed
+    * the symmetrize+distinct shuffle per downstream job and read SLOWER
+    * than six cut rounds (BENCH_GRAPH r14: lazy lpa2 19.8 s vs cut lpa6
+    * 16.0 s). Under the bound the lazy plan is the measured winner,
+    * above it the per-round materialization is. The probe is a
+    * limit-bounded count — it stops scanning at the bound + 1, so small
+    * inputs pay one cheap pass. */
   val LazyRounds = 2
-
-  /** Edge-count bound past which every run persists the symmetrized
-    * edge set and cuts the label frame from round 1, regardless of the
-    * round count. The round-count-only trigger was inverted at scale:
-    * a fully-lazy 2-round sweep on the 10.5 M-edge probe graph
-    * re-executed the symmetrize+distinct shuffle per downstream job
-    * and read SLOWER than six cut rounds (BENCH_GRAPH r14: lazy lpa2
-    * 19.8 s vs cut lpa6 16.0 s). Sized like the local-fallback probes
-    * (the `localEdgeThreshold` discipline): under 2²⁰ raw edges the
-    * lazy plan is the measured winner, above it the per-round
-    * materialization is. The probe is a limit-bounded count — it stops
-    * scanning at the bound + 1, so small inputs pay one cheap pass. */
-  val CutEdgeThreshold: Int = 1 << 20
 
   /** (id, label) after `rounds` synchronous sweeps over a directed
     * edge frame (`src`, `dst`) — edges are symmetrized and
@@ -55,12 +51,8 @@ object Communities {
     * is exact and deterministic, so `labelPropagation(e, cap, tol=t)`
     * ≡ `labelPropagation(e, k)` at the stop round k (spec-pinned).
     * Tol runs cut every round (the stability count executes each
-    * round eagerly anyway).
-    *
-    * `cutEdgeThreshold` sizes the [[CutEdgeThreshold]] probe; ≤ 0
-    * disables the probe (round-count trigger only). */
+    * round eagerly anyway). */
   def labelPropagation(edges: DataFrame, rounds: Int = 2,
-      cutEdgeThreshold: Int = CutEdgeThreshold,
       tolChanges: Long = -1L): DataFrame = {
     import graft.util.Checkpoints.cut
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
@@ -72,11 +64,9 @@ object Communities {
     // pre-dedup duplicates still count, an accepted overestimate — an
     // exact distinct() here would cost the very shuffle the probe
     // exists to avoid. One upstream re-execution per call, limit-
-    // bounded at the threshold + 1.
+    // bounded at the bound + 1.
     val doCut = rounds > LazyRounds || tolChanges >= 0L ||
-      (cutEdgeThreshold > 0 && rounds > 0 &&
-        e.select(col("src")).limit(cutEdgeThreshold + 1).count()
-          > cutEdgeThreshold)
+      (rounds > 0 && !graft.util.DriverLane.fits(e))
     val sym0 = e.unionByName(
         e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()

@@ -13,16 +13,16 @@ import graft.model.{LinkState, SnapshotGraph}
   * The aggregations and joins of those plans (latest finding per node,
   * boundary anti-join, [[StdUnifier]]'s latest sample per key,
   * negation), the sample explode and the link materialization are
-  * driver loops over at most `Bfs.LocalFindings` findings. User
-  * `Column`s (`subId`, `postMerge`) and the pair key are Spark
-  * projections over a local frame: Spark's
+  * driver loops over at most the `graft.util.DriverLane` findings
+  * bound. User `Column`s (`subId`, `postMerge`) and the pair key are
+  * Spark projections over a local frame: Spark's
   * `ConvertToLocalRelation` folds a projection or filter over a
   * `LocalRelation` on the driver, so they run no job and keep Spark's
   * semantics — the pair key's `least`/`greatest` compare strings by
   * UTF-8 bytes, not by Java's UTF-16 `compareTo`. Output schemas come
   * from analysing the lazy plans over empty local frames, which runs
   * no job either. Node ids are grouped by JVM equality, so the lane
-  * hands over only ids of a type [[groupsOnDriver]] accepts.
+  * hands over only ids of a type `DriverLane.idType` accepts.
   */
 private[graft] object DriverWeave {
 
@@ -158,19 +158,6 @@ private[graft] object DriverWeave {
     (Weave.snapshotNodes(findings, Some(local(spark, Nil,
         StructType(Seq(StructField("node_id", idType)))))).schema,
       Weave.linkSamples(findings).schema)
-  }
-
-  /** Whether `t`'s JVM equality is Spark's grouping equality, so a
-    * driver loop may group on its values. Floating types may not (Spark
-    * groups NaN with NaN and -0.0 with 0.0), nor binary ones (arrays
-    * compare by reference), nor strings under a collation other than
-    * UTF-8 binary. */
-  def groupsOnDriver(t: DataType): Boolean = t match {
-    case s: StringType => s.collationId == StringType.collationId
-    case ByteType | ShortType | IntegerType | LongType | BooleanType |
-        DateType | TimestampType | TimestampNTZType => true
-    case _: DecimalType => true
-    case _ => false
   }
 
   /** [[LinkOps.latestPerKey]] over `t`: per `keys`, the row with the

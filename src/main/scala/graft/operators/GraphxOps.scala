@@ -102,36 +102,26 @@ object GraphxOps {
     * assigned in sorted order, and GraphX labels with the min vertex
     * id). */
   def stronglyConnectedComponents(edges: DataFrame,
-      numIter: Int = 64, localEdgeThreshold: Int = 1 << 20): DataFrame = {
+      numIter: Int = 64): DataFrame = {
+    import graft.util.DriverLane
     val spark = edges.sparkSession
     // Runtime adaptation (clusterLabelsStar discipline): GraphX's
     // FW-BW peeling costs dozens of jobs; when the DISTINCT edge frame
-    // fits one task, an iterative driver-local Tarjan gives the same
-    // labels (min member under Spark's value order) in one pass. The
-    // limit(n+1) probe doubles as the edge fetch.
-    val e0 = edges.select(col("src"), col("dst")).distinct()
-    // The local Tarjan compares raw boxed values, which is only sound
-    // when both endpoint types are identical AND their boxed form
-    // orders like Spark does — mixed int/long endpoints CCE on
-    // compareTo, and complex ids (struct/array/binary) or IEEE floats
-    // (Spark sorts NaN largest; Double.compareTo differs on -0.0/NaN
-    // placement) would mislabel. Anything outside the whitelist keeps
-    // the SeqID/GraphX path, which orders through Spark itself.
-    val localSafe = {
-      import org.apache.spark.sql.types._
-      e0.schema(0).dataType == e0.schema(1).dataType &&
-      (e0.schema(0).dataType match {
-        case StringType | IntegerType | LongType | ShortType |
-             ByteType | BooleanType | DateType | TimestampType => true
-        case _: DecimalType => true
-        case _ => false
-      })
-    }
-    val probe =
-      if (!localSafe || localEdgeThreshold <= 0) null
-      else e0.limit(localEdgeThreshold + 1).collect()
-    if (probe != null && probe.length <= localEdgeThreshold)
-      return localScc(spark, e0, probe)
+    // fits the driver lane, an iterative driver-local Tarjan gives the
+    // same labels (min member under Spark's value order) in one pass.
+    // The bounded fetch doubles as the edge fetch. The Tarjan matches
+    // and orders boxed values, so ids of no driver-lane type (floating,
+    // binary, complex) keep the SeqID/GraphX path, which orders
+    // through Spark itself.
+    val idT = DriverLane.idType(edges.schema("src").dataType,
+      edges.schema("dst").dataType)
+    val onDriver = for {
+      t <- idT
+      e0 = edges.select(col("src").cast(t).as("src"),
+        col("dst").cast(t).as("dst")).distinct()
+      rows <- DriverLane.fetch(e0)
+    } yield localScc(spark, e0, rows)
+    if (onDriver.isDefined) return onDriver.get
     val ids = LinkOps.seqIds(
       edges.select(col("src")).union(edges.select(col("dst"))))
       .toDF("node_id", "seq_id")
@@ -160,20 +150,7 @@ object GraphxOps {
     * endpoints, matching Graph.fromEdges. */
   private def localScc(spark: SparkSession, e0: DataFrame,
       edgeRows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    val ord: Ordering[Any] = e0.schema("src").dataType match {
-      case org.apache.spark.sql.types.StringType => new Ordering[Any] {
-        override def compare(a: Any, b: Any): Int =
-          java.util.Arrays.compareUnsigned(
-            a.asInstanceOf[String].getBytes(
-              java.nio.charset.StandardCharsets.UTF_8),
-            b.asInstanceOf[String].getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-      }
-      case _ => new Ordering[Any] {
-        override def compare(a: Any, b: Any): Int =
-          a.asInstanceOf[Comparable[Any]].compareTo(b)
-      }
-    }
+    val ord = graft.util.DriverLane.order(e0.schema("src").dataType)
     val adj = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]]()
     val nodes = new java.util.LinkedHashSet[Any]()
     edgeRows.foreach { r =>

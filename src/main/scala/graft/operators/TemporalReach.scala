@@ -37,33 +37,31 @@ object TemporalReach {
     * round-synchronous order (bit-identical: same per-round min merge,
     * same maxHops semantics, and the earliest-arrival fixpoint is
     * unique regardless of work order). The probe `limit(n+1).collect()`
-    * doubles as the edge fetch. Past `localEdgeThreshold` (or with it
-    * ≤ 0) the distributed frontier loop runs as before. */
+    * doubles as the edge fetch. Past the [[graft.util.DriverLane]]
+    * bound, or with ids of no driver-lane type
+    * ([[graft.util.DriverLane.idType]]), the distributed frontier loop
+    * runs. */
   def earliestArrival(edges: DataFrame, starts: DataFrame,
       startTs: Long = Long.MinValue,
-      maxHops: Option[Int] = None,
-      localEdgeThreshold: Int = 1 << 20): DataFrame = {
+      maxHops: Option[Int] = None): DataFrame = {
     import graft.util.Checkpoints.cut
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    import graft.util.DriverLane
+    import org.apache.spark.sql.types.LongType
     val spark = edges.sparkSession
     // Canonical types BEFORE any collect: the local path reads edge_ms
     // with getLong and matches node ids by boxed equality, so an
     // IntegerType timestamp column or int/long-mixed endpoints would
     // CCE (or silently match nothing) where the distributed joins
-    // coerce. Timestamps cast to long always; ids unify to long when
-    // the endpoint types are both integral but differ.
+    // coerce. Timestamps cast to long always; ids to the driver lane's
+    // id type, or stay as they are when both endpoints share one.
     val srcT = edges.schema(0).dataType
     val dstT = edges.schema(1).dataType
-    def integral(t: org.apache.spark.sql.types.DataType) = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
+    val laneT = DriverLane.idType(srcT, dstT)
+    val idT = laneT.getOrElse {
+      require(srcT == dstT, s"earliestArrival: src ($srcT) and dst " +
+        s"($dstT) id types are not unifiable")
+      srcT
     }
-    val idT =
-      if (srcT == dstT) srcT
-      else if (integral(srcT) && integral(dstT)) LongType
-      else throw new IllegalArgumentException(
-        s"earliestArrival: src ($srcT) and dst ($dstT) id types are " +
-          "not unifiable")
     val e0 = edges.toDF("src", "dst", "edge_ms")
       .select(col("src").cast(idT).as("src"),
         col("dst").cast(idT).as("dst"),
@@ -71,12 +69,10 @@ object TemporalReach {
       .distinct()
     val startsC = starts.toDF("node_id")
       .select(col("node_id").cast(idT).as("node_id"))
-    val probe =
-      if (localEdgeThreshold <= 0) null
-      else e0.limit(localEdgeThreshold + 1).collect()
-    if (probe != null && probe.length <= localEdgeThreshold) {
+    val probe = if (laneT.isEmpty) None else DriverLane.fetch(e0)
+    if (probe.isDefined) {
       val ss = startsC.distinct().collect().map(_.get(0))
-      return localEarliest(spark, e0, probe, ss, startTs, maxHops)
+      return localEarliest(spark, e0, probe.get, ss, startTs, maxHops)
     }
     val e = e0.persist()
     var best = cut(startsC.distinct()

@@ -53,7 +53,7 @@ final case class PolicyKeepN(n: Int) extends FoundNodePolicy {
   * [[ListMergeUnifier]] needs nothing more. [[StdUnifier]] groups and
   * negates in driver loops instead and runs no job, as long as every
   * grouping key has a type whose JVM equality is Spark's grouping
-  * equality ([[DriverWeave.groupsOnDriver]]); other keys, such as a
+  * equality (`graft.util.DriverLane.idType`); other keys, such as a
   * floating `subId`, take the default form. */
 trait LinkUnifier {
   def unify(samples: DataFrame, nodes: DataFrame): DataFrame
@@ -114,7 +114,8 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
       nodes: DriverWeave.Nodes): DriverWeave.Table = {
     val (keyed, keys) = this.keyed(samples)
     if (getClass != classOf[StdUnifier] ||
-        !keys.forall(k => DriverWeave.groupsOnDriver(keyed.schema(k).dataType)))
+        !keys.forall(k =>
+          graft.util.DriverLane.idType(keyed.schema(k).dataType).isDefined))
       return super.unifyOnDriver(samples, nodes)
     val winners = DriverWeave.latestPerKey(DriverWeave.Table(keyed), keys,
       Seq("epoch_ms", "sample_seq"))

@@ -145,14 +145,12 @@ object Mixture {
     * per-stratum running sum is [[PipelineOps.exclusivePrefixSum]] —
     * two-pass range-sort, no per-stratum window task.
     *
-    * `windowThreshold` is threaded to the prefix sum: it inherits its
-    * eagerness contract (a bounded row-probe JOB at plan construction
-    * when > 0 — Round11Spec pins the count); callers that KNOW the
-    * corpus is large should pass 0 to skip the probe and take the
-    * two-pass scan directly. */
+    * It inherits the prefix sum's eagerness contract: a bounded
+    * row-probe JOB at plan construction ([[graft.util.DriverLane]];
+    * Round11Spec pins the count). */
   def applyPlanTokenExact(docs: DataFrame, planDf: DataFrame,
       strataCol: String = "lang", idCol: String = "doc_id",
-      textCol: String = "text", windowThreshold: Int = 1 << 20): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     import graft.time.Buckets.intDiv
     val p = planDf.select(col("stratum").as(strataCol),
       col("n_toks"), col("want_toks"))
@@ -162,7 +160,7 @@ object Mixture {
         lit(0L)).as("__t"),
       PipelineOps.hashDraw(col(idCol)).as("__draw"))
     val cum = PipelineOps.exclusivePrefixSum(toks, strataCol,
-      Seq("__draw", idCol), "__t", "__cum", windowThreshold)
+      Seq("__draw", idCol), "__t", "__cum")
       .select(col(idCol), col("__cum"))
     val joined = docs.join(broadcast(p), Seq(strataCol))
       .join(cum, Seq(idCol))

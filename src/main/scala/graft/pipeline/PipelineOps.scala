@@ -320,14 +320,14 @@ object PipelineOps {
     * widest task is one range partition, independent of stratum skew. */
   def packSequences(docs: DataFrame, capacity: Int = 2048,
       strataCol: String = "lang", idCol: String = "doc_id",
-      textCol: String = "text", windowThreshold: Int = 1 << 20): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // coalesce: tokenCount is null for null text; a null would NPE the
     // per-partition scans, so degrade to a zero-token doc instead.
     packSequencesByCount(
       docs.select(col(idCol), col(strataCol),
         coalesce(TextOps.tokenCount(col(textCol)).cast("long"), lit(0L))
           .as("n_tokens")),
-      capacity, strataCol, idCol, windowThreshold = windowThreshold)
+      capacity, strataCol, idCol)
   }
 
   /** [[packSequences]] over an ALREADY-COUNTED frame — callers that
@@ -337,12 +337,11 @@ object PipelineOps {
     * bin). */
   def packSequencesByCount(counted: DataFrame, capacity: Int = 2048,
       strataCol: String = "lang", idCol: String = "doc_id",
-      countCol: String = "n_tokens",
-      windowThreshold: Int = 1 << 20): DataFrame = {
+      countCol: String = "n_tokens"): DataFrame = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
     exclusivePrefixSum(
       counted.select(col(idCol), col(strataCol), col(countCol)),
-      strataCol, Seq(idCol), countCol, "__cum", windowThreshold)
+      strataCol, Seq(idCol), countCol, "__cum")
       .withColumn("bin", graft.time.Buckets.intDiv(col("__cum"),
         lit(capacity.toLong)).cast("long"))
       .drop("__cum")
@@ -370,13 +369,12 @@ object PipelineOps {
     * runs, so the merged running sum would be non-contiguous and wrong.
     * `valueCol` must be a non-null LongType (callers coalesce).
     *
-    * EAGERNESS CONTRACT: with `windowThreshold > 0` (the default) this
-    * call runs one bounded `limit(n+1)` count job at PLAN-CONSTRUCTION
-    * time to pick the plan shape — a deliberate action side effect
-    * (the projected constant keeps it a pruned scan). Callers that know
-    * the input is large (or need a fully lazy plan) pass
-    * `windowThreshold = 0` to skip the probe and take the two-pass scan
-    * unconditionally.
+    * EAGERNESS CONTRACT: this call runs one bounded `limit(n+1)` count
+    * job at PLAN-CONSTRUCTION time to pick the plan shape — a
+    * deliberate action side effect (the projected constant keeps it a
+    * pruned scan), the [[graft.util.DriverLane]] probe. Under a bound of
+    * 0 ([[graft.util.DriverLane.withBound]]) the probe is skipped and the
+    * two-pass scan runs unconditionally.
     *
     * Cache hygiene (skyline2 discipline): the sorted intermediate is
     * persisted across the two passes — pass 2 must re-read the exact
@@ -387,21 +385,19 @@ object PipelineOps {
     * live for the returned lazy plan, for the same reason. */
   def exclusivePrefixSum(df: DataFrame, strataCol: String,
       orderCols: Seq[String], valueCol: String,
-      outCol: String, windowThreshold: Int = 1 << 20): DataFrame = {
+      outCol: String): DataFrame = {
     val spark = df.sparkSession
     // Runtime adaptation (stronglyConnectedComponents discipline): the
-    // two-pass scan pays ~4 jobs + an RDD persist; below the row
-    // threshold the classic per-stratum window states the same exclusive
-    // running sum (spec-pinned byte-identical) in one shuffle. The
-    // window funnels each stratum through ONE task — exactly the
-    // scale-killer this operator exists to avoid — so it is gated on a
-    // bounded limit(n+1) row probe, never taken on faith. The probe
-    // projects a constant first so column pruning reaches the scan:
-    // counting rows must not evaluate the (possibly expensive) value
-    // column — q40's tokenCount over every document tripled the probe.
-    if (windowThreshold > 0 &&
-        df.select(lit(1)).limit(windowThreshold + 1).count() <=
-          windowThreshold) {
+    // two-pass scan pays ~4 jobs + an RDD persist; on the driver lane
+    // the classic per-stratum window states the same exclusive running
+    // sum (spec-pinned byte-identical) in one shuffle. The window
+    // funnels each stratum through ONE task — exactly the scale-killer
+    // this operator exists to avoid — so it is gated on the lane's
+    // bounded row probe, never taken on faith. The probe projects a
+    // constant first so column pruning reaches the scan: counting rows
+    // must not evaluate the (possibly expensive) value column — q40's
+    // tokenCount over every document tripled the probe.
+    if (graft.util.DriverLane.fits(df)) {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(strataCol))
         .orderBy(orderCols.map(col): _*)

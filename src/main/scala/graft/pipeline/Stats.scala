@@ -154,8 +154,8 @@ object Stats {
     * task, so instead the ranks are computed on the DISTINCT-VALUE
     * COUNT table (orders of magnitude smaller) via
     * [[PipelineOps.exclusivePrefixSum]] (range-sorted two-pass scan —
-    * no single-partition window there either, and below its row
-    * threshold it takes the cheap window on the small table anyway)
+    * no single-partition window there either, and on the driver lane
+    * it takes the cheap window on the small table anyway)
     * and joined back on the value:
     *
     *  - `rank`       = 1 + Σ counts of strictly-smaller values (SQL
@@ -166,13 +166,13 @@ object Stats {
     * together; a global ordering of nulls is not meaningful —
     * filter upstream if they matter).
     *
-    * Note: below `windowThreshold` DISTINCT VALUES the prefix scan
-    * deliberately takes a constant-partition window — a single task
-    * over the bounded count table (≤ 2²⁰ rows by the probe), one of
-    * the engine's documented intentional single-partition windows
-    * (the `Skew.report` class); past the threshold the two-pass
-    * range-sort scan runs instead, so the full-table row count never
-    * reaches one task either way. */
+    * Note: on the [[graft.util.DriverLane]] (at most its bound in
+    * DISTINCT VALUES) the prefix scan deliberately takes a
+    * constant-partition window — a single task over the bounded count
+    * table, one of the engine's documented intentional
+    * single-partition windows (the `Skew.report` class); past the
+    * bound the two-pass range-sort scan runs instead, so the
+    * full-table row count never reaches one task either way. */
   /** Freshness-decayed counts — the exponential-decay popularity /
     * recency score used to weight sources and keys by how CURRENT
     * their activity is, stated integer-exactly: age is bucketed into
@@ -226,21 +226,19 @@ object Stats {
     * and immune to any monotone rescaling of the inputs. Returns df +
     * per-signal `rnk_<col>` + `blend`. Ties share ranks (standard
     * competition ranking), so equal-signal docs blend equally. */
-  def rankBlend(df: DataFrame, signals: Seq[(String, Long)],
-      windowThreshold: Int = 1 << 20): DataFrame = {
+  def rankBlend(df: DataFrame, signals: Seq[(String, Long)]): DataFrame = {
     require(signals.nonEmpty, "rankBlend needs signal columns")
     var cur = df
     for ((c, _) <- signals)
       cur = globalRanks(cur, c, rankCol = s"rnk_$c",
-        denseRankCol = s"__dr_$c", windowThreshold = windowThreshold)
+        denseRankCol = s"__dr_$c")
         .drop(s"__dr_$c")
     cur.withColumn("blend",
       signals.map { case (c, w) => col(s"rnk_$c") * w }.reduce(_ + _))
   }
 
   def globalRanks(df: DataFrame, valueCol: String,
-      rankCol: String = "rnk", denseRankCol: String = "drnk",
-      windowThreshold: Int = 1 << 20): DataFrame = {
+      rankCol: String = "rnk", denseRankCol: String = "drnk"): DataFrame = {
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol))
       .agg(count(lit(1)).as("__cnt"))
@@ -248,8 +246,8 @@ object Stats {
       .withColumn("__all", lit(0))
     val cum = PipelineOps.exclusivePrefixSum(
       PipelineOps.exclusivePrefixSum(counts, "__all", Seq(valueCol),
-        "__cnt", "__below", windowThreshold),
-      "__all", Seq(valueCol), "__one", "__dbelow", windowThreshold)
+        "__cnt", "__below"),
+      "__all", Seq(valueCol), "__one", "__dbelow")
     df.join(cum.select(col(valueCol),
         (col("__below") + 1L).as(rankCol),
         (col("__dbelow") + 1L).as(denseRankCol)),
@@ -267,8 +265,8 @@ object Stats {
     * LONG past ~3·10⁹ rows a side). Same machinery as prCurve:
     * per-score counts, one ascending exclusive-prefix pass, scalar
     * combine. One row: (n_pos, n_neg, two_u, auc_ppm). */
-  def aucExact(df: DataFrame, scoreCol: String, labelCol: String,
-      windowThreshold: Int = 1 << 20): DataFrame = {
+  def aucExact(df: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame = {
     import graft.time.Buckets.intDiv
     def dec(c: Column): Column = c.cast("decimal(19,0)")
     val counts = df.filter(col(scoreCol).isNotNull)
@@ -277,7 +275,7 @@ object Stats {
         sum(when(col(labelCol), 0L).otherwise(1L)).as("__neg"))
       .withColumn("__all", lit(0))
     val below = PipelineOps.exclusivePrefixSum(counts, "__all",
-      Seq("__s"), "__neg", "__neg_below", windowThreshold)
+      Seq("__s"), "__neg", "__neg_below")
     below.agg(
         sum(col("__pos")).as("n_pos"),
         sum(col("__neg")).as("n_neg"),
@@ -346,8 +344,8 @@ object Stats {
     * total_pos − pos_below, fp = total_neg − neg_below. Linear,
     * skew-free — the threshold table is as big as the distinct-score
     * set, not the corpus. NULL labels count as negatives. */
-  def prCurve(df: DataFrame, scoreCol: String, labelCol: String,
-      windowThreshold: Int = 1 << 20): DataFrame = {
+  def prCurve(df: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame = {
     import graft.time.Buckets.intDiv
     val counts = df.filter(col(scoreCol).isNotNull)
       .groupBy(col(scoreCol).as("threshold"))
@@ -356,8 +354,8 @@ object Stats {
       .withColumn("__all", lit(0))
     val below = PipelineOps.exclusivePrefixSum(
       PipelineOps.exclusivePrefixSum(counts, "__all", Seq("threshold"),
-        "__pos", "__pos_below", windowThreshold),
-      "__all", Seq("threshold"), "__neg", "__neg_below", windowThreshold)
+        "__pos", "__pos_below"),
+      "__all", Seq("threshold"), "__neg", "__neg_below")
     // totals from the (materialized) prefix frame — not a second scan
     // of the input
     val totals = below.agg(sum(col("__pos")).as("__tot_pos"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
 import graft.model.SnapshotGraph
 import graft.operators._
 import graft.time.Interval
+import graft.util.DriverLane
 
 /** The query object (net-spider/src/NetSpider/Query.hs:47-80): start
   * nodes + time interval + retention policy + unifier, plus a maxHops
@@ -44,12 +45,12 @@ case class Query[N](
   * boundary nodes.
   *
   * Two lanes, one result:
-  *  - driver-sized: when the retained frame holds at most
-  *    `Bfs.LocalFindings` findings (one bounded `limit(n+1).collect()`
-  *    fetch) and the start ids unify with the subject type
-  *    (`Bfs.localIdType`) into a type whose JVM equality is Spark's
-  *    (not floating or binary), the retained rows are fetched once, the
-  *    BFS runs on the driver (`Bfs.localHops`), and
+  *  - driver-sized: when the retained frame and the start set fit the
+  *    [[graft.util.DriverLane]] findings bound (one bounded
+  *    `limit(n+1).collect()` fetch each) and the start, subject and
+  *    target ids have a driver-lane id type (`DriverLane.idType`: not
+  *    floating or binary), the retained rows are fetched once, the BFS
+  *    runs on the driver (`Bfs.localHops`), and
   *    [[graft.operators.DriverWeave]] weaves the fetched rows in plain
   *    Scala, folding its projections over local frames: no job for
   *    [[graft.operators.StdUnifier]]. Any other unifier
@@ -60,13 +61,13 @@ case class Query[N](
   *    reading it (GraphML, JSON) launches no job, and nothing stays
   *    persisted. A query at that size is bound by per-job overhead, not
   *    data: with `StdUnifier` the fetch is its only job.
-  *  - distributed: past the bound (or with ids that do not unify or are
-  *    floating or binary) the
-  *    retained frame is persisted, `Bfs.reachable` restricts it, and the
-  *    lazy [[graft.operators.Weave.snapshot]] weaves it — the only path
-  *    for histories too big to fetch, and the reference the driver weave
-  *    must match row for row. The persisted frame lives as long as the
-  *    returned graph.
+  *  - distributed: past the bound (or with ids of no driver-lane type)
+  *    the retained frame is cut lazily (`Checkpoints.cut`),
+  *    `Bfs.reachable` restricts it, and the lazy
+  *    [[graft.operators.Weave.snapshot]] weaves it — the only path for
+  *    histories too big to fetch, and the reference the driver weave
+  *    must match row for row. The cut's blocks are stored on first use,
+  *    registered with no cache, and freed with the returned graph.
   */
 object GetSnapshot {
 
@@ -81,31 +82,23 @@ object GetSnapshot {
     * lane the start set never materializes on the driver, it stays a
     * semi-join input. `query.startsFrom` is ignored. */
   def ofStarts(spark: SparkSession, findings: DataFrame,
-      startsDf: DataFrame, query: Query[_]): SnapshotGraph =
-    ofStarts(spark, findings, startsDf, query, Bfs.LocalFindings)
-
-  /** [[ofStarts]] with the driver-sized lane's bound explicit; `0`
-    * forces the distributed lane (lane-parity specs). */
-  private[graft] def ofStarts(spark: SparkSession, findings: DataFrame,
-      startsDf: DataFrame, query: Query[_],
-      localFindings: Int): SnapshotGraph = {
+      startsDf: DataFrame, query: Query[_]): SnapshotGraph = {
     val filtered =
       if (query.interval.isWhole) findings
       else findings.filter(query.interval.predicate(col("epoch_ms")))
     val retained = Weave.retainFindings(filtered, query.policy)
     val starts = startsDf.toDF("node_id")
-    driverSized(spark, retained, starts, query, localFindings)
+    driverSized(spark, retained, starts, query)
       .getOrElse(distributed(retained, starts, query))
   }
 
   /** The driver-sized lane: None when the retained frame or the start
-    * set exceeds `bound`, or when the ids do not unify into a type the
-    * driver groups on (not floating or binary). Otherwise the
+    * set exceeds the `DriverLane.findings` bound, or when the ids have
+    * no driver-lane id type (`DriverLane.idType`). Otherwise the
     * distributed lane's BFS restriction, run over the fetched rows, and
     * the driver weave of the reachable ones. */
   private def driverSized(spark: SparkSession, retained: DataFrame,
-      startsDf: DataFrame, query: Query[_],
-      bound: Int): Option[SnapshotGraph] = {
+      startsDf: DataFrame, query: Query[_]): Option[SnapshotGraph] = {
     val schema = retained.schema
     val si = schema.fieldIndex("subject")
     val li = schema.fieldIndex("links")
@@ -114,18 +107,19 @@ object GetSnapshot {
     val ti = link.fieldIndex("target")
     val types = Seq(schema(si).dataType, link(ti).dataType,
       startsDf.schema(0).dataType)
-    val idT = if (bound <= 0) None else Bfs.localIdType(types)
     // the BFS sets and the driver weave group ids by JVM equality
-    if (!idT.exists(DriverWeave.groupsOnDriver)) return None
+    val idT = DriverLane.idType(types: _*)
+    if (idT.isEmpty) return None
     // Starts first: a driver-side list is a local relation, so this
     // fetch runs no job.
-    val startRows = startsDf.limit(bound + 1).collect()
-    if (startRows.length > bound) return None
-    val rows = retained.limit(bound + 1).collect()
-    if (rows.length > bound) return None
+    val bound = DriverLane.findings
+    val fetched = for (s <- DriverLane.fetch(startsDf, bound);
+        r <- DriverLane.fetch(retained, bound)) yield (s, r)
+    if (fetched.isEmpty) return None
+    val (startRows, rows) = fetched.get
 
     // Ids match by boxed equality: mixed integrals, unified to BIGINT by
-    // Bfs.localIdType, are compared as longs.
+    // DriverLane.idType, are compared as longs.
     val id: Any => Any =
       if (types.distinct.size == 1) identity
       else { case n: Number => n.longValue; case v => v }
@@ -154,12 +148,13 @@ object GetSnapshot {
 
   private def distributed(retained0: DataFrame, starts0: DataFrame,
       query: Query[_]): SnapshotGraph = {
-    // persisted: the retained frame feeds FOUR consumers (node summary,
-    // BFS edge list, reachable findings, bare-visited) — without the
-    // persist each consumer re-runs the findings scan + retention
-    // aggregation. Stays cached for the life of the returned (lazy)
-    // SnapshotGraph; MEMORY_AND_DISK, so it spills rather than OOMs.
-    val retained = retained0.persist()
+    // cut: the retained frame feeds FOUR consumers (node summary, BFS
+    // edge list, reachable findings, bare-visited) — without it each
+    // consumer re-runs the findings scan + retention aggregation. A lazy
+    // cut stores the blocks on first use and registers no cache entry,
+    // so no later query over the same plan reads them, and they are
+    // freed with the returned (lazy) SnapshotGraph.
+    val retained = graft.util.Checkpoints.cut(retained0, eager = false)
 
     val starts = starts0.distinct()
 

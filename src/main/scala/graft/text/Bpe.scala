@@ -78,43 +78,26 @@ object Bpe {
     * Runtime adaptation (the `clusterLabelsStar` discipline): the merge
     * loop is inherently sequential — one Spark job per round is 32k
     * scheduler round-trips for a real vocab, pure latency on a cluster.
-    * When the distinct-word table has at most `localThreshold` rows
-    * (checked with a single `limit(n+1).collect()` probe that doubles
-    * as the data fetch), ALL rounds run in one driver-local loop with
-    * bit-identical results (spec-pinned parity, including UTF-8
-    * tie-break order). The distinct-word table is vocab-sized
-    * (~10⁵-10⁶ rows even at 100 TB corpus scale), so the local path is
-    * the common case; the distributed loop remains for degenerate
-    * vocabularies past the threshold. */
+    * When the distinct-word table fits the [[graft.util.DriverLane]]
+    * (one bounded fetch that doubles as the data fetch), ALL rounds run
+    * in one driver-local loop with bit-identical results (spec-pinned
+    * parity, including UTF-8 tie-break order). The distinct-word table
+    * is vocab-sized (~10⁵-10⁶ rows even at 100 TB corpus scale), so the
+    * local path is the common case; the distributed loop remains for
+    * degenerate vocabularies past the bound. */
   def learnMerges(docs: DataFrame, numMerges: Int = 10,
-      minCount: Long = 2L, textCol: String = "text",
-      localThreshold: Int = 1 << 20): DataFrame = {
+      minCount: Long = 2L, textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val words0 = initSymbols(wordCounts(docs, textCol))
-    val probe =
-      if (localThreshold <= 0) Array.empty[org.apache.spark.sql.Row]
-      else words0.select(col("cnt"), col("syms"))
-        .limit(localThreshold + 1).collect()
     val merges: Seq[(Long, String, String, Long)] =
-      if (localThreshold > 0 && probe.length <= localThreshold) {
-        // probe returned strictly fewer rows than its limit ⇒ it IS the
-        // whole table
-        localLearn(probe.map(r =>
+      graft.util.DriverLane.fetch(words0.select(col("cnt"), col("syms"))) match {
+        case Some(rows) => localLearn(rows.map(r =>
           (r.getLong(0), r.getSeq[String](1).toArray)), numMerges, minCount)
-      } else distributedLearn(words0, numMerges, minCount)
+        case None => distributedLearn(words0, numMerges, minCount)
+      }
     merges.toDF("rank", "left", "right", "pair_cnt")
   }
-
-  /** Unsigned UTF-8 byte comparison — Spark's UTF8String order, so the
-    * local loop's tie-break matches `orderBy(col("left"), col("right"))`
-    * exactly, supplementary-plane symbols included. */
-  private def utf8Cmp(a: String, b: String): Int =
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def utf8Lt(a: String, b: String): Boolean = utf8Cmp(a, b) < 0
 
   /** Greedy non-overlapping left-to-right replacement — the local twin
     * of [[mergePair]]'s fold (same prev/emit state machine). */
@@ -163,8 +146,11 @@ object Bpe {
             y: (Long, String, String)): Int = {
           if (x._1 != y._1) java.lang.Long.compare(y._1, x._1)
           else {
-            val c = utf8Cmp(x._2, y._2)
-            if (c != 0) c else utf8Cmp(x._3, y._3)
+            // Spark's string order, so the tie-break matches
+            // `orderBy(col("left"), col("right"))`
+            val c = graft.util.DriverLane.strings.compare(x._2, y._2)
+            if (c != 0) c
+            else graft.util.DriverLane.strings.compare(x._3, y._3)
           }
         }
       })

@@ -40,6 +40,19 @@ class BenchSpec extends SparkSpec {
     }
   }
 
+  describe("Bench.totalLine") {
+    it("labels the result with cpus and defaultParallelism") {
+      val line = Bench.totalLine(spark, 3, 1.5, "{\"q01\":1.5}", 0.25,
+        "/data/sf0.1")
+      field(line, "cpus").asInt shouldBe 3
+      field(line, "defaultParallelism").asInt shouldBe
+        spark.sparkContext.defaultParallelism
+      field(line, "queries").get("q01").asDouble shouldBe 1.5
+      field(line, "value").asDouble shouldBe 1.5
+      field(line, "sf").asText shouldBe "/data/sf0.1"
+    }
+  }
+
   describe("Verify.dump") {
     it("dumps the gates that run, still writes the oracle file, and " +
         "names the gates that threw") {

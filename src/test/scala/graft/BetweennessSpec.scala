@@ -40,7 +40,7 @@ class BetweennessSpec extends SparkSpec {
     it("refuses graphs over the local bound") {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
       an[IllegalArgumentException] should be thrownBy
-        Betweenness.exact(edges, localFallbackEdges = 2)
+        graft.util.DriverLane.withBound(2)(Betweenness.exact(edges))
     }
   }
 

@@ -56,15 +56,15 @@ class CommunitiesSpec extends SparkSpec {
     import spark.implicits._
     val e = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"),
       ("b", "d")).toDF("src", "dst")
-    // probe disabled → the lazy fast path; threshold 1 → 5 raw edges
-    // exceed it, cut from round 1
-    val lazyRun = Communities.labelPropagation(e, rounds = 2,
-        cutEdgeThreshold = 0)
+    // 5 raw edges are within the default bound → the lazy fast path;
+    // bound 1 → they exceed it, cut from round 1; bound 0 → the
+    // at-scale path, cut from round 1 too
+    def run() = Communities.labelPropagation(e, rounds = 2)
       .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    val cutRun = Communities.labelPropagation(e, rounds = 2,
-        cutEdgeThreshold = 1)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    val lazyRun = run()
+    val cutRun = graft.util.DriverLane.withBound(1)(run())
     lazyRun shouldBe cutRun
+    graft.util.DriverLane.withBound(0)(run()) shouldBe lazyRun
   }
 
   it("is deterministic across partitionings and zero rounds is the " +

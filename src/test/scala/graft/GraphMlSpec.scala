@@ -137,6 +137,35 @@ class GraphMlSpec extends SparkSpec {
     GraphMl.assembleDistributed(spark, dir) shouldBe driverDoc
   }
 
+  it("parallel links render in one order, whichever order they are " +
+      "collected in, on the driver and distributed") {
+    val nodes = spark.createDataFrame(Seq(
+      ("a", false, Some(100L), Option.empty[Map[String, String]]),
+      ("b", false, Some(100L), Option.empty[Map[String, String]])))
+      .toDF("node_id", "is_on_boundary", "epoch_ms", "node_attrs")
+    val parallel = Seq(
+      ("a", "b", true, 300L, Map("w" -> "2")),
+      ("a", "b", true, 200L, Map("w" -> "1")),
+      ("a", "b", false, 200L, Map("w" -> "1")))
+    def graph(links: Seq[(String, String, Boolean, Long, Map[String, String])]) =
+      SnapshotGraph(nodes, spark.createDataFrame(links).toDF("source_node",
+        "dest_node", "is_directed", "epoch_ms", "link_attrs"))
+    val docs = parallel.permutations.map(p => GraphMl.write(graph(p))).toSet
+    docs should have size 1
+    val doc = docs.head
+    // ties broken by the rendered element: directed="false" < "true",
+    // then the @timestamp data, 200 < 300
+    val at = Seq("directed=\"false\"", "directed=\"true\">\n    <data key=\"d3\">200",
+      "directed=\"true\">\n    <data key=\"d3\">300").map(doc.indexOf(_))
+    at.foreach(_ should be >= 0)
+    at shouldBe at.sorted
+    for (p <- Seq(parallel, parallel.reverse)) {
+      val dir = java.nio.file.Files.createTempDirectory("graphml_par").toString
+      GraphMl.writeDistributed(graph(p), dir)
+      GraphMl.assembleDistributed(spark, dir) shouldBe doc
+    }
+  }
+
   it("renders @timestamp_str in the stored zone (showTimestamp parity)") {
     import graft.model.Tz
     val nodes = spark.createDataFrame(Seq(

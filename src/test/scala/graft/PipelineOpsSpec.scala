@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.pipeline.PipelineOps
 import graft.text.TextOps
+import graft.util.DriverLane
 
 /** Corpus-shaping operators: near-dup clustering, contamination,
   * normalization, sampling, packing. */
@@ -69,11 +70,11 @@ class PipelineOpsSpec extends SparkSpec {
     // Every other CC test rides the adaptive small-tail union-find
     // (edge sets far below the 1M-edge bound), so this is the ONLY
     // exercise of the O(log n) shuffle rounds — the path a
-    // billion-edge dup graph takes at 100 TB. localFallbackEdges = 0
-    // forces it.
+    // billion-edge dup graph takes at 100 TB. A driver-lane bound of
+    // 0 forces it.
     import spark.implicits._
     def starDist(pairs: org.apache.spark.sql.DataFrame) =
-      Dedup.clusterLabelsStar(pairs, localFallbackEdges = 0L).collect()
+      DriverLane.withBound(0)(Dedup.clusterLabelsStar(pairs).collect())
         .map(r => (r.get(0), r.get(1))).sortBy(_._1.toString).toSeq
     def simple(pairs: org.apache.spark.sql.DataFrame) =
       Dedup.clusterLabels(pairs).collect()
@@ -344,18 +345,19 @@ class PipelineOpsSpec extends SparkSpec {
       (2L, "a", ("x " * 2050).trim),       // 2050 tokens, starts at cum 3
       (3L, "a", "tail tokens here"),       // after 2053 → bin 1
       (10L, "b", "other stratum")).toDF("doc_id", "lang", "text")
-    // the scale contract: above the adaptive row threshold the running
-    // sum is the two-pass prefix scan, not a Window.partitionBy(lang)
-    // sort funnelling a whole stratum through one task
-    val got = PipelineOps.packSequences(docs, capacity = 2048,
-      windowThreshold = 0)
+    // the scale contract: past the driver-lane bound the running sum
+    // is the two-pass prefix scan, not a Window.partitionBy(lang) sort
+    // funnelling a whole stratum through one task
+    val got = DriverLane.withBound(0) {
+      PipelineOps.packSequences(docs, capacity = 2048)
+    }
     val plan = got.queryExecution.executedPlan.toString
     plan should not include "Window"
     val rows = got.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(3))).sortBy(_._1)
     rows shouldBe Seq((1L, "a", 0L), (2L, "a", 0L), (3L, "a", 1L),
       (10L, "b", 0L))
-    // below the threshold the small-input window plan fires (q40 bench
+    // on the driver lane the small-input window plan fires (q40 bench
     // path) and states the identical bins
     val small = PipelineOps.packSequences(docs, capacity = 2048)
     small.queryExecution.executedPlan.toString should include("Window")
@@ -374,12 +376,11 @@ class PipelineOpsSpec extends SparkSpec {
     }.toDF("grp", "doc_id", "lang", "n").repartition(9)
       .select(col("grp"), col("doc_id"), col("lang"), col("n").cast("long")
         .as("n"))
-    val twoPass = PipelineOps.exclusivePrefixSum(rows, "lang",
-      Seq("grp", "doc_id"), "n", "cum", windowThreshold = 0)
+    def run() = PipelineOps.exclusivePrefixSum(rows, "lang",
+        Seq("grp", "doc_id"), "n", "cum")
       .collect().map(r => (r.getLong(1), r.getLong(4))).sortBy(_._1)
-    val windowed = PipelineOps.exclusivePrefixSum(rows, "lang",
-      Seq("grp", "doc_id"), "n", "cum", windowThreshold = 1 << 20)
-      .collect().map(r => (r.getLong(1), r.getLong(4))).sortBy(_._1)
+    val twoPass = DriverLane.withBound(0)(run())
+    val windowed = DriverLane.withBound(1 << 20)(run())
     windowed shouldBe twoPass
   }
 
@@ -411,11 +412,12 @@ class PipelineOpsSpec extends SparkSpec {
     val docs = (0L until 50L).map(i => (i, "a", "w x y"))
       .toDF("doc_id", "lang", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // windowThreshold = 0 forces the two-pass scan: 50 rows would
+    // a driver-lane bound of 0 forces the two-pass scan: 50 rows would
     // otherwise take the window path, which persists no RDD and made
     // this unpersist-regression spec vacuous (r9 ADVICE)
-    PipelineOps.packSequences(docs, capacity = 8, windowThreshold = 0)
-      .count()
+    DriverLane.withBound(0) {
+      PipelineOps.packSequences(docs, capacity = 8).count()
+    }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     // localCheckpoint legitimately pins the (narrow) RESULT; the
     // corpus-sized sorted intermediate must not survive. The two are

@@ -9,6 +9,7 @@ import graft.operators._
 import graft.query.{GetSnapshot, Query}
 import graft.sources.History
 import graft.time.{Interval, IntervalEnd}
+import graft.util.DriverLane
 
 /** Link row for the BIGINT-id cases (top level so Spark finds a TypeTag). */
 case class LLink(target: Long, link_state: String,
@@ -64,20 +65,17 @@ class QuerySpec extends SparkSpec {
   }
 
   /** Runs `q` from `starts` through both GetSnapshot lanes — the
-    * driver-sized one and the distributed one (bound 0) — and checks
-    * that they agree: same schema, same sorted nodes and links,
-    * byte-identical GraphML. `localBound` is the driver-sized lane's
-    * bound; the lane must have run (its frames are local relations).
+    * driver-sized one, under the driver-lane bound in force, and the
+    * distributed one (bound 0) — and checks that they agree: same
+    * schema, same sorted nodes and links, byte-identical GraphML. The
+    * driver-sized lane must have run (its frames are local relations).
     * Returns the driver-sized lane's graph. */
-  /** `sameGraphMl = false` skips the GraphML byte check, which parallel
-    * links (a `subId` unifier) can fail: `GraphMl.write` orders links by
-    * (source, dest) only, so links sharing both keep their collect
-    * order. */
   private def bothLanes(findings: DataFrame, starts: DataFrame,
-      q: Query[_], localBound: Int = Bfs.LocalFindings,
-      sameGraphMl: Boolean = true): SnapshotGraph = {
-    val local = GetSnapshot.ofStarts(spark, findings, starts, q, localBound)
-    val dist = GetSnapshot.ofStarts(spark, findings, starts, q, 0)
+      q: Query[_]): SnapshotGraph = {
+    val local = GetSnapshot.ofStarts(spark, findings, starts, q)
+    val dist = DriverLane.withBound(0) {
+      GetSnapshot.ofStarts(spark, findings, starts, q)
+    }
     local.nodes.queryExecution.optimizedPlan shouldBe a[LocalRelation]
     local.links.queryExecution.optimizedPlan shouldBe a[LocalRelation]
     local.nodes.schema shouldBe dist.nodes.schema
@@ -87,7 +85,7 @@ class QuerySpec extends SparkSpec {
     try {
       sortedRows(local.nodes) shouldBe sortedRows(dist.nodes)
       sortedRows(local.links) shouldBe sortedRows(dist.links)
-      if (sameGraphMl) graphMl(local) shouldBe graphMl(dist)
+      graphMl(local) shouldBe graphMl(dist)
     } finally distFrames.foreach(_.unpersist())
     local
   }
@@ -348,8 +346,8 @@ class QuerySpec extends SparkSpec {
       val starts = spark.createDataset(Seq("n1"))(stringEnc).toDF("node_id")
       val q = Query(Seq("n1"), policy = PolicyAppend)
       val n = intervalFns.size
-      bothLanes(fns, starts, q, localBound = n)
-      GetSnapshot.ofStarts(spark, fns, starts, q, n - 1)
+      DriverLane.withBound(n)(bothLanes(fns, starts, q))
+      DriverLane.withBound(n - 1)(GetSnapshot.ofStarts(spark, fns, starts, q))
         .nodes.queryExecution.optimizedPlan should not be a[LocalRelation]
     }
 
@@ -426,11 +424,8 @@ class QuerySpec extends SparkSpec {
 
     for ((name, unifier) <- unifiers)
       it(s"agree for $name under every policy, with and without maxHops") {
-        // the subId unifier's parallel links may render in either order
-        val sameGraphMl = name != "StdUnifier(subId)"
         def both[N: Encoder](h: DataFrame, q: Query[N]) = bothLanes(h,
-          spark.createDataset(q.startsFrom).toDF("node_id"), q,
-          sameGraphMl = sameGraphMl)
+          spark.createDataset(q.startsFrom).toDF("node_id"), q)
         val nLinks =
           for (policy <- Seq(PolicyOverwrite, PolicyAppend, PolicyKeepN(3));
                hops <- Seq(None, Some(1)))
@@ -460,8 +455,8 @@ class QuerySpec extends SparkSpec {
         .toDF("node_id")
       // both findings retained, so both spellings own one
       val q = Query(Seq(0.0), policy = PolicyAppend)
-      val local = GetSnapshot.ofStarts(spark, h, starts, q, Bfs.LocalFindings)
-      val dist = GetSnapshot.ofStarts(spark, h, starts, q, 0)
+      val local = GetSnapshot.ofStarts(spark, h, starts, q)
+      val dist = DriverLane.withBound(0)(GetSnapshot.ofStarts(spark, h, starts, q))
       sortedRows(local.nodes) shouldBe sortedRows(dist.nodes)
       sortedRows(local.links) shouldBe sortedRows(dist.links)
       local.nodes.collect().map(r => (r.getDouble(0), r.getBoolean(1)))
@@ -489,9 +484,7 @@ class QuerySpec extends SparkSpec {
 
     it("the weave runs no job for StdUnifier") {
       // a local findings frame under PolicyAppend: the fetch, the BFS and
-      // the weave all run on the driver. A seed no case above uses: the
-      // distributed lane leaves its retained frame cached, and a cached
-      // plan would turn the fetch into a scan of the cache.
+      // the weave all run on the driver
       for (u <- Seq(new StdUnifier(), unifiers(1)._2, unifiers(2)._2, noNeg)) {
         var g: SnapshotGraph = null
         jobsDuring {
@@ -502,6 +495,19 @@ class QuerySpec extends SparkSpec {
         } shouldBe 0
         g.links.queryExecution.optimizedPlan shouldBe a[LocalRelation]
       }
+    }
+
+    it("a distributed run leaves no cache that a later driver-lane " +
+        "query over the same history reads") {
+      val q = Query(Seq("0", "3"), policy = PolicyAppend)
+      val dist = DriverLane.withBound(0)(GetSnapshot(spark, history(8), q))
+      dist.nodes.collect()
+      dist.links.collect()
+      jobsDuring {
+        val g = GetSnapshot(spark, history(8), q)
+        g.nodes.collect()
+        g.links.collect()
+      } shouldBe 0
     }
   }
 

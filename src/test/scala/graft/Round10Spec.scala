@@ -229,9 +229,7 @@ class Round10Spec extends SparkSpec {
       // reimplemented verbatim here; corpus = 3000 distinct words with
       // heavy shared substructure so 800 rounds keep finding merges
       def utf8Lt(a: String, b: String): Boolean =
-        java.util.Arrays.compareUnsigned(
-          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+        graft.util.DriverLane.strings.lt(a, b)
       def applyMerge(syms: Array[String], l: String,
           r: String): Array[String] = {
         val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -442,10 +440,10 @@ class Round10Spec extends SparkSpec {
       val df = Seq[(Long, java.lang.Long)](
         (1L, 10L), (2L, 10L), (3L, 5L), (4L, 20L), (5L, null),
         (6L, 10L)).toDF("id", "v")
-      def run(thr: Int) = Stats.globalRanks(df, "v",
-          windowThreshold = thr)
-        .select("id", "rnk", "drnk").collect()
-        .map(r => (r.getLong(0),
+      def run(thr: Int) = graft.util.DriverLane.withBound(thr) {
+        Stats.globalRanks(df, "v")
+          .select("id", "rnk", "drnk").collect()
+      }.map(r => (r.getLong(0),
           if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)),
           if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))))
         .sortBy(_._1).toSeq

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Bfs
+import graft.util.DriverLane
 
 /** Round-11 hardening: the Bfs.reachable small-graph local fallback
   * (the TemporalReach/GraphxOps probe discipline, applied to the
@@ -22,15 +23,17 @@ class Round11Spec extends SparkSpec {
         ("x", "y"), ("e", "a") /* cycle back */).toDF("src", "dst")
       val starts = Seq("a", "ghost").toDF("node_id")
       val local = Bfs.reachable(edges, starts) // 7 edges < default threshold
-      val dist = Bfs.reachable(edges, starts, localEdgeThreshold = 0)
+      val dist = DriverLane.withBound(0)(Bfs.reachable(edges, starts))
       val expected = Set[(Any, Int)](
         ("a", 0), ("ghost", 0), ("b", 1), ("c", 1), ("d", 2), ("e", 3))
       asSet(local) shouldBe expected
       asSet(dist) shouldBe expected
-      // boundary: threshold exactly the distinct edge count → still local
-      asSet(Bfs.reachable(edges, starts, localEdgeThreshold = 7)) shouldBe expected
-      // threshold one below → distributed
-      asSet(Bfs.reachable(edges, starts, localEdgeThreshold = 6)) shouldBe expected
+      // boundary: bound exactly the distinct edge count → still local
+      DriverLane.withBound(7)(asSet(Bfs.reachable(edges, starts))) shouldBe
+        expected
+      // bound one below → distributed
+      DriverLane.withBound(6)(asSet(Bfs.reachable(edges, starts))) shouldBe
+        expected
     }
 
     it("maxHops cuts at the same level on both paths") {
@@ -39,8 +42,8 @@ class Round11Spec extends SparkSpec {
       val starts = Seq("n0").toDF("node_id")
       for (h <- Seq(0, 1, 3)) {
         val local = asSet(Bfs.reachable(edges, starts, maxHops = Some(h)))
-        val dist = asSet(Bfs.reachable(edges, starts, maxHops = Some(h),
-          localEdgeThreshold = 0))
+        val dist = DriverLane.withBound(0)(
+          asSet(Bfs.reachable(edges, starts, maxHops = Some(h))))
         local shouldBe (0 to h).map(i => (s"n$i": Any, i)).toSet
         dist shouldBe local
       }
@@ -55,7 +58,7 @@ class Round11Spec extends SparkSpec {
       local.schema("node_id").dataType shouldBe
         org.apache.spark.sql.types.LongType
       asSet(local) shouldBe Set((1L, 0), (2L, 1), (3L, 2))
-      asSet(Bfs.reachable(edges, starts, localEdgeThreshold = 0)) shouldBe
+      DriverLane.withBound(0)(asSet(Bfs.reachable(edges, starts))) shouldBe
         asSet(local)
       // string edges + long starts: types don't unify → distributed path,
       // Spark's join coercion as before (no rows match here, starts remain)
@@ -195,16 +198,15 @@ class Round11Spec extends SparkSpec {
       // 2 jobs observed), so pin it RELATIVELY, not absolutely.
       val windowPath = jobsDuring { PipelineOps.packSequences(docs) }
       windowPath should be >= 1
-      // Past the threshold (forced low here) the probe runs AND fails,
+      // Past the bound (forced low here) the probe runs AND fails,
       // so the two-pass scan pays its own construction jobs PLUS the
-      // now-useless probe — windowThreshold=0 removes exactly that
-      // probe cost, which is the contract callers with known-large
-      // inputs buy
+      // now-useless probe — a bound of 0 removes exactly that probe
+      // cost
       val probedTwoPass = jobsDuring {
-        PipelineOps.packSequences(docs, windowThreshold = 2)
+        DriverLane.withBound(2)(PipelineOps.packSequences(docs))
       }
       val directTwoPass = jobsDuring {
-        PipelineOps.packSequences(docs, windowThreshold = 0)
+        DriverLane.withBound(0)(PipelineOps.packSequences(docs))
       }
       probedTwoPass - directTwoPass shouldBe windowPath
       info(s"construction jobs: probe $windowPath (the window path's " +
@@ -214,20 +216,22 @@ class Round11Spec extends SparkSpec {
       // removed the same way
       val plan = Mixture.plan(docs, targetsPpm = Map("en" -> 500000L))
       val tokenExactProbed = jobsDuring {
-        Mixture.applyPlanTokenExact(docs, plan, windowThreshold = 2)
+        DriverLane.withBound(2)(Mixture.applyPlanTokenExact(docs, plan))
       }
       val tokenExactDirect = jobsDuring {
-        Mixture.applyPlanTokenExact(docs, plan, windowThreshold = 0)
+        DriverLane.withBound(0)(Mixture.applyPlanTokenExact(docs, plan))
       }
       tokenExactProbed - tokenExactDirect shouldBe windowPath
-      // both paths state the same rows (the threshold only picks the
+      // both paths state the same rows (the bound only picks the
       // physical shape)
       val a = Mixture.applyPlanTokenExact(docs, plan)
         .select("doc_id", "copy").collect().map(r => (r.getLong(0),
           r.getLong(1))).toSet
-      val b = Mixture.applyPlanTokenExact(docs, plan, windowThreshold = 0)
-        .select("doc_id", "copy").collect().map(r => (r.getLong(0),
-          r.getLong(1))).toSet
+      val b = DriverLane.withBound(0) {
+        Mixture.applyPlanTokenExact(docs, plan)
+          .select("doc_id", "copy").collect().map(r => (r.getLong(0),
+            r.getLong(1))).toSet
+      }
       a shouldBe b
     }
   }

@@ -377,9 +377,10 @@ class Round11cSpec extends SparkSpec {
       got(2L) shouldBe ((3L, 2L, 0L, 600000L, 1000000L))
       got(3L) shouldBe ((2L, 1L, 1L, 666666L, 666666L))
       got(5L) shouldBe ((0L, 1L, 3L, 0L, 0L))
-      // two-pass path (windowThreshold = 0) states the same table
-      canon(graft.pipeline.Stats.prCurve(df, "score", "gold",
-        windowThreshold = 0)) shouldBe got
+      // two-pass path (driver-lane bound 0) states the same table
+      graft.util.DriverLane.withBound(0) {
+        canon(graft.pipeline.Stats.prCurve(df, "score", "gold"))
+      } shouldBe got
       canon(graft.pipeline.Stats.prCurve(df.repartition(5), "score",
         "gold")) shouldBe got
     }
@@ -513,9 +514,10 @@ class Round11cSpec extends SparkSpec {
       auc(Seq((1L, true), (2L, false))) shouldBe 0L
       auc(Seq((1L, true), (1L, false), (1L, true))) shouldBe 500000L
       // two-pass parity
-      graft.pipeline.Stats.aucExact(df.repartition(5), "score", "gold",
-          windowThreshold = 0)
-        .collect().head.getLong(3) shouldBe got.getLong(3)
+      graft.util.DriverLane.withBound(0) {
+        graft.pipeline.Stats.aucExact(df.repartition(5), "score", "gold")
+          .collect().head.getLong(3)
+      } shouldBe got.getLong(3)
     }
 
     it("datasetCard: hand-checked per-language profile") {

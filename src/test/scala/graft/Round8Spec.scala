@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.util.DriverLane
 
 /** Round-8 hardening: gate builders must be LAZY — constructing a
   * query plan from SparkEntry.queries runs zero Spark jobs (the
@@ -89,9 +90,10 @@ class Round8Spec extends SparkSpec {
         .toDF("doc_id", "text")
       val local = graft.text.Bpe.learnMerges(docs, numMerges = 12)
         .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
-      val dist = graft.text.Bpe
-        .learnMerges(docs, numMerges = 12, localThreshold = 0)
-        .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
+      val dist = DriverLane.withBound(0) {
+        graft.text.Bpe.learnMerges(docs, numMerges = 12)
+          .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
+      }
       local shouldBe dist
       local.size should be > 4
     }
@@ -186,9 +188,10 @@ class Round8Spec extends SparkSpec {
         val local = graft.operators.GraphxOps
           .stronglyConnectedComponents(edges)
           .as[(String, String)].collect().toSet
-        val dist = graft.operators.GraphxOps
-          .stronglyConnectedComponents(edges, localEdgeThreshold = 0)
-          .as[(String, String)].collect().toSet
+        val dist = DriverLane.withBound(0) {
+          graft.operators.GraphxOps.stronglyConnectedComponents(edges)
+            .as[(String, String)].collect().toSet
+        }
         withClue(s"seed=$seed") { local shouldBe dist }
       }
     }
@@ -203,10 +206,11 @@ class Round8Spec extends SparkSpec {
         val local = graft.operators.TemporalReach
           .earliestArrival(edges, starts, maxHops = hops)
           .as[(String, Long)].collect().toSet
-        val dist = graft.operators.TemporalReach
-          .earliestArrival(edges, starts, maxHops = hops,
-            localEdgeThreshold = 0)
-          .as[(String, Long)].collect().toSet
+        val dist = DriverLane.withBound(0) {
+          graft.operators.TemporalReach
+            .earliestArrival(edges, starts, maxHops = hops)
+            .as[(String, Long)].collect().toSet
+        }
         withClue(s"seed=$seed hops=$hops") { local shouldBe dist }
       }
     }

@@ -9,15 +9,16 @@ package graft.tools
 // one fresh JVM, and appends a per-graph JSON object to an output
 // file consumed by scripts/graph_check.py (10x growth-ratio gate).
 //
-// Local fallbacks are DISABLED (localEdgeThreshold/localFallbackEdges
-// = 0) so the DISTRIBUTED iteration paths are what gets timed — the
-// same forcing the round-13 CC specs used (which found a real crash).
+// The BFS and CC driver lanes are DISABLED (DriverLane.withBound(0))
+// so the DISTRIBUTED iteration paths are what gets timed — the same
+// forcing the round-13 CC specs used (which found a real crash).
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.operators.{Bfs, Communities, Hits, HyperBall, PageRank, ShortestPaths}
+import graft.util.DriverLane
 
 object GraphProbe {
   def main(args: Array[String]): Unit = {
@@ -75,16 +76,14 @@ object GraphProbe {
         .queryExecution.toRdd.count()),
       "lpa6" -> (() => Communities.labelPropagation(e, 6)
         .queryExecution.toRdd.count()),
-      "bfs_hub" -> (() => Bfs.reachable(
+      "bfs_hub" -> (() => DriverLane.withBound(0)(Bfs.reachable(
         e.select(col("src"), col("dst")),
-        e.sparkSession.range(1).select(lit(hub).as("node_id")),
-        localEdgeThreshold = 0).count()),
+        e.sparkSession.range(1).select(lit(hub).as("node_id")))).count()),
       "sssp_hub" -> (() => ShortestPaths.sssp(
         e.selectExpr("cast(src as string) u", "cast(dst as string) v", "w"),
         hub.toString).count()),
-      "cc_star" -> (() => Dedup.clusterLabelsStar(
-        e.select(col("src").as("id1"), col("dst").as("id2")),
-        localFallbackEdges = 0L).count()))
+      "cc_star" -> (() => DriverLane.withBound(0)(Dedup.clusterLabelsStar(
+        e.select(col("src").as("id1"), col("dst").as("id2")))).count()))
     val wanted =
       if (opsArg == "all") ops
       else { val s = opsArg.split(",").toSet; ops.filter(o => s(o._1)) }

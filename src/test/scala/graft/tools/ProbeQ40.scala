@@ -26,7 +26,8 @@ object ProbeQ40 {
     }
     time("window-full")(graft.pipeline.PipelineOps.packSequences(docs).count())
     time("window-full2")(graft.pipeline.PipelineOps.packSequences(docs).count())
-    time("twopass-full")(graft.pipeline.PipelineOps.packSequences(docs, windowThreshold = 0).count())
+    time("twopass-full")(graft.util.DriverLane.withBound(0)(
+      graft.pipeline.PipelineOps.packSequences(docs)).count())
     spark.stop()
   }
 }
