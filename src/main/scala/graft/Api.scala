@@ -76,7 +76,7 @@ class Weaver(spark: SparkSession,
       else Some(visited.toSeq.toDF("node_id"))
     val inMem = Findings.fromSeq(spark, buf.toSeq)
     val findings = spillDir match {
-      case Some(d) => spark.read.parquet(d).unionByName(inMem)
+      case Some(d) => History.readParquet(spark, Seq(d)).unionByName(inMem)
       case None => inMem
     }
     Weave.snapshot(findings, policy, unifier, extra)

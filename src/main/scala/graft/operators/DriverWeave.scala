@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.model.{LinkState, SnapshotGraph}
@@ -12,17 +13,20 @@ import graft.model.{LinkState, SnapshotGraph}
   *
   * The aggregations and joins of those plans (latest finding per node,
   * boundary anti-join, [[StdUnifier]]'s latest sample per key,
-  * negation), the sample explode and the link materialization are
-  * driver loops over at most the `graft.util.DriverLane` findings
-  * bound. User `Column`s (`subId`, `postMerge`) and the pair key are
-  * Spark projections over a local frame: Spark's
-  * `ConvertToLocalRelation` folds a projection or filter over a
-  * `LocalRelation` on the driver, so they run no job and keep Spark's
-  * semantics — the pair key's `least`/`greatest` compare strings by
-  * UTF-8 bytes, not by Java's UTF-16 `compareTo`. Output schemas come
-  * from analysing the lazy plans over empty local frames, which runs
-  * no job either. Node ids are grouped by JVM equality, so the lane
-  * hands over only ids of a type `DriverLane.idType` accepts.
+  * negation), the sample explode, the swap-insensitive pair key and the
+  * link materialization are driver loops over at most the
+  * `graft.util.DriverLane` findings bound, with Spark's semantics: the
+  * pair key is `least`/`greatest` (nulls ignored, strings in UTF-8 byte
+  * order). Only user `Column`s (a `subId`, a `postMerge` other than
+  * [[StdUnifier.NoPostMerge]]) and other unifiers' own `unify` run as
+  * Spark plans, over local frames: Spark's `ConvertToLocalRelation`
+  * folds a projection or filter over a `LocalRelation` on the driver,
+  * so they run no job. The output schemas are derived from the findings
+  * schema and the id type as Spark's analysis types those plans, nested
+  * nullability included, with no plan analysed per query. Node ids are
+  * grouped by JVM equality, so the lane hands over only ids of a type
+  * `DriverLane.idType` accepts, and only findings whose schemas
+  * [[schemas]] derives.
   */
 private[graft] object DriverWeave {
 
@@ -49,17 +53,15 @@ private[graft] object DriverWeave {
     * latest finding time for negation. Ids are matched through `id`,
     * the lane's canonical form of an id value. */
   final class Nodes private[DriverWeave] (val frame: DataFrame,
-      ts: java.util.HashMap[Any, java.lang.Long], id: Any => Any) {
+      ts: java.util.HashMap[Any, java.lang.Long], val id: Any => Any) {
 
-    /** `merged`'s rows, less — with `negation` on — those an end node
-      * negates ([[Weave.negateAgainstEnds]]): the end was observed
-      * later than the sample, by a node other than the sample's
-      * subject. */
-    def negate(merged: DataFrame, negation: Boolean): Table = {
-      val all = Table(merged)
-      if (!negation) return all
+    /** `merged` less — with `negation` on — the rows an end node negates
+      * ([[Weave.negateAgainstEnds]]): the end was observed later than
+      * the sample, by a node other than the sample's subject. */
+    def negate(merged: Table, negation: Boolean): Table = {
+      if (!negation) return merged
       val Seq(lo, hi, sub, ep) = Seq("pair_lo", "pair_hi", "subject",
-        "epoch_ms").map(all.schema.fieldIndex)
+        "epoch_ms").map(merged.schema.fieldIndex)
       def negatedBy(r: Row, end: Int): Boolean =
         !r.isNullAt(end) && !r.isNullAt(ep) && !r.isNullAt(sub) && {
           val e = id(r.get(end))
@@ -67,17 +69,24 @@ private[graft] object DriverWeave {
           t != null && r.getAs[Number](ep).longValue < t &&
             id(r.get(sub)) != e
         }
-      all.copy(rows = all.rows.filterNot(r => negatedBy(r, lo) || negatedBy(r, hi)))
+      merged.copy(rows = merged.rows.filterNot(r => negatedBy(r, lo) || negatedBy(r, hi)))
     }
   }
 
+  /** The node-summary and link-sample schemas of findings of `schema`
+    * with ids of `idType`, or None when a column's type is not one the
+    * driver lane derives (see [[common]]). */
+  def schemas(schema: StructType, idType: DataType): Option[(StructType, StructType)] =
+    Try((nodeSchema(schema, idType), sampleSchema(schema))).toOption
+
   /** The snapshot of the fetched `rows` (the reachable retained
     * findings, of `schema`) plus the visited ids in `bare` that own no
-    * finding, of `idType`. */
+    * finding, given the node-summary and link-sample schemas
+    * [[schemas]] derives for them. */
   def snapshot(spark: SparkSession, rows: Seq[Row], schema: StructType,
-      bare: Seq[Any], idType: DataType, id: Any => Any,
+      bare: Seq[Any], schemas: (StructType, StructType), id: Any => Any,
       unifier: LinkUnifier): SnapshotGraph = {
-    val (nodeSchema, sampleSchema) = schemasOf(spark, schema, idType)
+    val (nodeSchema, sampleSchema) = schemas
     val Seq(si, ei, fi, ni, li) = Seq("subject", "epoch_ms", "finding_seq",
       "node_attrs", "links").map(schema.fieldIndex)
     val tz = tzOf(schema)
@@ -120,15 +129,15 @@ private[graft] object DriverWeave {
       if (l == null) Row(r.get(si), null, null, r.get(ei), null, seq, tz(r))
       else Row(r.get(si), l.get(ti), l.get(lsi), r.get(ei), l.get(lai), seq, tz(r))
     })
-    val unified = unifier.unifyOnDriver(local(spark, samples, sampleSchema), nodes)
-    SnapshotGraph(nodes.frame, linkRows(spark, unified).frame(spark))
+    val unified = unifier.unifyOnDriver(Table(samples, sampleSchema), nodes)
+    SnapshotGraph(nodes.frame, linkRows(unified).frame(spark))
   }
 
-  /** [[Weave.linkColumns]] over unified samples: unused samples drop,
+  /** [[Weave.snapshotLinks]] over unified samples: unused samples drop,
     * to_subject ones turn round, bidirectional ones are undirected. */
-  private def linkRows(spark: SparkSession, unified: Table): Table = {
-    val schema = Weave.linkColumns(local(spark, Nil, unified.schema)).schema
+  private def linkRows(unified: Table): Table = {
     val u = unified.schema
+    val schema = linkSchema(u)
     val Seq(sub, tgt, st, ep, la) = Seq("subject", "target", "link_state",
       "epoch_ms", "link_attrs").map(u.fieldIndex)
     val tz = tzOf(u)
@@ -150,14 +159,92 @@ private[graft] object DriverWeave {
       r => r.get(i)
     } else _ => null
 
-  /** Node-summary and link-sample schemas of a findings `schema` and
-    * an id type, from analysing the lazy plans over empty local frames. */
-  private def schemasOf(spark: SparkSession, schema: StructType,
-      idType: DataType): (StructType, StructType) = {
-    val findings = local(spark, Nil, schema)
-    (Weave.snapshotNodes(findings, Some(local(spark, Nil,
-        StructType(Seq(StructField("node_id", idType)))))).schema,
-      Weave.linkSamples(findings).schema)
+  private val tzType = DataType.fromDDL(graft.model.Findings.tzType)
+
+  /** The tz column of `schema`, or the null one `Findings.ensureTz`
+    * adds. */
+  private def tzField(schema: StructType): StructField =
+    if (schema.fieldNames.contains("tz")) schema("tz")
+    else StructField("tz", tzType)
+
+  /** The type a union, `least` or `when` gives columns of types `a` and
+    * `b`, for the types this lane derives: equal ones, ones that differ
+    * only in nested nullability (merged as a union merges them) and
+    * integral ones (the wider). Throws on any other pair. */
+  private def common(a: DataType, b: DataType): DataType = {
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    if (a == b) a
+    else if (integral.contains(a) && integral.contains(b))
+      integral(integral.indexOf(a).max(integral.indexOf(b)))
+    else org.apache.spark.sql.graftshim.Shim.unionLikeMerge(a, b).getOrElse(
+      throw new IllegalArgumentException(s"no common type of $a and $b"))
+  }
+
+  /** [[Weave.snapshotNodes]]' schema over findings of `schema`, with
+    * extra visited ids of `idType`: the union of the visited nodes
+    * (left-joined to their latest finding) and the boundary nodes
+    * (typed nulls). */
+  private[graft] def nodeSchema(schema: StructType, idType: DataType): StructType =
+    StructType(Seq(
+      StructField("node_id", common(common(schema("subject").dataType, idType),
+        targetField(schema).dataType)),
+      StructField("is_on_boundary", BooleanType, nullable = false),
+      StructField("epoch_ms", common(schema("epoch_ms").dataType, LongType)),
+      StructField("node_attrs", common(schema("node_attrs").dataType,
+        MapType(StringType, StringType))),
+      StructField("tz", common(tzField(schema).dataType, tzType))))
+
+  /** A link struct's field of findings of `schema`, as `l.<name>` gives
+    * it over the exploded links. */
+  private def linkField(schema: StructType, name: String): StructField = {
+    val ArrayType(link: StructType, containsNull) = schema("links").dataType
+    val f = link(name)
+    f.copy(nullable = containsNull || f.nullable)
+  }
+  private def targetField(schema: StructType) = linkField(schema, "target")
+
+  /** [[Weave.linkSamples]]' schema over findings of `schema`. */
+  private[graft] def sampleSchema(schema: StructType): StructType = {
+    val seq = schema("finding_seq")
+    StructType(Seq(schema("subject"), targetField(schema),
+      linkField(schema, "link_state"), schema("epoch_ms"),
+      linkField(schema, "link_attrs"),
+      StructField("sample_seq", common(seq.dataType, IntegerType), seq.nullable),
+      tzField(schema)))
+  }
+
+  /** [[Weave.snapshotLinks]]' schema over unified samples of schema `u`. */
+  private[graft] def linkSchema(u: StructType): StructType = {
+    val (sub, tgt) = (u("subject"), u("target"))
+    val end = common(tgt.dataType, sub.dataType)
+    StructType(Seq(
+      StructField("source_node", end, tgt.nullable || sub.nullable),
+      StructField("dest_node", end, tgt.nullable || sub.nullable),
+      StructField("is_directed", BooleanType, u("link_state").nullable),
+      u("epoch_ms"), u("link_attrs"),
+      tzField(u)))
+  }
+
+  /** `samples` plus [[StdUnifier]]'s swap-insensitive pair key,
+    * `pair_lo`/`pair_hi`, as Spark's `least`/`greatest` give it: a null
+    * end is ignored (two give null), ids compare in `DriverLane.order`
+    * of the key type, mixed integrals as longs through the lane's `id`. */
+  def withPairKey(samples: Table, id: Any => Any): Table = {
+    val s = samples.schema
+    val Seq(si, ti) = Seq("subject", "target").map(s.fieldIndex)
+    val t = common(s(si).dataType, s(ti).dataType)
+    val ord = graft.util.DriverLane.order(t)
+    val key = conform(t)
+    val nullable = s(si).nullable && s(ti).nullable
+    Table(samples.rows.map { r =>
+      val (a, b) = (key(id(r.get(si))), key(id(r.get(ti))))
+      val (lo, hi) =
+        if (a == null || b == null) { val v = if (a == null) b else a; (v, v) }
+        else if (ord.lteq(a, b)) (a, b)
+        else (b, a)
+      Row.fromSeq(r.toSeq :+ lo :+ hi)
+    }, StructType(s.fields ++ Seq(StructField("pair_lo", t, nullable),
+      StructField("pair_hi", t, nullable))))
   }
 
   /** [[LinkOps.latestPerKey]] over `t`: per `keys`, the row with the

@@ -64,11 +64,12 @@ trait LinkUnifier {
     * same frame as [[unify]]. */
   def unifyRaw(samples: DataFrame, nodes: DataFrame): DataFrame =
     unify(samples, nodes)
-  /** [[unify]] over the driver-sized lane's local `samples` frame and
-    * driver-woven `nodes`, as rows on the driver. */
-  private[graft] def unifyOnDriver(samples: DataFrame,
+  /** [[unify]] over the driver-sized lane's `samples` and driver-woven
+    * `nodes`, as rows on the driver: by default [[unify]] over their
+    * local frames, collected. */
+  private[graft] def unifyOnDriver(samples: DriverWeave.Table,
       nodes: DriverWeave.Nodes): DriverWeave.Table =
-    DriverWeave.Table(unify(samples, nodes.frame))
+    DriverWeave.Table(unify(samples.frame(nodes.frame.sparkSession), nodes.frame))
 }
 
 /** The standard unifier (`unifyStd`, Unify.hs:169-193):
@@ -85,9 +86,20 @@ trait LinkUnifier {
   * All of it is Catalyst-friendly: one hash aggregation + two broadcast
   * joins. `subId` defaults to none; pass e.g. Seq(col("link_attrs")("port"))
   * for multi-link topologies (README.md:582-591 ports example).
+  * `postMerge` runs over the winners, which still carry their key
+  * columns; the default, [[StdUnifier.NoPostMerge]], keeps them as they
+  * are.
+  *
+  * On the driver-sized `GetSnapshot` lane the whole unification is a
+  * driver loop over rows when there is no `subId` and no `postMerge`:
+  * the pair key, the latest sample per key and negation. A `subId` is
+  * a projection over the local samples frame and a `postMerge` runs
+  * over the local frame of the winners; both fold with no job. A key of
+  * a type the driver does not group on (a floating or binary `subId`)
+  * and every subclass take the default form, which runs [[unify]].
   */
 class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
-    postMerge: DataFrame => DataFrame = identity)
+    postMerge: DataFrame => DataFrame = StdUnifier.NoPostMerge)
     extends LinkUnifier {
   /** Factory used by [[unifyRaw]] to obtain a negation-free twin of THIS
     * unifier. Subclasses that override [[unify]] must override this too,
@@ -105,22 +117,26 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
       else Weave.negateAgainstEnds(merged, nodes)
     out.drop(keys: _*)
   }
-  /** The keys fold over the local samples; the latest sample per key is
-    * a driver loop, then `postMerge` runs over the local frame of the
-    * winners (a projection folds there with no job) and negation is a
-    * driver loop again. A subclass keeps the default form, which runs
-    * its own [[unify]]. */
-  override private[graft] def unifyOnDriver(samples: DataFrame,
+  override private[graft] def unifyOnDriver(samples: DriverWeave.Table,
       nodes: DriverWeave.Nodes): DriverWeave.Table = {
-    val (keyed, keys) = this.keyed(samples)
-    if (getClass != classOf[StdUnifier] ||
-        !keys.forall(k =>
-          graft.util.DriverLane.idType(keyed.schema(k).dataType).isDefined))
-      return super.unifyOnDriver(samples, nodes)
-    val winners = DriverWeave.latestPerKey(DriverWeave.Table(keyed), keys,
+    if (getClass != classOf[StdUnifier]) return super.unifyOnDriver(samples, nodes)
+    val spark = nodes.frame.sparkSession
+    val (keyed, keys) =
+      if (subId.isEmpty)
+        (DriverWeave.withPairKey(samples, nodes.id), Seq("pair_lo", "pair_hi"))
+      else {
+        val (df, keys) = this.keyed(samples.frame(spark))
+        if (!keys.forall(k =>
+            graft.util.DriverLane.idType(df.schema(k).dataType).isDefined))
+          return super.unifyOnDriver(samples, nodes)
+        (DriverWeave.Table(df), keys)
+      }
+    val winners = DriverWeave.latestPerKey(keyed, keys,
       Seq("epoch_ms", "sample_seq"))
-    nodes.negate(postMerge(winners.frame(samples.sparkSession)), negation)
-      .without(keys)
+    val merged =
+      if (postMerge eq StdUnifier.NoPostMerge) winners
+      else DriverWeave.Table(postMerge(winners.frame(spark)))
+    nodes.negate(merged, negation).without(keys)
   }
   /** `samples` plus the swap-insensitive pair key (pair_lo, pair_hi) and
     * one `__sub<i>` column per `subId` column; returns the frame and the
@@ -134,6 +150,13 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
       case (df, (n, c)) => df.withColumn(n, c)
     }, Seq("pair_lo", "pair_hi") ++ subNames)
   }
+}
+
+object StdUnifier {
+  /** The default `postMerge`: the winners as they are. The driver lane
+    * recognises it by reference and skips the local frame a `postMerge`
+    * otherwise runs over. */
+  val NoPostMerge: DataFrame => DataFrame = identity
 }
 
 /** The reference's arbitrary `mergeSamples` escape hatch
@@ -431,13 +454,9 @@ object Weave {
     * timestamps), and materialize the link states. Columns: source_node,
     * dest_node, is_directed, epoch_ms, link_attrs, tz. */
   def snapshotLinks(retained: DataFrame, nodes: DataFrame,
-      unifier: LinkUnifier): DataFrame =
-    linkColumns(unifier.unify(linkSamples(retained), nodes))
-
-  /** The link rows of unified samples: LinkState materialization and
-    * the snapshot's link columns. */
-  private[operators] def linkColumns(unified: DataFrame): DataFrame = {
-    val materialized = LinkOps.materializeLinks(unified)
+      unifier: LinkUnifier): DataFrame = {
+    val materialized = LinkOps.materializeLinks(
+      unifier.unify(linkSamples(retained), nodes))
     if (materialized.columns.contains("tz"))
       materialized.select(col("source_node"), col("dest_node"),
         col("is_directed"), col("epoch_ms"), col("link_attrs"), col("tz"))

@@ -52,9 +52,10 @@ case class Query[N](
   *    floating or binary), the retained rows are fetched once, the BFS
   *    runs on the driver (`Bfs.localHops`), and
   *    [[graft.operators.DriverWeave]] weaves the fetched rows in plain
-  *    Scala, folding its projections over local frames: no job for
-  *    [[graft.operators.StdUnifier]]. Any other unifier
-  *    ([[graft.operators.ListMergeUnifier]], a custom one), or a
+  *    Scala, folding only user columns (a `subId`, a `postMerge`) over
+  *    local frames: no job for [[graft.operators.StdUnifier]]. Any
+  *    other unifier ([[graft.operators.ListMergeUnifier]], a custom
+  *    one), or a
   *    `StdUnifier` keyed on a type the driver does not group on (a
   *    floating or binary `subId`), runs its own `unify` over the local
   *    frames and collects. The returned graph is backed by local frames:
@@ -93,8 +94,10 @@ object GetSnapshot {
   }
 
   /** The driver-sized lane: None when the retained frame or the start
-    * set exceeds the `DriverLane.findings` bound, or when the ids have
-    * no driver-lane id type (`DriverLane.idType`). Otherwise the
+    * set exceeds the `DriverLane.findings` bound, when the ids have no
+    * driver-lane id type (`DriverLane.idType`), or when the findings
+    * have column types the driver weave derives no schema for
+    * (`DriverWeave.schemas`). Otherwise the
     * distributed lane's BFS restriction, run over the fetched rows, and
     * the driver weave of the reachable ones. */
   private def driverSized(spark: SparkSession, retained: DataFrame,
@@ -107,9 +110,11 @@ object GetSnapshot {
     val ti = link.fieldIndex("target")
     val types = Seq(schema(si).dataType, link(ti).dataType,
       startsDf.schema(0).dataType)
-    // the BFS sets and the driver weave group ids by JVM equality
-    val idT = DriverLane.idType(types: _*)
-    if (idT.isEmpty) return None
+    // the BFS sets and the driver weave group ids by JVM equality, and
+    // the weave types its rows with the schemas it derives
+    val schemas = DriverLane.idType(types: _*)
+      .flatMap(DriverWeave.schemas(schema, _))
+    if (schemas.isEmpty) return None
     // Starts first: a driver-side list is a local relation, so this
     // fetch runs no job.
     val bound = DriverLane.findings
@@ -142,8 +147,8 @@ object GetSnapshot {
     val withFindings = reachable.iterator.map(r => id(r.get(si))).toSet
     // Visited nodes without in-interval findings still need a row.
     val bare = visited.asScala.iterator.filterNot(withFindings).toSeq
-    Some(DriverWeave.snapshot(spark, reachable.toSeq, schema, bare, idT.get,
-      id, query.unifier))
+    Some(DriverWeave.snapshot(spark, reachable.toSeq, schema, bare,
+      schemas.get, id, query.unifier))
   }
 
   private def distributed(retained0: DataFrame, starts0: DataFrame,

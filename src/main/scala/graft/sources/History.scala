@@ -134,7 +134,10 @@ object History {
     * Layout-aware: a z-ordered dir ([[writeZOrdered]]) has no `day=`
     * partitions — there the interval predicate alone pushes to the scan
     * and the z-sort makes the per-file epoch_ms min/max stats tight, so
-    * row-group pruning replaces partition pruning. */
+    * row-group pruning replaces partition pruning. The schema is the one
+    * `spark.read.parquet(tableDir)` infers, read from a parquet footer
+    * on the driver ([[readParquet]]), so building the read runs no
+    * Spark job. */
   def read(spark: SparkSession, tableDir: String,
       interval: Interval = Interval.whole): DataFrame = {
     val df = committedBase(spark, tableDir)
@@ -193,7 +196,7 @@ object History {
           stagingIds -- applied
         }
       }
-    if (tornIds.isEmpty) spark.read.parquet(tableDir)
+    if (tornIds.isEmpty) readParquet(spark, Seq(tableDir))
     else {
       val entries = fs.listStatus(root).toSeq
       val dayFiles = entries
@@ -206,11 +209,78 @@ object History {
         .filterNot(p => batchIdOf(p.getName).exists(tornIds.contains))
       if (keep.isEmpty)
         // only torn files exist: keep their schema, show no rows
-        spark.read.parquet(tableDir).where(lit(false))
+        readParquet(spark, Seq(tableDir)).where(lit(false))
       else
-        spark.read.option("basePath", tableDir)
-          .parquet(keep.map(_.toString): _*)
+        readParquet(spark, keep.map(_.toString), Some(tableDir))
     }
+  }
+
+  /** `spark.read.parquet(paths: _*)` (with `basePath` when given) that
+    * declares the schema Spark's inference would find instead of
+    * inferring it: inference runs one Spark job per read, the footer
+    * read here runs none. Partition discovery still adds the partition
+    * columns (`day`). When the paths hold no data file the read is left
+    * to infer, so it fails as before. */
+  private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
+    footerSchema(spark, paths).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** The data schema parquet inference gives `paths`, read from footers
+    * on the driver (`ParquetUtils.inferSchema`): it lists the leaf files
+    * a file index lists (hidden `_`/`.` names skipped, summary files
+    * kept) in path order and touches the first summary or data file,
+    * or, with `spark.sql.parquet.mergeSchema` on, every one of them,
+    * merged in that order. Footers convert through Spark's own reader
+    * and converter, configured as inference configures them. None when
+    * there is no file to touch. */
+  private def footerSchema(spark: SparkSession,
+      paths: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = spark.sessionState.conf
+    val hadoop = spark.sessionState.newHadoopConf()
+    val summaries = Set("_metadata", "_common_metadata")
+    // InMemoryFileIndex's rule for names it does not list
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")) &&
+        !summaries.exists(name.startsWith)
+    def leaves(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves(fs, _))
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoop)
+      if (fs.exists(path)) leaves(fs, fs.getFileStatus(path)) else Nil
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = files.filter(_.getPath.getName == n)
+    val data = files.filterNot(f => summaries(f.getPath.getName))
+    val touch =
+      if (conf.isParquetSchemaMergingEnabled)
+        (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++
+          named("_metadata") ++ named("_common_metadata")
+      else named("_common_metadata").headOption
+        .orElse(named("_metadata").headOption)
+        .orElse(data.headOption).toSeq
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation =
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+    touch.map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hadoop),
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(f.getPath, footer), converter)
+    }.reduceOption(org.apache.spark.sql.graftshim.Shim.mergeSchemas(
+      _, _, conf.caseSensitiveAnalysis))
   }
 
   /** True iff `name` resolves to a catalog table whose bucketing spec

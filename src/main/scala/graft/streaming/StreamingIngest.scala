@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.FoundNode
+import graft.sources.History
 
 /** Structured Streaming ingestion for the findings history table — the
   * streaming extension SURVEY §2.9 sketches (the reference is batch-only;
@@ -352,7 +353,7 @@ object StreamingIngest {
         // already marks earlier batches committed).
         recoverSwap(fs, tableDir)
         val existing =
-          if (fs.exists(cur)) spark.read.parquet(tableDir)
+          if (fs.exists(cur)) History.readParquet(spark, Seq(tableDir))
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             batch.schema)
@@ -413,7 +414,7 @@ object StreamingIngest {
         recoverSwap(fs, retainedDir)
         val cur = new org.apache.hadoop.fs.Path(retainedDir)
         val existing =
-          if (fs.exists(cur)) spark.read.parquet(retainedDir)
+          if (fs.exists(cur)) History.readParquet(spark, Seq(retainedDir))
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             batch.schema)
@@ -425,7 +426,7 @@ object StreamingIngest {
         // re-woven from the freshly-swapped stable files
         stagedSwap(merged, retainedDir)
         val stable = graft.operators.Weave.snapshot(
-          spark.read.parquet(retainedDir),
+          History.readParquet(spark, Seq(retainedDir)),
           graft.operators.PolicyAppend /* already retained */, unifier)
         stagedSwap(stable.nodes, s"$dir/nodes")
         stagedSwap(stable.links, s"$dir/links")

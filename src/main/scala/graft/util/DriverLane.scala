@@ -87,10 +87,19 @@ private[graft] object DriverLane {
 
   /** Spark's string order: UTF-8 bytes compared unsigned, as
     * `UTF8String` does. Java's `compareTo` compares UTF-16 code units,
-    * which differs on supplementary-plane characters. */
+    * which differs on supplementary-plane characters, so only strings
+    * with no surrogate compare by `compareTo` (there the two orders
+    * agree); others are encoded as `UTF8String.fromString` encodes
+    * them, a lone surrogate as `?`. */
   val strings: Ordering[String] = new Ordering[String] {
+    private def bmp(s: String): Boolean = {
+      var i = 0
+      while (i < s.length && !Character.isSurrogate(s.charAt(i))) i += 1
+      i == s.length
+    }
     override def compare(a: String, b: String): Int =
-      java.util.Arrays.compareUnsigned(
+      if (bmp(a) && bmp(b)) a.compareTo(b)
+      else java.util.Arrays.compareUnsigned(
         a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }

@@ -26,4 +26,20 @@ object Shim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** `a` merged with `b` the way parquet schema merging folds part-file
+    * schemas (`StructType.merge`). */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
+
+  /** The type a union gives two columns whose types differ only in
+    * nested nullability (`StructType.unionLikeMerge`), or None when they
+    * differ otherwise. */
+  def unionLikeMerge(a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.types.DataType] =
+    if (!org.apache.spark.sql.types.DataType.equalsIgnoreNullability(a, b)) None
+    else Some(org.apache.spark.sql.types.StructType.unionLikeMerge(a, b))
 }

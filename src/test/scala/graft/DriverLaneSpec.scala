@@ -73,6 +73,26 @@ class DriverLaneSpec extends SparkSpec {
         Seq("a", emoji, "�").sorted(DriverLane.strings)
     }
 
+    it("strings order as Spark's orderBy: supplementary characters, lone " +
+        "surrogates as '?', shared prefixes and the empty string") {
+      import spark.implicits._
+      // distinct under Spark's encoding, so its order has no ties
+      val values = Seq("", "a", "ab", "abc", "ab\uFFFD", "ab😀", "😀", "😁",
+        "\uFFFD", "a\uD800b", "a?c", "a?a", "\uDC00x", "z\uD83D", "za",
+        "\uE000", "\uD7FF")
+      // compared by index: a collected lone surrogate comes back as '?',
+      // and a failure message must print under any locale
+      values.zipWithIndex.toDF("s", "i").orderBy("s").collect()
+        .map(_.getInt(1)).toSeq shouldBe
+        values.indices.sortBy(values)(DriverLane.strings)
+      // a lone surrogate encodes as '?', as UTF8String.fromString does
+      Seq("\uD800", "?").toDF("s").distinct().count() shouldBe 1
+      DriverLane.strings.compare("\uD800", "?") shouldBe 0
+      DriverLane.strings.compare("a\uD800b", "a?c") should be < 0
+      DriverLane.strings.compare("", "a") should be < 0
+      DriverLane.strings.compare("ab", "ab") shouldBe 0
+    }
+
     it("fetch gives the rows up to the bound, None past it, and runs no " +
         "job at bound 0; fits agrees") {
       val df = spark.range(5).toDF("id")

@@ -185,4 +185,89 @@ class HistorySpec extends SparkSpec {
       plan should not include "Exchange hashpartitioning(subject"
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
+
+  describe("History.read declares the schema inference would find") {
+    import org.apache.spark.sql.functions.{col, struct, transform}
+    val tz = Some(graft.model.Tz(60, summerOnly = false, "CET"))
+    def fns(tzs: Boolean, days: String*) = Findings.fromSeq(spark,
+      days.zipWithIndex.map { case (d, i) =>
+        FoundNode(s"$i", ts(d + "T05:00"), Map("k" -> "v"),
+          Seq(FoundLink(s"${i + 1}", LinkState.ToTarget, Map.empty)), i.toLong,
+          if (tzs) tz else None)
+      })
+    def tempDir(name: String) =
+      java.nio.file.Files.createTempDirectory(name).toString + "/t"
+
+    /** `History.read(dir)` builds with no job and has the schema of a
+      * plain `spark.read.parquet(dir)`; returns the read. */
+    def sameSchema(dir: String): org.apache.spark.sql.DataFrame = {
+      var read: org.apache.spark.sql.DataFrame = null
+      jobsDuring { read = History.read(spark, dir) } shouldBe 0
+      read.schema shouldBe spark.read.parquet(dir).drop("day").schema
+      read
+    }
+
+    it("canonical, BIGINT-id and tz-less histories") {
+      val canonical = tempDir("graft_schema_canonical")
+      History.append(fns(tzs = true, "2024-01-10", "2024-01-12"), canonical)
+      sameSchema(canonical).count() shouldBe 2
+      // the partition column is still discovered, typed as inference types it
+      History.readParquet(spark, Seq(canonical)).schema shouldBe
+        spark.read.parquet(canonical).schema
+
+      val bigint = tempDir("graft_schema_bigint")
+      History.append(fns(tzs = true, "2024-01-10", "2024-01-11")
+        .withColumn("subject", col("subject").cast("long"))
+        .withColumn("links", transform(col("links"), l => struct(
+          l("target").cast("long").as("target"), l("link_state").as("link_state"),
+          l("link_attrs").as("link_attrs")))), bigint)
+      sameSchema(bigint).schema("subject").dataType shouldBe
+        org.apache.spark.sql.types.LongType
+
+      val noTz = tempDir("graft_schema_notz")
+      History.append(fns(tzs = true, "2024-01-10").drop("tz"), noTz)
+      sameSchema(noTz).columns should not contain "tz"
+    }
+
+    it("a mixed history takes the path-first file's schema, or every " +
+        "file's with mergeSchema on") {
+      val dir = tempDir("graft_schema_mixed")
+      // the tz-less batch lands in the day that sorts first
+      History.append(fns(tzs = true, "2024-01-12").drop("tz"), dir)
+      History.append(fns(tzs = true, "2024-01-13"), dir)
+      History.append(fns(tzs = true, "2024-01-10").drop("tz"), dir)
+      sameSchema(dir).columns should not contain "tz"
+      val key = "spark.sql.parquet.mergeSchema"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, "true")
+      try sameSchema(dir).columns should contain ("tz")
+      finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
+    it("a z-ordered directory and a torn epoch") {
+      val z = tempDir("graft_schema_z")
+      History.writeZOrdered(fns(tzs = true, "2024-01-10", "2024-01-11",
+        "2024-01-12"), z, numFiles = 2)
+      sameSchema(z).count() shouldBe 3
+
+      val torn = tempDir("graft_schema_torn")
+      History.appendBatch(fns(tzs = true, "2024-01-10"), torn, 0L)
+      History.appendBatch(fns(tzs = true, "2024-01-10", "2024-01-11"), torn, 1L)
+      val fs = new org.apache.hadoop.fs.Path(torn)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$torn/_applied_batches/1"),
+        false) shouldBe true
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$torn/.batch_staging_1"))
+      sameSchema(torn).count() shouldBe 1
+    }
+
+    it("a directory with no data file fails as the plain read does") {
+      val empty = java.nio.file.Files.createTempDirectory("graft_schema_empty")
+        .toString
+      val plain = intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(empty))
+      intercept[org.apache.spark.sql.AnalysisException](
+        History.read(spark, empty)).getCondition shouldBe plain.getCondition
+    }
+  }
 }

@@ -355,8 +355,11 @@ class QuerySpec extends SparkSpec {
         "in GraphMl.write, and leaves nothing persisted") {
       val dir = java.nio.file.Files.createTempDirectory("graft_lane").toString
       History.append(Findings.fromSeq(spark, intervalFns), dir)
-      val findings = History.read(spark, dir,
-        Interval(end("10", inclusive = false), IntervalEnd(None, true)))
+      var findings: DataFrame = null
+      jobsDuring {
+        findings = History.read(spark, dir,
+          Interval(end("10", inclusive = false), IntervalEnd(None, true)))
+      } shouldBe 0
       val before = spark.sparkContext.getPersistentRDDs.keySet
       var g: SnapshotGraph = null
       val snapshotJobs = jobsDuring {
@@ -403,6 +406,15 @@ class QuerySpec extends SparkSpec {
         l("link_state").as("link_state"),
         l("link_attrs").as("link_attrs"))).as("links"))
 
+    /** `history` with INT subjects and `target`-typed targets. */
+    def intHistory(seed: Int, target: String): DataFrame = history(seed).select(
+      col("subject").cast("int").as("subject"), col("epoch_ms"),
+      col("finding_seq"), col("node_attrs"),
+      transform(col("links"), l => struct(
+        l("target").cast(target).as("target"),
+        l("link_state").as("link_state"),
+        l("link_attrs").as("link_attrs"))).as("links"), col("tz"))
+
     val latestOrNull = (lo: Column, hi: Column) =>
       when(functions.size(lo) > 0 && functions.size(hi) > 0,
         ListMergeUnifier.latestOfBoth(lo, hi))
@@ -436,6 +448,80 @@ class QuerySpec extends SparkSpec {
         both(bigintHistory(2), Query(Seq(0, 3), policy = PolicyKeepN(3),
           unifier = unifier))(Encoders.scalaInt)
       }
+
+    // mixed integrals: an INT pair key matched against BIGINT starts, and
+    // a BIGINT pair key of INT subjects and BIGINT targets
+    for ((name, unifier) <- unifiers; target <- Seq("int", "bigint"))
+      it(s"agree for $name on INT subjects, ${target.toUpperCase} targets " +
+          "and BIGINT starts") {
+        bothLanes(intHistory(5, target), spark.createDataset(Seq(0L, 3L))(Encoders.scalaLong)
+          .toDF("node_id"), Query(Seq(0L, 3L), unifier = unifier))
+      }
+
+    it("the pair key is Spark's least/greatest: UTF-8 byte order, a null " +
+        "end ignored, mixed integrals as longs") {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      // U+FFFD sorts before U+1F600 in UTF-8 bytes, after it in UTF-16
+      val ids = Seq("a", "\uFFFD", "\uD83D\uDE00", "\uD83D\uDE01")
+      val fns = ids.zipWithIndex.map { case (s, i) =>
+        FoundNode(s, 10L * i, Map.empty, ids.filterNot(_ == s).map(t =>
+          FoundLink(t, LinkState.ToTarget, Map.empty)), i.toLong)
+      }
+      // a postMerge sees the key, so both lanes' rows must carry the same
+      val keys = new StdUnifier(postMerge = _.withColumn("link_attrs",
+        map(lit("lo"), col("pair_lo"), lit("hi"), col("pair_hi"))))
+      snapshot(Findings.fromSeq(spark, fns), Query(Seq("a"), unifier = keys))
+        .links.count() shouldBe 6
+      // null ends, against Spark's own least/greatest over the same rows
+      def sameKeys(t: (DataType, DataType), rows: Seq[(Any, Any)],
+          id: Any => Any) = {
+        val table = DriverWeave.Table(rows.map { case (a, b) => Row(a, b) },
+          StructType(Seq(StructField("subject", t._1), StructField("target", t._2))))
+        val expected = table.frame(spark)
+          .select(least(col("subject"), col("target")),
+            greatest(col("subject"), col("target"))).collect().toSeq
+        DriverWeave.withPairKey(table, id).rows
+          .map(r => Row(r.get(2), r.get(3))) shouldBe expected
+      }
+      sameKeys((StringType, StringType), Seq(("a", null), (null, "a"),
+        (null, null), ("\uFFFD", "\uD83D\uDE00"), ("b", "a")), identity)
+      sameKeys((IntegerType, LongType), Seq((3, 2L), (2, 3L), (null, 5L),
+        (7, null)), { case n: Number => n.longValue; case v => v })
+    }
+
+    it("derives the node, sample, pair-key and link schemas the lazy " +
+        "plans analyse to, nested nullability included") {
+      import org.apache.spark.sql.types._
+      val dir = java.nio.file.Files.createTempDirectory("graft_schemas")
+        .toString + "/t"
+      History.append(history(3), dir)
+      val frames = Seq(
+        // tz struct fields not nullable, links nullable
+        ("a local frame", history(3), StringType),
+        ("a parquet read", History.read(spark, dir), StringType),
+        ("an Overwrite-retained frame",
+          Weave.retainFindings(history(3), PolicyOverwrite), StringType),
+        ("BIGINT ids, no tz", bigintHistory(3), LongType),
+        ("INT ids, BIGINT starts", intHistory(3, "int"), LongType),
+        ("INT subjects, BIGINT targets", intHistory(3, "bigint"), LongType))
+      for ((name, f, idType) <- frames) withClue(s"$name: ") {
+        val ids = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+          StructType(Seq(StructField("node_id", idType))))
+        val nodes = Weave.snapshotNodes(f, Some(ids))
+        val samples = Weave.linkSamples(f)
+        DriverWeave.nodeSchema(f.schema, idType) shouldBe nodes.schema
+        DriverWeave.sampleSchema(f.schema) shouldBe samples.schema
+        DriverWeave.withPairKey(DriverWeave.Table(Nil, samples.schema),
+          identity).schema shouldBe samples
+          .withColumn("pair_lo", least(col("subject"), col("target")))
+          .withColumn("pair_hi", greatest(col("subject"), col("target"))).schema
+        for ((uName, u) <- unifiers) withClue(s"$uName: ") {
+          DriverWeave.linkSchema(u.unify(samples, nodes).schema) shouldBe
+            Weave.snapshotLinks(f, nodes, u).schema
+        }
+      }
+    }
 
     it("DOUBLE node ids group -0.0 with 0.0, as Spark does") {
       // -0.0 and 0.0 are one node to Spark but two boxed Doubles to the
