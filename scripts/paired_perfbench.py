@@ -4,15 +4,15 @@
     python3 scripts/paired_perfbench.py --parent HEAD~1 --seeds 2-11 \
         --workloads snapshot_query,rpl_ingest,gates --seconds 5
 
-Checks the parent ref out into a detached `git worktree` (or uses an
-existing checkout given with --parent-dir), then, seed by seed and
-workload by workload, runs `perfbench/run.py --trace 0` once in the
-parent's checkout and once in the change's (this repository's working
-tree, or --change-dir), alternating which side goes first per seed.
-Each side builds from its own sources into its own build directory.
-Every result line is kept, one JSON object per run, in --out; a run
-that fails or reports `correct: false` stays in the table as a failed
-run.
+Exports the committed files of the parent ref (default HEAD~1) with
+`git archive` into a temporary directory, which leaves the repository's
+git state untouched, and compares them with this repository's working
+tree, the change. It stops when the two do not differ. Then, seed by
+seed and workload by workload, it runs `perfbench/run.py --trace 0` once
+in each, alternating which side goes first per seed. Each side builds
+from its own sources into its own build directory. Every result line is
+kept, one JSON object per run, in --out; a run that fails or reports
+`correct: false` stays in the table as a failed run.
 
 Prints, per workload and end-to-end metric, each side's median with its
 quartiles [q1-q3], the ratio change/parent of the medians, how many pairs
@@ -27,9 +27,11 @@ what a gain is judged against.
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -118,15 +120,22 @@ def table(results, metrics, workloads):
     return "\n".join(rows)
 
 
+def export(ref):
+    """The committed files of `ref`, extracted into a new temporary dir."""
+    out = tempfile.mkdtemp(prefix="paired_parent_")
+    archive = subprocess.Popen(["git", "-C", ROOT, "archive", ref],
+                               stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", out], stdin=archive.stdout, check=True)
+    if archive.wait() != 0:
+        shutil.rmtree(out)
+        sys.exit(f"git archive {ref} failed")
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--parent", default="HEAD",
-                    help="git ref of the parent (default HEAD: the last commit "
-                         "against the working tree)")
-    ap.add_argument("--parent-dir",
-                    help="an existing checkout of the parent; no worktree is made")
-    ap.add_argument("--change-dir", default=ROOT,
-                    help="checkout of the change (default: this repository)")
+    ap.add_argument("--parent", default="HEAD~1",
+                    help="git ref of the parent (default HEAD~1)")
     ap.add_argument("--seeds", default="2-11")
     ap.add_argument("--workloads", default="snapshot_query,rpl_ingest,gates")
     ap.add_argument("--seconds", type=int, default=5)
@@ -134,14 +143,11 @@ def main():
                     help="where every run's result line is appended")
     args = ap.parse_args()
 
-    made = None
-    parent_dir = args.parent_dir
-    if parent_dir is None:
-        made = parent_dir = os.path.join(ROOT, ".paired_parent")
-        subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", "--force",
-                        parent_dir, args.parent], check=True)
+    if subprocess.run(["git", "-C", ROOT, "diff", "--quiet", args.parent]).returncode == 0:
+        sys.exit(f"the working tree does not differ from {args.parent}: nothing to compare")
+    parent_dir = export(args.parent)
     workloads = [w for w in args.workloads.split(",") if w]
-    metrics = end_to_end(args.change_dir)
+    metrics = end_to_end(ROOT)
     results = []
     try:
         with open(args.out, "a") as out:
@@ -150,7 +156,7 @@ def main():
                 for w in workloads:
                     pair = {"workload": w, "seed": seed, "first": order[0]}
                     for side in order:
-                        checkout = parent_dir if side == "parent" else args.change_dir
+                        checkout = parent_dir if side == "parent" else ROOT
                         pair[side] = run_once(checkout, w, seed, args.seconds)
                         print(f"seed {seed} {w} {side}: "
                               f"op_p50_s={value(pair[side], 'op_p50_s')} "
@@ -160,8 +166,7 @@ def main():
                     out.flush()
                     results.append(pair)
     finally:
-        if made:
-            subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", made])
+        shutil.rmtree(parent_dir)
     print(table(results, metrics, workloads))
 
 

@@ -17,16 +17,22 @@ import graft.model.{LinkState, SnapshotGraph}
   * link materialization are driver loops over at most the
   * `graft.util.DriverLane` findings bound, with Spark's semantics: the
   * pair key is `least`/`greatest` (nulls ignored, strings in UTF-8 byte
-  * order). Only user `Column`s (a `subId`, a `postMerge` other than
-  * [[StdUnifier.NoPostMerge]]) and other unifiers' own `unify` run as
-  * Spark plans, over local frames: Spark's `ConvertToLocalRelation`
-  * folds a projection or filter over a `LocalRelation` on the driver,
-  * so they run no job. The output schemas are derived from the findings
-  * schema and the id type as Spark's analysis types those plans, nested
-  * nullability included, with no plan analysed per query. Node ids are
-  * grouped by JVM equality, so the lane hands over only ids of a type
+  * order). Only user `Column`s (a `subId`, a passed `postMerge`) and
+  * other unifiers' own `unify` run as Spark plans, over local frames:
+  * Spark's `ConvertToLocalRelation` folds a projection or filter over
+  * a `LocalRelation` on the driver, so they run no job. The output
+  * schemas are derived from the findings schema and the id type as
+  * Spark's analysis types those plans, nested nullability included,
+  * with no plan analysed per query (analysing them cost a warm
+  * snapshot query about 26 ms at its median). A change to the columns
+  * of [[Weave.snapshotNodes]], [[Weave.linkSamples]] or
+  * [[Weave.snapshotLinks]] is made here too; a QuerySpec case pins the
+  * derived schemas to the analysed ones. Node ids are grouped by JVM
+  * equality, so the lane hands over only ids of a type
   * `DriverLane.idType` accepts, and only findings whose schemas
-  * [[schemas]] derives.
+  * [[schemas]] derives: findings whose `node_attrs` or `tz` type
+  * differs from the canonical one other than in nullability take the
+  * distributed lane.
   */
 private[graft] object DriverWeave {
 

@@ -87,16 +87,17 @@ trait LinkUnifier {
   * joins. `subId` defaults to none; pass e.g. Seq(col("link_attrs")("port"))
   * for multi-link topologies (README.md:582-591 ports example).
   * `postMerge` runs over the winners, which still carry their key
-  * columns; the default, [[StdUnifier.NoPostMerge]], keeps them as they
-  * are.
+  * columns; the default keeps them as they are.
   *
   * On the driver-sized `GetSnapshot` lane the whole unification is a
-  * driver loop over rows when there is no `subId` and no `postMerge`:
-  * the pair key, the latest sample per key and negation. A `subId` is
-  * a projection over the local samples frame and a `postMerge` runs
-  * over the local frame of the winners; both fold with no job. A key of
-  * a type the driver does not group on (a floating or binary `subId`)
-  * and every subclass take the default form, which runs [[unify]].
+  * driver loop over rows when there is no `subId` and `postMerge` is
+  * left at its default: the pair key, the latest sample per key and
+  * negation. A `subId` is a projection over the local samples frame
+  * and any passed `postMerge` (an identity one too: only the default
+  * skips it) runs over the local frame of the winners; both fold with
+  * no job. A key of a type the driver does not group on (a floating or
+  * binary `subId`) and every subclass take the default form, which runs
+  * [[unify]].
   */
 class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
     postMerge: DataFrame => DataFrame = StdUnifier.NoPostMerge)
@@ -156,7 +157,7 @@ object StdUnifier {
   /** The default `postMerge`: the winners as they are. The driver lane
     * recognises it by reference and skips the local frame a `postMerge`
     * otherwise runs over. */
-  val NoPostMerge: DataFrame => DataFrame = identity
+  private[graft] val NoPostMerge: DataFrame => DataFrame = identity
 }
 
 /** The reference's arbitrary `mergeSamples` escape hatch
@@ -301,7 +302,8 @@ object Weave {
 
   /** Explode retained findings into link samples (Unify.hs:68-78
     * `toLinkSamples`). sample_seq = (finding_seq, position) packed for a
-    * total deterministic order within equal timestamps. */
+    * total deterministic order within equal timestamps. Its schema is
+    * also derived by hand (`DriverWeave.sampleSchema`). */
   def linkSamples(retained: DataFrame): DataFrame =
     graft.model.Findings.ensureTz(retained)
       .select(col("subject"), col("epoch_ms"), col("finding_seq"),
@@ -319,7 +321,8 @@ object Weave {
     * its latest retained finding's ts/attrs; plus explicitly-visited
     * nodes with no findings (markAsVisited, Weaver.hs:93-96) with null
     * ts/attrs; plus boundary nodes (targets never visited) flagged
-    * is_on_boundary with null ts/attrs. */
+    * is_on_boundary with null ts/attrs. Its schema is also derived by
+    * hand (`DriverWeave.nodeSchema`). */
   def snapshotNodes(retained0: DataFrame,
       extraVisited: Option[DataFrame] = None): DataFrame = {
     val retained = graft.model.Findings.ensureTz(retained0)
@@ -452,7 +455,8 @@ object Weave {
     * into link samples, unify them against the snapshot `nodes` (the
     * [[snapshotNodes]] of the same retained frame — negation reads their
     * timestamps), and materialize the link states. Columns: source_node,
-    * dest_node, is_directed, epoch_ms, link_attrs, tz. */
+    * dest_node, is_directed, epoch_ms, link_attrs, tz. Its schema is
+    * also derived by hand (`DriverWeave.linkSchema`). */
   def snapshotLinks(retained: DataFrame, nodes: DataFrame,
       unifier: LinkUnifier): DataFrame = {
     val materialized = LinkOps.materializeLinks(

@@ -219,52 +219,53 @@ object History {
     * declares the schema Spark's inference would find instead of
     * inferring it: inference runs one Spark job per read, the footer
     * read here runs none. Partition discovery still adds the partition
-    * columns (`day`). When the paths hold no data file the read is left
-    * to infer, so it fails as before. */
+    * columns (`day`). Where [[footerSchema]] declines (no data file, a
+    * summary file, mergeSchema over many files) the read infers as
+    * before, so a directory with no data file fails as before. */
   private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
       basePath: Option[String] = None): DataFrame = {
     val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
     footerSchema(spark, paths).fold(reader)(reader.schema).parquet(paths: _*)
   }
 
-  /** The data schema parquet inference gives `paths`, read from footers
-    * on the driver (`ParquetUtils.inferSchema`): it lists the leaf files
-    * a file index lists (hidden `_`/`.` names skipped, summary files
-    * kept) in path order and touches the first summary or data file,
-    * or, with `spark.sql.parquet.mergeSchema` on, every one of them,
-    * merged in that order. Footers convert through Spark's own reader
-    * and converter, configured as inference configures them. None when
-    * there is no file to touch. */
+  /** The data schema parquet inference gives `paths`
+    * (`ParquetUtils.inferSchema`), read from footers on the driver: of
+    * the leaf files a file index lists (hidden `_`/`.` names skipped), in
+    * path order, the first, or with `spark.sql.parquet.mergeSchema` on
+    * every one, merged in that order. Footers convert through Spark's
+    * own reader and converter, configured as inference configures them.
+    * None, so that the read infers, when there is no data file, when a
+    * parquet summary file (`_metadata`, `_common_metadata`) is listed, or
+    * when mergeSchema is on and respects summaries or the files outnumber
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`: there
+    * Spark merges the footers in a parallel job, and reading them one by
+    * one here would cost more as the file count grows. */
   private def footerSchema(spark: SparkSession,
       paths: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
     import org.apache.spark.sql.execution.datasources.parquet._
     val conf = spark.sessionState.conf
     val hadoop = spark.sessionState.newHadoopConf()
-    val summaries = Set("_metadata", "_common_metadata")
-    // InMemoryFileIndex's rule for names it does not list
-    def hidden(name: String) =
-      ((name.startsWith("_") && !name.contains("=")) ||
-        name.startsWith(".") || name.endsWith("._COPYING_")) &&
-        !summaries.exists(name.startsWith)
+    def summary(name: String) =
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+    // InMemoryFileIndex's rule for the names it lists
+    def listed(name: String) = summary(name) ||
+      !((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_"))
     def leaves(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
       if (!s.isDirectory) Seq(s)
       else fs.listStatus(s.getPath).toSeq
-        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves(fs, _))
+        .filter(c => listed(c.getPath.getName)).flatMap(leaves(fs, _))
     val files = paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(hadoop)
       if (fs.exists(path)) leaves(fs, fs.getFileStatus(path)) else Nil
     }.sortBy(_.getPath.toString)
-    def named(n: String) = files.filter(_.getPath.getName == n)
-    val data = files.filterNot(f => summaries(f.getPath.getName))
-    val touch =
-      if (conf.isParquetSchemaMergingEnabled)
-        (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++
-          named("_metadata") ++ named("_common_metadata")
-      else named("_common_metadata").headOption
-        .orElse(named("_metadata").headOption)
-        .orElse(data.headOption).toSeq
+    val merge = conf.isParquetSchemaMergingEnabled
+    if (files.isEmpty || files.exists(f => summary(f.getPath.getName)) ||
+        (merge && (conf.isParquetSchemaRespectSummaries ||
+          files.size > conf.parallelPartitionDiscoveryThreshold)))
+      return None
     val converter = new ParquetToSparkSchemaConverter(
       assumeBinaryIsString = conf.isParquetBinaryAsString,
       assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
@@ -272,7 +273,7 @@ object History {
       nanosAsLong = conf.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation =
         conf.parquetReaderRespectUnknownTypeAnnotation)
-    touch.map { f =>
+    (if (merge) files else files.take(1)).map { f =>
       val footer = ParquetFooterReader.readFooter(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hadoop),
         org.apache.parquet.format.converter.ParquetMetadataConverter

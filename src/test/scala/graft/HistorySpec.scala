@@ -261,6 +261,34 @@ class HistorySpec extends SparkSpec {
       sameSchema(torn).count() shouldBe 1
     }
 
+    it("a summary file, or mergeSchema over more files than the parallel " +
+        "discovery threshold, leaves the schema to inference") {
+      val dir = tempDir("graft_schema_fallback")
+      History.append(fns(tzs = true, "2024-01-12").drop("tz"), dir)
+      History.append(fns(tzs = true, "2024-01-10"), dir)
+      def inferred() = {
+        var read: org.apache.spark.sql.DataFrame = null
+        jobsDuring { read = History.read(spark, dir) } should be > 0
+        read.schema shouldBe spark.read.parquet(dir).drop("day").schema
+      }
+      val (merge, threshold) = ("spark.sql.parquet.mergeSchema",
+        "spark.sql.sources.parallelPartitionDiscovery.threshold")
+      val old = Seq(merge, threshold).map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(merge, "true")
+      spark.conf.set(threshold, "1")
+      try inferred()
+      finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      // a summary file holding the tz-less day's schema
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val first = fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/day=*/*.parquet"))
+        .map(_.getPath).minBy(_.toString)
+      org.apache.hadoop.fs.FileUtil.copy(fs, first, fs,
+        new org.apache.hadoop.fs.Path(s"$dir/_common_metadata"), false,
+        spark.sparkContext.hadoopConfiguration)
+      inferred()
+    }
+
     it("a directory with no data file fails as the plain read does") {
       val empty = java.nio.file.Files.createTempDirectory("graft_schema_empty")
         .toString
