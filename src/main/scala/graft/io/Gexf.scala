@@ -19,7 +19,7 @@ import graft.model.SnapshotGraph
   * the reserved attributes `ts_ms` and `boundary`.
   */
 object Gexf {
-  import GraphMl.{esc, attrsOf, valueType, combineTypes}
+  import GraphMl.{esc, attrsOf, valueType, combineTypes, requireIds}
   import graft.util.DriverLane.strings
 
   private def gexfType(t: String): String = t match {
@@ -100,6 +100,8 @@ object Gexf {
   def write(graph: SnapshotGraph): String = {
     val nodes = GraphMl.selectNodes(graph).collect()
     val links = GraphMl.selectLinks(graph).collect()
+    nodes.foreach(requireIds(_, "node_id" -> 0))
+    links.foreach(requireIds(_, "source_node" -> 0, "dest_node" -> 1))
 
     val nodeKeys = nodes.flatMap(attrsOf(_, 3).keys).distinct.sorted.toSeq
     val linkKeys = links.flatMap(attrsOf(_, 4).keys).distinct.sorted.toSeq
@@ -140,6 +142,8 @@ object Gexf {
 
     val nodes = GraphMl.selectNodes(graph)
     val links = GraphMl.selectLinks(graph)
+    requireIds(nodes, "node_id")
+    requireIds(links, "source_node", "dest_node")
 
     def keyTypes(df: org.apache.spark.sql.DataFrame, attrsCol: String)
         : Seq[(String, String)] =

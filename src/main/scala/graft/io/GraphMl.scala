@@ -27,6 +27,21 @@ object GraphMl {
     case c => c.toString
   }
 
+  /** Throws an IllegalArgumentException naming the first of `cols` (name
+    * and index) that is null in `r`: node ids and link endpoints are the
+    * document's element ids. */
+  private[io] def requireIds(r: Row, cols: (String, Int)*): Unit =
+    cols.find(c => r.isNullAt(c._2)).foreach { case (name, _) =>
+      throw new IllegalArgumentException(s"$name is null (" +
+        cols.map { case (n, i) => s"$n=${r.get(i)}" }.mkString(", ") +
+        "): a node id or link endpoint must be set to be written")
+    }
+
+  /** [[requireIds]] over `df`: one job reading a row with a null id. */
+  private[io] def requireIds(df: org.apache.spark.sql.DataFrame, cols: String*): Unit =
+    df.select(cols.map(df(_)): _*).filter(cols.map(df(_).isNull).reduce(_ || _))
+      .limit(1).collect().foreach(requireIds(_, cols.zipWithIndex: _*))
+
   private val tsFmt =
     java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS")
 
@@ -204,6 +219,8 @@ object GraphMl {
   def write(graph: SnapshotGraph): String = {
     val nodes = selectNodes(graph).collect()
     val links = selectLinks(graph).collect()
+    nodes.foreach(requireIds(_, "node_id" -> 0))
+    links.foreach(requireIds(_, "source_node" -> 0, "dest_node" -> 1))
 
     val nodeKeys = nodes.flatMap(attrsOf(_, 3).keys).distinct.sorted.toSeq
     val linkKeys = links.flatMap(attrsOf(_, 4).keys).distinct.sorted.toSeq
@@ -265,6 +282,8 @@ object GraphMl {
 
     val nodes = selectNodes(graph)
     val links = selectLinks(graph)
+    requireIds(nodes, "node_id")
+    requireIds(links, "source_node", "dest_node")
 
     def keyTypes(df: org.apache.spark.sql.DataFrame, attrsCol: String)
         : Seq[(String, String)] =

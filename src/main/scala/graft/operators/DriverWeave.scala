@@ -12,27 +12,28 @@ import graft.model.{LinkState, SnapshotGraph}
   * schemas of the lazy [[Weave]] plans the distributed lane runs.
   *
   * The aggregations and joins of those plans (latest finding per node,
-  * boundary anti-join, [[StdUnifier]]'s latest sample per key,
-  * negation), the sample explode, the swap-insensitive pair key and the
-  * link materialization are driver loops over at most the
-  * `graft.util.DriverLane` findings bound, with Spark's semantics: the
-  * pair key is `least`/`greatest` (nulls ignored, strings in UTF-8 byte
-  * order). Only user `Column`s (a `subId`, a passed `postMerge`) and
-  * other unifiers' own `unify` run as Spark plans, over local frames:
-  * Spark's `ConvertToLocalRelation` folds a projection or filter over
-  * a `LocalRelation` on the driver, so they run no job. The output
+  * boundary anti-join), the sample explode and the link materialization
+  * are driver loops over at most the `graft.util.DriverLane` findings
+  * bound. [[snapshot]] picks the unification's form with one match: the
+  * plain [[StdUnifier]] (that class, no `subId`, the default
+  * `postMerge`, negation on or off) runs as driver loops too, with
+  * Spark's semantics (the pair key is `least`/`greatest`: nulls
+  * ignored, strings in UTF-8 byte order), so the weave runs no job.
+  * Every other unifier runs its own `unify` over local frames, and its
+  * aggregations and joins run jobs.
+  *
+  * Ids are grouped by JVM equality: as on every driver lane, the caller
+  * casts them to `DriverLane.idType` in the fetch projection, and
+  * [[local]] gives each integral value its column's type. The output
   * schemas are derived from the findings schema and the id type as
   * Spark's analysis types those plans, nested nullability included,
   * with no plan analysed per query (analysing them cost a warm
   * snapshot query about 26 ms at its median). A change to the columns
   * of [[Weave.snapshotNodes]], [[Weave.linkSamples]] or
   * [[Weave.snapshotLinks]] is made here too; a QuerySpec case pins the
-  * derived schemas to the analysed ones. Node ids are grouped by JVM
-  * equality, so the lane hands over only ids of a type
-  * `DriverLane.idType` accepts, and only findings whose schemas
-  * [[schemas]] derives: findings whose `node_attrs` or `tz` type
-  * differs from the canonical one other than in nullability take the
-  * distributed lane.
+  * derived schemas to the analysed ones. Findings whose `node_attrs` or
+  * `tz` type differs from the canonical one other than in nullability
+  * get no derived schemas ([[schemas]]) and take the distributed lane.
   */
 private[graft] object DriverWeave {
 
@@ -55,30 +56,6 @@ private[graft] object DriverWeave {
     def apply(df: DataFrame): Table = Table(df.collect().toSeq, df.schema)
   }
 
-  /** The driver-woven node summary: its local `frame`, and each node's
-    * latest finding time for negation. Ids are matched through `id`,
-    * the lane's canonical form of an id value. */
-  final class Nodes private[DriverWeave] (val frame: DataFrame,
-      ts: java.util.HashMap[Any, java.lang.Long], val id: Any => Any) {
-
-    /** `merged` less — with `negation` on — the rows an end node negates
-      * ([[Weave.negateAgainstEnds]]): the end was observed later than
-      * the sample, by a node other than the sample's subject. */
-    def negate(merged: Table, negation: Boolean): Table = {
-      if (!negation) return merged
-      val Seq(lo, hi, sub, ep) = Seq("pair_lo", "pair_hi", "subject",
-        "epoch_ms").map(merged.schema.fieldIndex)
-      def negatedBy(r: Row, end: Int): Boolean =
-        !r.isNullAt(end) && !r.isNullAt(ep) && !r.isNullAt(sub) && {
-          val e = id(r.get(end))
-          val t = ts.get(e)
-          t != null && r.getAs[Number](ep).longValue < t &&
-            id(r.get(sub)) != e
-        }
-      merged.copy(rows = merged.rows.filterNot(r => negatedBy(r, lo) || negatedBy(r, hi)))
-    }
-  }
-
   /** The node-summary and link-sample schemas of findings of `schema`
     * with ids of `idType`, or None when a column's type is not one the
     * driver lane derives (see [[common]]). */
@@ -86,11 +63,11 @@ private[graft] object DriverWeave {
     Try((nodeSchema(schema, idType), sampleSchema(schema))).toOption
 
   /** The snapshot of the fetched `rows` (the reachable retained
-    * findings, of `schema`) plus the visited ids in `bare` that own no
-    * finding, given the node-summary and link-sample schemas
-    * [[schemas]] derives for them. */
+    * findings, of `schema`, their ids of one JVM type) plus the visited
+    * ids in `bare` that own no finding, given the node-summary and
+    * link-sample schemas [[schemas]] derives for them. */
   def snapshot(spark: SparkSession, rows: Seq[Row], schema: StructType,
-      bare: Seq[Any], schemas: (StructType, StructType), id: Any => Any,
+      bare: Seq[Any], schemas: (StructType, StructType),
       unifier: LinkUnifier): SnapshotGraph = {
     val (nodeSchema, sampleSchema) = schemas
     val Seq(si, ei, fi, ni, li) = Seq("subject", "epoch_ms", "finding_seq",
@@ -106,55 +83,73 @@ private[graft] object DriverWeave {
     // Nodes (Weave.snapshotNodes): each subject's latest finding, the
     // bare visited ids, and the targets no visited node owns.
     val latest = new java.util.LinkedHashMap[Any, Row]()
-    keepLatest(rows.iterator, r => id(r.get(si)), Seq(ei, fi), latest)
-    val nodeId = conform(nodeSchema("node_id").dataType)
-    val nodeTs = conform(nodeSchema("epoch_ms").dataType)
+    keepLatest(rows.iterator, _.get(si), Seq(ei, fi), latest)
     val ts = new java.util.HashMap[Any, java.lang.Long]()
     val nodeRows = Seq.newBuilder[Row]
     latest.forEach { (k, r) =>
-      nodeRows += Row(nodeId(k), false, nodeTs(r.get(ei)), r.get(ni), tz(r))
+      nodeRows += Row(k, false, r.get(ei), r.get(ni), tz(r))
       if (!r.isNullAt(ei)) ts.put(k, r.getAs[Number](ei).longValue)
     }
-    bare.foreach(v => nodeRows += Row(nodeId(v), false, null, null, null))
+    bare.foreach(v => nodeRows += Row(v, false, null, null, null))
     val bareSet = bare.toSet
     val targets = new java.util.LinkedHashSet[Any]()
     rows.foreach(r => links(r).foreach(l =>
-      targets.add(if (l == null) null else id(l.get(ti)))))
+      targets.add(if (l == null) null else l.get(ti))))
     // a null target matches no visited id, as in the anti-join
     targets.forEach { t =>
       if (t == null || !(latest.containsKey(t) || bareSet(t)))
-        nodeRows += Row(nodeId(t), true, null, null, null)
+        nodeRows += Row(t, true, null, null, null)
     }
-    val nodes = new Nodes(local(spark, nodeRows.result(), nodeSchema), ts, id)
+    val nodes = local(spark, nodeRows.result(), nodeSchema)
 
     // Link samples (Weave.linkSamples): one per (finding, link position).
-    val sampleSeq = conform(sampleSchema("sample_seq").dataType)
-    val samples = rows.flatMap(r => links(r).zipWithIndex.map { case (l, pos) =>
+    val samples = Table(rows.flatMap(r => links(r).zipWithIndex.map { case (l, pos) =>
       val seq = if (r.isNullAt(fi)) null
-        else sampleSeq(r.getAs[Number](fi).longValue * 1000000L + pos)
+        else r.getAs[Number](fi).longValue * 1000000L + pos
       if (l == null) Row(r.get(si), null, null, r.get(ei), null, seq, tz(r))
       else Row(r.get(si), l.get(ti), l.get(lsi), r.get(ei), l.get(lai), seq, tz(r))
-    })
-    val unified = unifier.unifyOnDriver(Table(samples, sampleSchema), nodes)
-    SnapshotGraph(nodes.frame, linkRows(unified).frame(spark))
+    }), sampleSchema)
+    val unified = unifier match {
+      case u: StdUnifier if u.getClass == classOf[StdUnifier] &&
+          u.subId.isEmpty && (u.postMerge eq StdUnifier.NoPostMerge) =>
+        val keys = Seq("pair_lo", "pair_hi")
+        val winners = latestPerKey(withPairKey(samples), keys,
+          Seq("epoch_ms", "sample_seq"))
+        (if (u.negation) negate(winners, ts) else winners).without(keys)
+      case u => Table(u.unify(samples.frame(spark), nodes))
+    }
+    SnapshotGraph(nodes, linkRows(unified).frame(spark))
+  }
+
+  /** `merged` less the rows an end node negates
+    * ([[Weave.negateAgainstEnds]]): the end, whose latest finding time
+    * `ts` holds, was observed later than the sample, by a node other
+    * than the sample's subject. */
+  private def negate(merged: Table, ts: java.util.Map[Any, java.lang.Long]): Table = {
+    val Seq(lo, hi, sub, ep) = Seq("pair_lo", "pair_hi", "subject",
+      "epoch_ms").map(merged.schema.fieldIndex)
+    def negatedBy(r: Row, end: Int): Boolean =
+      !r.isNullAt(end) && !r.isNullAt(ep) && !r.isNullAt(sub) && {
+        val t = ts.get(r.get(end))
+        t != null && r.getAs[Number](ep).longValue < t && r.get(sub) != r.get(end)
+      }
+    merged.copy(rows = merged.rows.filterNot(r => negatedBy(r, lo) || negatedBy(r, hi)))
   }
 
   /** [[Weave.snapshotLinks]] over unified samples: unused samples drop,
     * to_subject ones turn round, bidirectional ones are undirected. */
   private def linkRows(unified: Table): Table = {
     val u = unified.schema
-    val schema = linkSchema(u)
     val Seq(sub, tgt, st, ep, la) = Seq("subject", "target", "link_state",
       "epoch_ms", "link_attrs").map(u.fieldIndex)
     val tz = tzOf(u)
-    val end = conform(schema("source_node").dataType)
     Table(unified.rows.iterator
       .filter(r => !r.isNullAt(st) && r.get(st) != LinkState.Unused)
       .map { r =>
         val back = r.get(st) == LinkState.ToSubject
-        Row(end(r.get(if (back) tgt else sub)), end(r.get(if (back) sub else tgt)),
+        Row(r.get(if (back) tgt else sub), r.get(if (back) sub else tgt),
           r.get(st) != LinkState.Bidirectional, r.get(ep), r.get(la), tz(r))
-      }.toSeq, schema)
+      }.toSeq, linkSchema(u))
   }
 
   /** A row's tz, null when `schema` has no tz column
@@ -234,16 +229,15 @@ private[graft] object DriverWeave {
   /** `samples` plus [[StdUnifier]]'s swap-insensitive pair key,
     * `pair_lo`/`pair_hi`, as Spark's `least`/`greatest` give it: a null
     * end is ignored (two give null), ids compare in `DriverLane.order`
-    * of the key type, mixed integrals as longs through the lane's `id`. */
-  def withPairKey(samples: Table, id: Any => Any): Table = {
+    * of the key type. */
+  def withPairKey(samples: Table): Table = {
     val s = samples.schema
     val Seq(si, ti) = Seq("subject", "target").map(s.fieldIndex)
     val t = common(s(si).dataType, s(ti).dataType)
     val ord = graft.util.DriverLane.order(t)
-    val key = conform(t)
     val nullable = s(si).nullable && s(ti).nullable
     Table(samples.rows.map { r =>
-      val (a, b) = (key(id(r.get(si))), key(id(r.get(ti))))
+      val (a, b) = (r.get(si), r.get(ti))
       val (lo, hi) =
         if (a == null || b == null) { val v = if (a == null) b else a; (v, v) }
         else if (ord.lteq(a, b)) (a, b)
@@ -283,22 +277,23 @@ private[graft] object DriverWeave {
     }
   }
 
-  def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
-
-  /** Values of an integral column widened by a union or coercion
-    * (mixed-integral ids) as `t`'s Java type; others pass through. */
-  private def conform(t: DataType): Any => Any = {
-    def to(f: Number => Any): Any => Any = {
-      case n: Number => f(n)
-      case v => v
-    }
-    t match {
-      case LongType => to(_.longValue)
-      case IntegerType => to(_.intValue)
-      case ShortType => to(_.shortValue)
-      case ByteType => to(_.byteValue)
-      case _ => identity
-    }
+  /** A local frame of `rows` typed by `schema`, each integral value
+    * converted to its column's type: mixed integral ids are BIGINT from
+    * the fetch on, but the lazy plans keep INT links of INT subjects and
+    * targets, and widen or narrow `epoch_ms` and `sample_seq`. */
+  def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    val to: Array[Option[Number => Any]] = schema.fields.map(_.dataType match {
+      case LongType => Some(_.longValue)
+      case IntegerType => Some(_.intValue)
+      case ShortType => Some(_.shortValue)
+      case ByteType => Some(_.byteValue)
+      case _ => None
+    })
+    val conformed = rows.map(r => Row.fromSeq(to.indices.map(i =>
+      (r.get(i), to(i)) match {
+        case (n: Number, Some(f)) => f(n)
+        case (v, _) => v
+      })))
+    spark.createDataFrame(conformed.asJava, schema)
   }
 }

@@ -15,8 +15,9 @@ import graft.model.SnapshotGraph
   * twice (node summary, link samples), both with map-side partial
   * aggregation. That holds for these lazy plans, the distributed lane.
   * The driver-sized `GetSnapshot` lane weaves the rows it has fetched
-  * with [[DriverWeave]] instead: driver loops in place of these
+  * with `DriverWeave` instead: driver loops in place of these
   * aggregations and joins, checked against these plans row for row.
+  * Nothing here depends on that lane.
   *
   * Pipeline (Weaver.hs getSnapshot', 156-168):
   *   retain (policy) → [node summary + boundary] + [explode link samples →
@@ -45,16 +46,12 @@ final case class PolicyKeepN(n: Int) extends FoundNodePolicy {
   * negation. Output must keep the same sample columns (minus any
   * strategy-internal ones).
   *
-  * A unifier has two forms. [[unify]] is the lazy plan the distributed
-  * lane runs. `unifyOnDriver` is the form the driver-sized
-  * `GetSnapshot` lane runs over its fetched rows; its default runs
-  * [[unify]] over the local frames and collects (Spark jobs, the same
-  * rows), so a custom unifier such as `Rpl.DioUnifier` or
-  * [[ListMergeUnifier]] needs nothing more. [[StdUnifier]] groups and
-  * negates in driver loops instead and runs no job, as long as every
-  * grouping key has a type whose JVM equality is Spark's grouping
-  * equality (`graft.util.DriverLane.idType`); other keys, such as a
-  * floating `subId`, take the default form. */
+  * [[unify]] is the one form: the distributed lane runs it as a lazy
+  * plan, and the driver-sized `GetSnapshot` lane runs it over local
+  * frames of its fetched rows and collects, except for the plain
+  * [[StdUnifier]], which that lane weaves in driver loops (see
+  * `DriverWeave`). A custom unifier such as `Rpl.DioUnifier` or
+  * [[ListMergeUnifier]] needs nothing more. */
 trait LinkUnifier {
   def unify(samples: DataFrame, nodes: DataFrame): DataFrame
   /** The unified samples BEFORE any negation pruning — used by
@@ -64,12 +61,6 @@ trait LinkUnifier {
     * same frame as [[unify]]. */
   def unifyRaw(samples: DataFrame, nodes: DataFrame): DataFrame =
     unify(samples, nodes)
-  /** [[unify]] over the driver-sized lane's `samples` and driver-woven
-    * `nodes`, as rows on the driver: by default [[unify]] over their
-    * local frames, collected. */
-  private[graft] def unifyOnDriver(samples: DriverWeave.Table,
-      nodes: DriverWeave.Nodes): DriverWeave.Table =
-    DriverWeave.Table(unify(samples.frame(nodes.frame.sparkSession), nodes.frame))
 }
 
 /** The standard unifier (`unifyStd`, Unify.hs:169-193):
@@ -89,18 +80,16 @@ trait LinkUnifier {
   * `postMerge` runs over the winners, which still carry their key
   * columns; the default keeps them as they are.
   *
-  * On the driver-sized `GetSnapshot` lane the whole unification is a
-  * driver loop over rows when there is no `subId` and `postMerge` is
-  * left at its default: the pair key, the latest sample per key and
-  * negation. A `subId` is a projection over the local samples frame
-  * and any passed `postMerge` (an identity one too: only the default
-  * skips it) runs over the local frame of the winners; both fold with
-  * no job. A key of a type the driver does not group on (a floating or
-  * binary `subId`) and every subclass take the default form, which runs
-  * [[unify]].
+  * On the driver-sized `GetSnapshot` lane, the plain unifier (this
+  * class itself, no `subId`, `postMerge` left at its default, negation
+  * on or off) is woven in driver loops over rows and runs no job. Every
+  * other one, a `subId`, any passed `postMerge` (an identity one too:
+  * only the default is recognised) or a subclass, runs [[unify]] over
+  * local frames there, as every other unifier does.
   */
-class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
-    postMerge: DataFrame => DataFrame = StdUnifier.NoPostMerge)
+class StdUnifier(private[graft] val subId: Seq[Column] = Nil,
+    private[graft] val negation: Boolean = true,
+    private[graft] val postMerge: DataFrame => DataFrame = StdUnifier.NoPostMerge)
     extends LinkUnifier {
   /** Factory used by [[unifyRaw]] to obtain a negation-free twin of THIS
     * unifier. Subclasses that override [[unify]] must override this too,
@@ -110,7 +99,7 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
   override def unifyRaw(samples: DataFrame, nodes: DataFrame): DataFrame =
     copyWithNegation(false).unify(samples, nodes)
   override def unify(samples: DataFrame, nodes: DataFrame): DataFrame = {
-    val (keyed, keys) = this.keyed(samples)
+    val (keyed, keys) = Weave.keyed(samples, subId)
     val merged = postMerge(LinkOps.latestPerKey(
       keyed, keys, Seq("epoch_ms", "sample_seq")))
     val out =
@@ -118,45 +107,12 @@ class StdUnifier(subId: Seq[Column] = Nil, negation: Boolean = true,
       else Weave.negateAgainstEnds(merged, nodes)
     out.drop(keys: _*)
   }
-  override private[graft] def unifyOnDriver(samples: DriverWeave.Table,
-      nodes: DriverWeave.Nodes): DriverWeave.Table = {
-    if (getClass != classOf[StdUnifier]) return super.unifyOnDriver(samples, nodes)
-    val spark = nodes.frame.sparkSession
-    val (keyed, keys) =
-      if (subId.isEmpty)
-        (DriverWeave.withPairKey(samples, nodes.id), Seq("pair_lo", "pair_hi"))
-      else {
-        val (df, keys) = this.keyed(samples.frame(spark))
-        if (!keys.forall(k =>
-            graft.util.DriverLane.idType(df.schema(k).dataType).isDefined))
-          return super.unifyOnDriver(samples, nodes)
-        (DriverWeave.Table(df), keys)
-      }
-    val winners = DriverWeave.latestPerKey(keyed, keys,
-      Seq("epoch_ms", "sample_seq"))
-    val merged =
-      if (postMerge eq StdUnifier.NoPostMerge) winners
-      else DriverWeave.Table(postMerge(winners.frame(spark)))
-    nodes.negate(merged, negation).without(keys)
-  }
-  /** `samples` plus the swap-insensitive pair key (pair_lo, pair_hi) and
-    * one `__sub<i>` column per `subId` column; returns the frame and the
-    * key names. */
-  private def keyed(samples: DataFrame): (DataFrame, Seq[String]) = {
-    val withKeys = samples
-      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
-      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
-    val subNames = subId.indices.map(i => s"__sub$i")
-    (subNames.zip(subId).foldLeft(withKeys) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }, Seq("pair_lo", "pair_hi") ++ subNames)
-  }
 }
 
 object StdUnifier {
   /** The default `postMerge`: the winners as they are. The driver lane
-    * recognises it by reference and skips the local frame a `postMerge`
-    * otherwise runs over. */
+    * recognises it by reference: only with it does a `StdUnifier` take
+    * that lane's row path. */
   private[graft] val NoPostMerge: DataFrame => DataFrame = identity
 }
 
@@ -199,13 +155,7 @@ class ListMergeUnifier(
 
   override def unify(samples: DataFrame, nodes: DataFrame): DataFrame = {
     val dataCols = samples.columns.toSeq
-    val withKeys = samples
-      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
-      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
-    val subNames = subId.indices.map(i => s"__sub$i")
-    val keyed = subNames.zip(subId).foldLeft(withKeys) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }
+    val (keyed, keys) = Weave.keyed(samples, subId)
     val payload = struct(dataCols.map(col).toIndexedSeq: _*)
     // collect_list skips nulls, so `when` without otherwise collects
     // exactly the side's samples
@@ -221,19 +171,17 @@ class ListMergeUnifier(
       transform(array_sort(c, cmp), x => x("s"))
     }
     val grouped = keyed
-      .groupBy((Seq("pair_lo", "pair_hi") ++ subNames).map(col).toIndexedSeq: _*)
+      .groupBy(keys.map(col).toIndexedSeq: _*)
       .agg(sideList(col("subject") === col("pair_lo")).as("__lo"),
         sideList(col("subject") === col("pair_hi")).as("__hi"))
       .withColumn("__m",
         merge(sortedSamples(col("__lo")), sortedSamples(col("__hi"))))
       .filter(col("__m").isNotNull)
-    val expanded = grouped.select(
-      col("pair_lo") +: col("pair_hi") +: subNames.map(col) :+
-        col("__m.*"): _*)
+    val expanded = grouped.select(keys.map(col) :+ col("__m.*"): _*)
     val out =
       if (!negation) expanded
       else Weave.negateAgainstEnds(expanded, nodes)
-    out.drop((Seq("pair_lo", "pair_hi") ++ subNames): _*)
+    out.drop(keys: _*)
   }
 }
 
@@ -258,6 +206,20 @@ object ListMergeUnifier {
 }
 
 object Weave {
+
+  /** `samples` plus the unifiers' grouping key: the swap-insensitive
+    * pair key (pair_lo, pair_hi) and one `__sub<i>` column per `subId`
+    * column. Returns the frame and the key names. */
+  private[operators] def keyed(samples: DataFrame,
+      subId: Seq[Column]): (DataFrame, Seq[String]) = {
+    val withKeys = samples
+      .withColumn("pair_lo", LinkOps.pairLo(col("subject"), col("target")))
+      .withColumn("pair_hi", LinkOps.pairHi(col("subject"), col("target")))
+    val subNames = subId.indices.map(i => s"__sub$i")
+    (subNames.zip(subId).foldLeft(withKeys) {
+      case (df, (n, c)) => df.withColumn(n, c)
+    }, Seq("pair_lo", "pair_hi") ++ subNames)
+  }
 
   /** defNegatesLinkSample (Unify.hs:202-217) applied to a unified frame
     * that still carries its pair_lo/pair_hi key columns: drop a merged

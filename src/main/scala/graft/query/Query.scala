@@ -49,19 +49,15 @@ case class Query[N](
   *    [[graft.util.DriverLane]] findings bound (one bounded
   *    `limit(n+1).collect()` fetch each) and the start, subject and
   *    target ids have a driver-lane id type (`DriverLane.idType`: not
-  *    floating or binary), the retained rows are fetched once, the BFS
-  *    runs on the driver (`Bfs.localHops`), and
+  *    floating or binary), the retained rows are fetched once, their
+  *    ids cast to that type in the fetch projection as on every driver
+  *    lane, the BFS runs on the driver (`Bfs.localHops`), and
   *    [[graft.operators.DriverWeave]] weaves the fetched rows in plain
-  *    Scala, folding only user columns (a `subId`, a `postMerge`) over
-  *    local frames: no job for [[graft.operators.StdUnifier]]. Any
-  *    other unifier ([[graft.operators.ListMergeUnifier]], a custom
-  *    one), or a
-  *    `StdUnifier` keyed on a type the driver does not group on (a
-  *    floating or binary `subId`), runs its own `unify` over the local
-  *    frames and collects. The returned graph is backed by local frames:
-  *    reading it (GraphML, JSON) launches no job, and nothing stays
-  *    persisted. A query at that size is bound by per-job overhead, not
-  *    data: with `StdUnifier` the fetch is its only job.
+  *    Scala. With the plain [[graft.operators.StdUnifier]] (no `subId`,
+  *    the default `postMerge`) the fetch is the query's only job; any
+  *    other unifier runs its own `unify` over local frames and collects.
+  *    The returned graph is backed by local frames: reading it (GraphML,
+  *    JSON) launches no job, and nothing stays persisted.
   *  - distributed: past the bound (or with ids of no driver-lane type)
   *    the retained frame is cut lazily (`Checkpoints.cut`),
   *    `Bfs.reachable` restricts it, and the lazy
@@ -112,43 +108,47 @@ object GetSnapshot {
       startsDf.schema(0).dataType)
     // the BFS sets and the driver weave group ids by JVM equality, and
     // the weave types its rows with the schemas it derives
-    val schemas = DriverLane.idType(types: _*)
-      .flatMap(DriverWeave.schemas(schema, _))
+    val idType = DriverLane.idType(types: _*)
+    val schemas = idType.flatMap(DriverWeave.schemas(schema, _))
     if (schemas.isEmpty) return None
+    // ids of mixed types are cast to one in the fetch projection, as on
+    // every driver lane; `withField` keeps a null link null
+    val (retainedC, startsC) =
+      if (types.distinct.size == 1) (retained, startsDf)
+      else {
+        val t = idType.get
+        (retained.withColumn("subject", col("subject").cast(t))
+          .withColumn("links", transform(col("links"),
+            l => l.withField("target", l("target").cast(t)))),
+          startsDf.select(col("node_id").cast(t)))
+      }
     // Starts first: a driver-side list is a local relation, so this
     // fetch runs no job.
     val bound = DriverLane.findings
-    val fetched = for (s <- DriverLane.fetch(startsDf, bound);
-        r <- DriverLane.fetch(retained, bound)) yield (s, r)
+    val fetched = for (s <- DriverLane.fetch(startsC, bound);
+        r <- DriverLane.fetch(retainedC, bound)) yield (s, r)
     if (fetched.isEmpty) return None
     val (startRows, rows) = fetched.get
 
-    // Ids match by boxed equality: mixed integrals, unified to BIGINT by
-    // DriverLane.idType, are compared as longs.
-    val id: Any => Any =
-      if (types.distinct.size == 1) identity
-      else { case n: Number => n.longValue; case v => v }
     def targets(r: Row): Iterator[Any] =
       if (r.isNullAt(li)) Iterator.empty
-      else r.getSeq[Row](li).iterator
-        .map(l => if (l == null) null else id(l.get(ti)))
+      else r.getSeq[Row](li).iterator.map(l => if (l == null) null else l.get(ti))
     // Known nodes: anything present as subject or target. A start that
     // is absent contributes nothing (missing start ⇒ empty graph,
     // SnapshotTestCase.hs:811-821).
     val known = new java.util.HashSet[Any]()
-    rows.foreach { r => known.add(id(r.get(si))); targets(r).foreach(known.add) }
-    val starts = startRows.iterator.map(r => id(r.get(0)))
+    rows.foreach { r => known.add(r.get(si)); targets(r).foreach(known.add) }
+    val starts = startRows.iterator.map(_.get(0))
       .filter(s => s != null && known.contains(s)).toSeq
     val visited = Bfs.localHops(
-      rows.iterator.flatMap { r => val s = id(r.get(si)); targets(r).map(s -> _) },
+      rows.iterator.flatMap { r => val s = r.get(si); targets(r).map(s -> _) },
       starts, query.maxHops).keySet
-    val reachable = rows.filter(r =>
-      !r.isNullAt(si) && visited.contains(id(r.get(si))))
-    val withFindings = reachable.iterator.map(r => id(r.get(si))).toSet
+    val reachable = rows.filter(r => !r.isNullAt(si) && visited.contains(r.get(si)))
+    val withFindings = reachable.iterator.map(_.get(si)).toSet
     // Visited nodes without in-interval findings still need a row.
     val bare = visited.asScala.iterator.filterNot(withFindings).toSeq
     Some(DriverWeave.snapshot(spark, reachable.toSeq, schema, bare,
-      schemas.get, id, query.unifier))
+      schemas.get, query.unifier))
   }
 
   private def distributed(retained0: DataFrame, starts0: DataFrame,

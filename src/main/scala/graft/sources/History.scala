@@ -308,7 +308,7 @@ object History {
     * interval read opens at least N files per partition —
     * the classic small-file tax (driver listing + per-file open cost
     * dominate the actual scan at 100 TB). Rewrites each day partition
-    * into `filesPerDay` files via a staging directory + atomic-ish
+    * into one file via a staging directory + atomic-ish
     * swap: write staged, move old out, move staged in, delete old —
     * readers never see a partially-compacted partition directory.
     * Content is unchanged (byte-for-byte row multiset).
@@ -350,7 +350,7 @@ object History {
     * interleave plus the crash/late-file states and asserts
     * byte-identical query results and surviving partition pruning. */
   def compact(spark: SparkSession, tableDir: String,
-      filesPerDay: Int = 1, beforeDay: Option[String] = None): Unit = {
+      beforeDay: Option[String] = None): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(tableDir)
     val fs = root.getFileSystem(conf)
@@ -390,7 +390,7 @@ object History {
         val staged = new org.apache.hadoop.fs.Path(
           root, s".compact_staging_${dayPath.getName}")
         spark.read.parquet(snapshot.map(_.toString): _*)
-          .repartition(filesPerDay)
+          .repartition(1)
           .write.mode(SaveMode.Overwrite).parquet(staged.toString)
         val old = new org.apache.hadoop.fs.Path(
           root, s".compact_old_${dayPath.getName}")

@@ -343,26 +343,32 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val cur = new org.apache.hadoop.fs.Path(tableDir)
-        val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // crash recovery: a driver death between rename(cur, old) and
-        // rename(staging, cur) leaves only the .old dir — without this
-        // restore the next batch would read EMPTY existing state and
-        // silently rebuild the view from one batch (the checkpoint
-        // already marks earlier batches committed).
-        recoverSwap(fs, tableDir)
-        val existing =
-          if (fs.exists(cur)) History.readParquet(spark, Seq(tableDir))
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.schema)
-        val merged = graft.operators.Weave.retainFindings(
-          existing.unionByName(batch, allowMissingColumns = true),
-          graft.operators.PolicyOverwrite)
-        stagedSwap(merged, tableDir)
+        foldLatest(batch, tableDir)
       }
       .start()
+
+  /** Folds `batch` into the latest-finding-per-node table at `dir`
+    * (Overwrite retention over existing ∪ batch) and swaps it in. */
+  private def foldLatest(batch: DataFrame, dir: String): Unit = {
+    val spark = batch.sparkSession
+    val cur = new org.apache.hadoop.fs.Path(dir)
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // crash recovery: a driver death between rename(cur, old) and
+    // rename(staging, cur) leaves only the .old dir — without this
+    // restore the next batch would read EMPTY existing state and
+    // silently rebuild the view from one batch (the checkpoint
+    // already marks earlier batches committed).
+    recoverSwap(fs, dir)
+    val existing =
+      if (fs.exists(cur)) History.readParquet(spark, Seq(dir))
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        batch.schema)
+    // the staging write reads the old files before any rename
+    stagedSwap(graft.operators.Weave.retainFindings(
+      existing.unionByName(batch, allowMissingColumns = true),
+      graft.operators.PolicyOverwrite), dir)
+  }
 
   /** Swap-dir discipline shared by the materialized views: recover a
     * table stranded between the two renames of a previous crash, then
@@ -409,22 +415,8 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val retainedDir = s"$dir/retained"
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        recoverSwap(fs, retainedDir)
-        val cur = new org.apache.hadoop.fs.Path(retainedDir)
-        val existing =
-          if (fs.exists(cur)) History.readParquet(spark, Seq(retainedDir))
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.schema)
-        val merged = graft.operators.Weave.retainFindings(
-          existing.unionByName(batch, allowMissingColumns = true),
-          graft.operators.PolicyOverwrite)
-        // the staging write reads the OLD files before any rename, so
-        // deriving merged from `existing` is safe; the snapshot is then
-        // re-woven from the freshly-swapped stable files
-        stagedSwap(merged, retainedDir)
+        foldLatest(batch, retainedDir)
+        // the snapshot is re-woven from the freshly-swapped stable files
         val stable = graft.operators.Weave.snapshot(
           History.readParquet(spark, Seq(retainedDir)),
           graft.operators.PolicyAppend /* already retained */, unifier)

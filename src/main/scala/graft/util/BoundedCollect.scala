@@ -31,11 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
   * hash-aggregate plan — value-identical, spec-pinned — is kept while
   * the input's Catalyst-estimated size (`stats.sizeInBytes`, the same
   * statistic broadcast decisions trust; even a count-probe JOB per call
-  * was measurable on hot gates) stays within `maxHashBytes`: a batch
+  * was measurable on hot gates) stays within [[MaxHashBytes]]: a batch
   * that small is bounded by its own size under any task split, orders
-  * of magnitude inside executor memory. Pass `maxHashBytes = 0` to
-  * force streaming, negative to force the hash plan. No probe job runs
-  * in any mode.
+  * of magnitude inside executor memory. No probe job runs.
   *
   * Semantics (both paths, bit-identical): payloads gathered per key
   * group, ordered by (orderCols…, payload) ascending — exactly
@@ -45,31 +43,41 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
   */
 object BoundedCollect {
 
+  /** Largest Catalyst-estimated input, in bytes, that keeps the hash
+    * plan. */
+  private val MaxHashBytes: Long = 256L << 20
+
   /** Gather `payloadCol` per `keyCols` group, ordered by `orderCols`
     * then the payload itself, ascending (nulls first, matching both
     * sort_array and SQL ASC), as an array column `outCol`. Output
     * columns: keyCols :+ outCol. */
   def sortedGather(df: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], payloadCol: String,
-      outCol: String, maxHashBytes: Long = 256L << 20): DataFrame = {
-    require(keyCols.nonEmpty && !keyCols.contains(outCol),
-      s"outCol $outCol must not collide with key columns $keyCols")
-    val spark = df.sparkSession
-    val proj = df.select((keyCols ++ orderCols :+ payloadCol).map(col): _*)
-    val useHash =
-      if (maxHashBytes < 0) true
-      else if (maxHashBytes == 0) false
-      else proj.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        maxHashBytes
-    if (useHash) {
-      // payload aliased: it may ALSO be an order column (the shingle
-      // gather orders by the payload itself), which would make the
-      // struct field reference ambiguous
-      val sorted = sort_array(collect_list(
-        struct(orderCols.map(col) :+ col(payloadCol).as("__p"): _*)))
-      return proj.groupBy(keyCols.map(col): _*)
-        .agg(transform(sorted, x => x("__p")).as(outCol))
-    }
+      outCol: String): DataFrame = {
+    val size = projection(df, keyCols, orderCols, payloadCol, outCol)
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    if (size <= MaxHashBytes)
+      hashGather(df, keyCols, orderCols, payloadCol, outCol)
+    else streamingGather(df, keyCols, orderCols, payloadCol, outCol)
+  }
+
+  /** [[sortedGather]] by the hash plan, whatever the input size. */
+  private[graft] def hashGather(df: DataFrame, keyCols: Seq[String],
+      orderCols: Seq[String], payloadCol: String, outCol: String): DataFrame = {
+    val proj = projection(df, keyCols, orderCols, payloadCol, outCol)
+    // payload aliased: it may ALSO be an order column (the shingle
+    // gather orders by the payload itself), which would make the
+    // struct field reference ambiguous
+    val sorted = sort_array(collect_list(
+      struct(orderCols.map(col) :+ col(payloadCol).as("__p"): _*)))
+    proj.groupBy(keyCols.map(col): _*)
+      .agg(transform(sorted, x => x("__p")).as(outCol))
+  }
+
+  /** [[sortedGather]] by the streaming plan, whatever the input size. */
+  private[graft] def streamingGather(df: DataFrame, keyCols: Seq[String],
+      orderCols: Seq[String], payloadCol: String, outCol: String): DataFrame = {
+    val proj = projection(df, keyCols, orderCols, payloadCol, outCol)
     val schema = proj.schema
     val nk = keyCols.length
     val payloadIdx = schema.length - 1
@@ -96,6 +104,14 @@ object BoundedCollect {
         }
       }
     }
-    spark.createDataFrame(gathered, outSchema)
+    df.sparkSession.createDataFrame(gathered, outSchema)
+  }
+
+  /** The gather's input columns, keys first and the payload last. */
+  private def projection(df: DataFrame, keyCols: Seq[String],
+      orderCols: Seq[String], payloadCol: String, outCol: String): DataFrame = {
+    require(keyCols.nonEmpty && !keyCols.contains(outCol),
+      s"outCol $outCol must not collide with key columns $keyCols")
+    df.select((keyCols ++ orderCols :+ payloadCol).map(col): _*)
   }
 }

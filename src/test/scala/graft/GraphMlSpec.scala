@@ -245,4 +245,34 @@ class GraphMlSpec extends SparkSpec {
     got should include("attr.name=\"rank\" attr.type=\"long\"")
     got should include("attr.name=\"name\" attr.type=\"string\"")
   }
+  describe("a null node id or link endpoint") {
+    /** A graph whose node `b` has a null id, or — with `nullEnd` — whose
+      * ids are all set and one link has a null dest. */
+    def graph(nullEnd: Boolean) = {
+      val ids = if (nullEnd) Seq("a", "b") else Seq("a", null)
+      val nodes = spark.createDataFrame(ids.map(id =>
+          (id, false, Some(1L), Some(Map.empty[String, String]))))
+        .toDF("node_id", "is_on_boundary", "epoch_ms", "node_attrs")
+      val links = spark.createDataFrame(Seq(
+          ("a", if (nullEnd) null else "b", true, 1L, Map.empty[String, String])))
+        .toDF("source_node", "dest_node", "is_directed", "epoch_ms", "link_attrs")
+      SnapshotGraph(nodes, links)
+    }
+    val writers: Seq[(String, SnapshotGraph => Unit)] = Seq(
+      "GraphMl.write" -> (g => GraphMl.write(g)),
+      "GraphMl.writeDistributed" -> (g => GraphMl.writeDistributed(g,
+        java.nio.file.Files.createTempDirectory("graphml_null").toString)),
+      "Gexf.write" -> (g => graft.io.Gexf.write(g)),
+      "Gexf.writeDistributed" -> (g => graft.io.Gexf.writeDistributed(g,
+        java.nio.file.Files.createTempDirectory("gexf_null").toString)))
+    for ((name, write) <- writers)
+      it(s"is rejected by $name with an error naming the column") {
+        the[IllegalArgumentException] thrownBy write(graph(nullEnd = false)) should
+          have message ("node_id is null (node_id=null): a node id or " +
+            "link endpoint must be set to be written")
+        the[IllegalArgumentException] thrownBy write(graph(nullEnd = true)) should
+          have message ("dest_node is null (source_node=a, dest_node=null): " +
+            "a node id or link endpoint must be set to be written")
+      }
+  }
 }

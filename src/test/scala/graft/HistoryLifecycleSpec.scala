@@ -21,7 +21,7 @@ import graft.time.{Interval, IntervalEnd}
   *  3. start a LIVE streaming appendToHistory writer on day 4;
   *  4. compact(beforeDay = day4) WHILE the stream is running;
   *  5. stream another batch after the compact;
-  *  6. assert: closed days hold exactly filesPerDay files, the
+  *  6. assert: closed days hold exactly one file, the
   *     baseline answers are byte-identical, the streamed rows are all
   *     present, and interval reads still PARTITION-PRUNE (inputFiles
   *     confined to the matching day dirs);
@@ -99,8 +99,7 @@ class HistoryLifecycleSpec extends SparkSpec {
       q.processAllAvailable()
 
       // 4. compact CLOSED days only, stream still running
-      History.compact(spark, dir, filesPerDay = 1,
-        beforeDay = Some("2024-03-04"))
+      History.compact(spark, dir, beforeDay = Some("2024-03-04"))
 
       // 5. more stream data after the compact
       input.addData(fn("d", d4 + 1000, 31))
@@ -136,8 +135,7 @@ class HistoryLifecycleSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(dir, "day=2024-03-01"),
       new org.apache.hadoop.fs.Path(dir, ".compact_old_day=2024-03-01"))
-    History.compact(spark, dir, filesPerDay = 1,
-      beforeDay = Some("2024-03-04"))
+    History.compact(spark, dir, beforeDay = Some("2024-03-04"))
     filesIn(dir, "2024-03-01").size shouldBe 1
     answers(dir) shouldBe baseline
   }
@@ -186,8 +184,7 @@ class HistoryLifecycleSpec extends SparkSpec {
     val epoch2 = model.Findings.fromSeq(spark, Seq(fn("d", d1 + 950, 3)))
     History.appendBatch(epoch2, dir, 2L)
     fs.delete(p("_applied_batches/2"), false) shouldBe true
-    History.compact(spark, dir, filesPerDay = 1,
-      beforeDay = Some("2024-03-04"))
+    History.compact(spark, dir, beforeDay = Some("2024-03-04"))
     // the unapplied epoch's file survives as a LOOSE batch-tagged file
     filesIn(dir, "2024-03-01")
       .count(_.startsWith("b2-")) shouldBe 1
@@ -269,7 +266,7 @@ class HistoryLifecycleSpec extends SparkSpec {
     for (seq <- 0 to 1)
       History.append(model.Findings.fromSeq(spark, Seq(
         fn("b", d2 + seq, 10 + seq, Some("c")))), dir)
-    History.compact(spark, dir, filesPerDay = 1)
+    History.compact(spark, dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
@@ -292,7 +289,7 @@ class HistoryLifecycleSpec extends SparkSpec {
     fs.rename(new org.apache.hadoop.fs.Path(s"$root/late/day=$day/$lateFile"),
       p(s".compact_old_day=$day/$lateFile"))
 
-    History.compact(spark, dir, filesPerDay = 1)
+    History.compact(spark, dir)
     fs.exists(p(s".compact_old_day=$day")) shouldBe false
     val subjects = History.read(spark, dir)
       .select(col("subject")).collect().map(_.getString(0)).toSeq.sorted
@@ -303,7 +300,7 @@ class HistoryLifecycleSpec extends SparkSpec {
     fs.rename(p(s"day=$day"), p(s".compact_old_day=$day"))
     History.append(model.Findings.fromSeq(spark, Seq(
       fn("later", d2 + 1500, 100))), dir)
-    History.compact(spark, dir, filesPerDay = 1)
+    History.compact(spark, dir)
     fs.exists(p(s".compact_old_day=$day")) shouldBe false
     History.read(spark, dir).select(col("subject"))
       .collect().map(_.getString(0)).toSeq.sorted shouldBe

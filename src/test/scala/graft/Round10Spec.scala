@@ -317,12 +317,13 @@ class Round10Spec extends SparkSpec {
       val df = spark.createDataset(
           new scala.util.Random(42).shuffle(rows.toList))
         .toDF("id", "freq", "shingle").repartition(7)
-      def run(threshold: Long) = BoundedCollect.sortedGather(df, Seq("id"),
-          Seq("freq", "shingle"), "shingle", "shingles", threshold)
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      val streaming = run(0)
-      val hash = run(-1)
-      val adaptive = run(256L << 20)
+      def run(gather: (org.apache.spark.sql.DataFrame, Seq[String],
+          Seq[String], String, String) => org.apache.spark.sql.DataFrame) =
+        gather(df, Seq("id"), Seq("freq", "shingle"), "shingle", "shingles")
+          .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      val streaming = run(BoundedCollect.streamingGather)
+      val hash = run(BoundedCollect.hashGather)
+      val adaptive = run(BoundedCollect.sortedGather)
       val want = df.groupBy(col("id"))
         .agg(sort_array(collect_list(struct(col("freq"), col("shingle"))))
           .as("ranked"))
@@ -340,8 +341,8 @@ class Round10Spec extends SparkSpec {
       val df = (0L until 10L).flatMap(id =>
           (0 until 100).map(p => (id, p.toLong, s"line$p")))
         .toDF("id", "pos", "line")
-      val gathered = BoundedCollect.sortedGather(df, Seq("id"),
-        Seq("pos"), "line", "lines", maxHashBytes = 0)
+      val gathered = BoundedCollect.streamingGather(df, Seq("id"),
+        Seq("pos"), "line", "lines")
       gathered.queryExecution.executedPlan.toString should not include
         "ObjectHashAggregate"
       // the buffer-bounding shape sits in the RDD lineage behind the
